@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -63,4 +64,39 @@ object ParquetFooters {
     }
     Some((lo, hi))
   }
+
+  /** The data schema a Spark writer stamped into the footer of the first
+    * data file under `dir` (recursive): the Spark row metadata entry,
+    * which is what Spark's own schema inference reads (from one file,
+    * schema merging being off). Partition columns live in the directory
+    * names, not in the files, so they are not part of it. Passing this
+    * schema to the reader skips the inference job.
+    *
+    * None when `dir` holds no data file or the file carries no Spark
+    * schema; the caller then lets Spark infer (and fail loudly on a
+    * directory without data).
+    */
+  def sparkSchema(spark: SparkSession, dir: String): Option[StructType] = {
+    val p = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return None
+    val it = fs.listFiles(p, true)
+    while (it.hasNext) {
+      val f = it.next().getPath
+      val name = f.getName
+      if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")) {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+          .get(SparkRowMetadataKey)
+        finally reader.close()
+        return Option(json).flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+          .collect { case s: StructType => s }
+      }
+    }
+    None
+  }
+
+  /** Footer key under which Spark's parquet writer records the row schema. */
+  private val SparkRowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 }

@@ -111,10 +111,15 @@ object Chat {
       require(lambdaMult >= 0.0 && lambdaMult <= 1.0, "lambda_mult in [0,1] (schema.py:181)")
     }
     /** Hybrid retrieval: a vector leg and a BM25 lexical leg, each top
-      * `fetchKPerLeg`, fused by reciprocal rank ([[Keyword.rrfFuse]],
-      * constant `c`) — the production retrieval shape the reference's
-      * vector-only dispatch lacks. `terms` derives the lexical leg's
-      * term set from the REWRITTEN query (default: case-preserved
+      * `fetchKPerLeg`, fused by reciprocal rank (constant `c`) — the
+      * production retrieval shape the reference's vector-only dispatch
+      * lacks. The per-question path ([[answer]]) collects the two
+      * bounded legs and fuses them on the driver
+      * ([[Keyword.rrfFuseRanked]]), taking text from the vector leg's
+      * rows and reading the store only for ids the lexical leg alone
+      * found; the batch path ([[answerBatch]]) fuses every question in
+      * one plan. `terms` derives the lexical leg's term set from the
+      * REWRITTEN query (default: case-preserved
       * whitespace tokens — see [[Hybrid.whitespaceTerms]]); a
       * question yielding no terms degrades to the vector leg
       * alone. Without `lexicalIndexPath` the lexical leg scans the
@@ -309,36 +314,38 @@ object Chat {
             topK, lm)
           .map { case (id, _, _) => (id, textOf(id)) }
       case SearchType.Hybrid(termsOf, c, fetchK, lexIdx) =>
-        // metric-aware leg ranking: EUCLIDEAN is a distance (ascending =
-        // best); score.desc would hand rank 1 to the FARTHEST fetched row
-        // and diverge from the batch path's boundedRank ordering
-        val vecOrd =
-          if (metric == "EUCLIDEAN_DISTANCE") col("score").asc else col("score").desc
-        val vec = fetch(fetchK, metric)
-          .withColumn("rank", row_number().over(Window.partitionBy(lit(1)).orderBy(vecOrd, col(idCol))))
-          .select(col(idCol), col("rank"))
+        // (id, (id as string, text)) rows, in the order they come back
+        def withText(df: DataFrame): Array[(Any, (String, String))] =
+          df.select(col(idCol), col(idCol).cast("string").as("__sid"), col(textCol)).collect()
+            .map(r => r.get(0) -> (r.getString(1), r.getString(2)))
+        // both legs come back in rank order: knn sorts by the metric (a
+        // EUCLIDEAN distance ascending, nearest first) then by its first
+        // column, the id; the BM25 legs by rounded score desc, then id
+        val vec = withText(fetch(fetchK, metric))
         val terms = termsOf(q)
-        val legs =
-          if (terms.isEmpty) Seq(vec)
-          else {
-            val ranked = lexIdx match {
-              // maintained index: no corpus touch, staleness-guarded
-              // against the store table when the caller names it
-              case Some(idx) => Keyword.bm25Indexed(spark, idx, terms,
-                topK = fetchK, idName = idCol, store = indexStorePath)
-              case None => Keyword.bm25(store.select(col(idCol), col(textCol)),
-                idCol, textCol, terms, topK = fetchK)
-            }
-            Seq(vec, ranked
-              .withColumn("rank",
-                row_number().over(Window.partitionBy(lit(1)).orderBy(col("bm25").desc, col(idCol))))
-              .select(col(idCol), col("rank")))
-          }
-        Keyword.rrfFuse(legs, idCol, "rank", c, topK)
-          .join(store.select(col(idCol), col(textCol)), Seq(idCol))
-          .orderBy(col("rrf_micros").desc, col(idCol))
-          .select(col(idCol).cast("string"), col(textCol)).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
+        val lex =
+          if (terms.isEmpty) Array.empty[Any]
+          else (lexIdx match {
+            // maintained index: no corpus touch, staleness-guarded
+            // against the store table when the caller names it
+            case Some(idx) => Keyword.bm25Indexed(spark, idx, terms,
+              topK = fetchK, idName = idCol, store = indexStorePath)
+            case None => Keyword.bm25(store.select(col(idCol), col(textCol)),
+              idCol, textCol, terms, topK = fetchK)
+          }).select(col(idCol)).collect().map(_.get(0))
+        // a null id, or one the store no longer holds, keeps its fused
+        // slot but names no chunk to return
+        val idOrder = Keyword.sparkOrder(store.select(col(idCol)).schema.head.dataType)
+        val fused = Keyword.rrfFuseRanked(Seq(vec.map(_._1).toSeq, lex.toSeq), c, topK)(idOrder)
+          .map(_._1).filter(_ != null)
+        // text rides on the vector leg's rows; only ids the lexical leg
+        // alone found are looked up, in one filtered read of the store
+        val vecHits = vec.toMap
+        val lexOnly = fused.filterNot(vecHits.contains)
+        val lexHits =
+          if (lexOnly.isEmpty) Map.empty[Any, (String, String)]
+          else withText(store.filter(col(idCol).isin(lexOnly: _*))).toMap
+        fused.flatMap(id => vecHits.get(id).orElse(lexHits.get(id)))
     }
     // A9 context concat (chatbot.py:76-81)
     val context = hits.map(_._2).mkString("\n\n")

@@ -161,6 +161,19 @@ object Keyword {
         min(col("__start")).cast("long").as("first_pos"))
   }
 
+  /** Bucket count sized to the corpus (round 19, guide §6 small files /
+    * §2.2): the bucket layout exists for term-pruned reads at scale, but
+    * a FIXED 64 buckets makes a 5k-doc corpus write 64 near-empty
+    * parquet directories (measured: the bucket-partitioned write was the
+    * dominant job of rag_e2e's index build) while a billion-doc corpus
+    * would under-partition. One bucket per ~16Ki docs, clamped to
+    * [8, 4096]; the count is recorded in `_stats`, so readers and
+    * incremental appenders keep following whatever the build chose.
+    * Callers pass an explicit count to pin it (tests, fixtures).
+    */
+  private[ops] def bucketsForCorpus(n: Long): Int =
+    math.min(4096L, math.max(8L, (n + 16383) >> 14)).toInt
+
   /** Positional inverted index for [[phraseSearchIndexed]] — the
     * position-aware sibling of [[buildLexicalIndex]] (the bag-of-words
     * postings can't serve phrase queries). Writes
@@ -177,19 +190,6 @@ object Keyword {
     * appended rows in O(new docs) — positional postings are
     * per-(doc, term) facts exactly like the lexical ones.
     */
-  /** Bucket count sized to the corpus (round 19, guide §6 small files /
-    * §2.2): the bucket layout exists for term-pruned reads at scale, but
-    * a FIXED 64 buckets makes a 5k-doc corpus write 64 near-empty
-    * parquet directories (measured: the bucket-partitioned write was the
-    * dominant job of rag_e2e's index build) while a billion-doc corpus
-    * would under-partition. One bucket per ~16Ki docs, clamped to
-    * [8, 4096]; the count is recorded in `_stats`, so readers and
-    * incremental appenders keep following whatever the build chose.
-    * Callers pass an explicit count to pin it (tests, fixtures).
-    */
-  private[ops] def bucketsForCorpus(n: Long): Int =
-    math.min(4096L, math.max(8L, (n + 16383) >> 14)).toInt
-
   def buildPositionalIndex(docs: DataFrame, idCol: String, textCol: String,
                            path: String, buckets: Int = 0,
                            store: Option[String] = None): Unit = {
@@ -303,7 +303,7 @@ object Keyword {
           s"v$v — stale index; rebuild")
     }
     val terms = phrase.distinct
-    val flat = spark.read.parquet(s"$indexPath/postings")
+    val flat = readPostings(spark, indexPath)
       .filter(col("bucket").isin(bucketsOfTerms(spark, terms, buckets): _*) &&
         col("term").isInCollection(terms))
       .select(col("id"), col("term"), explode(col("positions")).as("__p"))
@@ -312,9 +312,9 @@ object Keyword {
 
   /** The bucket ids [[buildPositionalIndex]]/[[writePostings]] assign
     * the given terms — evaluated through the engine's own `xxhash64`
-    * expression (ONE tiny local job for the whole query-bounded term
-    * set) so build and probe can never disagree on the partitioning
-    * function.
+    * expression so build and probe can never disagree on the
+    * partitioning function. The projection over a local relation is
+    * folded by the optimizer, so the collect runs no Spark job.
     */
   private def bucketsOfTerms(spark: org.apache.spark.sql.SparkSession,
                              terms: Seq[String], buckets: Int): Seq[Int] = {
@@ -322,6 +322,24 @@ object Keyword {
     terms.toDF("t")
       .select(pmod(xxhash64(col("t")), lit(buckets)).cast("int"))
       .collect().map(_.getInt(0)).toSeq.distinct
+  }
+
+  /** The `postings` table of a lexical or positional index — the one
+    * reader every index query goes through. The data schema comes from
+    * one parquet footer ([[graft.ParquetFooters.sparkSchema]]) plus the
+    * `bucket` partition column both builds write, so the read runs no
+    * schema-inference job. A postings directory holding no data file
+    * falls through to Spark's inference, which fails loudly.
+    */
+  private def readPostings(spark: org.apache.spark.sql.SparkSession,
+                           indexPath: String): DataFrame = {
+    val dir = s"$indexPath/postings"
+    graft.ParquetFooters.sparkSchema(spark, dir) match {
+      case Some(data) =>
+        spark.read.schema(data.add("bucket", org.apache.spark.sql.types.IntegerType))
+          .parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
   }
 
   /** Build the persistent lexical index for [[bm25Indexed]]: the
@@ -354,6 +372,15 @@ object Keyword {
     * Without `store` (a plain parquet corpus) the stamp is `-` and
     * staleness is the caller's contract.
     */
+  def buildLexicalIndex(docs: DataFrame, idCol: String, textCol: String,
+                        path: String, buckets: Int = 0,
+                        store: Option[String] = None): Unit = {
+    val spark = docs.sparkSession
+    buildIndexImpl(docs, idCol, textCol, path, buckets,
+      store.map(t => (t, VersionedStore.currentState(spark, t)
+        .map(_.version).getOrElse(0L))))
+  }
+
   /** [[buildLexicalIndex]] with the store snapshot taken INSIDE the
     * build, in stamp-safe order: the version is captured strictly BEFORE
     * the rows are read, so the stamp can never claim a newer snapshot
@@ -372,15 +399,6 @@ object Keyword {
     val docs = VersionedStore.read(spark, table).getOrElse(
       throw new IllegalStateException(s"no rows to index at $table"))
     buildIndexImpl(docs, idCol, textCol, path, buckets, Some((table, v0)))
-  }
-
-  def buildLexicalIndex(docs: DataFrame, idCol: String, textCol: String,
-                        path: String, buckets: Int = 0,
-                        store: Option[String] = None): Unit = {
-    val spark = docs.sparkSession
-    buildIndexImpl(docs, idCol, textCol, path, buckets,
-      store.map(t => (t, VersionedStore.currentState(spark, t)
-        .map(_.version).getOrElse(0L))))
   }
 
   private def buildIndexImpl(docs: DataFrame, idCol: String, textCol: String,
@@ -641,10 +659,6 @@ object Keyword {
       .select(col(qidName), col("id"), col("rank"))
   }
 
-  /** Shared index-read head of [[bm25Indexed]]/[[bm25IndexedBatchRank]]:
-    * staleness-guarded stats plus the postings pruned to the query
-    * terms' hash buckets. Returns (N, avgdl, postings(term,id,tf,dl)).
-    */
   /** Staleness-guarded `_stats` read shared by the pruned query path
     * ([[indexedPostings]]) and the unpruned mining path
     * ([[prfExpandTermsIndexed]]). Returns (nDocs, sumdl, buckets).
@@ -674,21 +688,20 @@ object Keyword {
     (stats(0).toLong, stats(1).toLong, stats(2).toInt)
   }
 
+  /** Shared index-read head of [[bm25Indexed]]/[[bm25IndexedBatchRank]]:
+    * staleness-guarded stats plus the postings pruned to the query
+    * terms' hash buckets ([[bucketsOfTerms]], [[readPostings]]). Builds
+    * the plan without running a Spark job. Returns
+    * (N, avgdl, postings(term,id,tf,dl)).
+    */
   private def indexedPostings(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                               queryTerms: Seq[String],
                               store: Option[String]): (Long, Double, DataFrame) = {
     val (nDocs, sumdl, buckets) = indexStats(spark, indexPath, store)
     val avgdl = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
-    // bucket ids must be computed by the ENGINE's own hash (xxhash64),
-    // not re-implemented driver-side — one expression evaluation keeps
-    // the two in lockstep with the build-time assignment
-    val bucketOf = spark.range(0, 1).select(
-      queryTerms.zipWithIndex.map { case (t, i) =>
-        pmod(xxhash64(lit(t)), lit(buckets)).cast("int").as(s"__b$i")
-      }: _*).head()
-    val prunedBuckets = queryTerms.indices.map(bucketOf.getInt(_)).distinct
-    val tf = spark.read.parquet(s"$indexPath/postings")
-      .filter(col("bucket").isin(prunedBuckets: _*) && col("term").isin(queryTerms: _*))
+    val tf = readPostings(spark, indexPath)
+      .filter(col("bucket").isin(bucketsOfTerms(spark, queryTerms, buckets): _*) &&
+        col("term").isin(queryTerms: _*))
     (nDocs, avgdl, tf)
   }
 
@@ -750,17 +763,26 @@ object Keyword {
     result
   }
 
-  /** Reciprocal-rank fusion of independent rankings: each input carries
-    * `(idCol, rankCol)` (rank 1 = best) and contributes `1/(c + rank)`;
-    * ids absent from a ranking contribute nothing from it. Output:
-    * `(idCol, rrf_micros BIGINT)` best first, top `topK`. The score is
-    * a sum of integer-ratio terms whose double is bit-identical on any
-    * engine (same IEEE divisions, commutative sum), so it leaves via
-    * [[graft.Tables.micros]] — `floor(x·10⁶ + ½)`, two more identical
-    * IEEE ops — instead of `round(double, 6)`, whose tie handling is
-    * engine-build-sensitive. One union + one hash aggregation —
-    * rankings are already top-k-bounded, so this is driver-cheap at
-    * any corpus size.
+  /** Reciprocal-rank fusion (RRF) of independent rankings, in two
+    * shapes that compute the same thing: [[rrfFuse]] over ranked frames,
+    * [[rrfFuseRanked]] over ranked id lists already on the driver.
+    *
+    * The arithmetic, shared by both: an id at rank r (1 = best) of a
+    * ranking contributes `1.0/(c + r)` (an integer sum, then one
+    * division); ids absent from a ranking get nothing from it. The
+    * contributions are summed per id and leave as micros,
+    * `floor(x·10⁶ + ½)` as a long ([[graft.Tables.micros]]), instead of
+    * `round(double, 6)`, whose tie handling is engine-build-sensitive.
+    * Each id gets at most one term per ranking, and with two rankings
+    * the sum of two doubles is the same in either order, so the micros
+    * are bit-identical on any engine and in both shapes. The top `topK`
+    * ids, micros descending, ties by id ascending in Spark's order for
+    * the id type (nulls first).
+    *
+    * This shape: each input carries `(idCol, rankCol)`; output
+    * `(idCol, rrf_micros BIGINT)` best first. One union + one hash
+    * aggregation — rankings are top-k-bounded, so this is cheap at any
+    * corpus size.
     */
   def rrfFuse(rankings: Seq[DataFrame], idCol: String, rankCol: String,
               c: Int = 60, topK: Int = 10): DataFrame = {
@@ -774,6 +796,39 @@ object Keyword {
       .select(col(idCol), graft.Tables.micros(col("__raw")).as("rrf_micros"))
       .orderBy(col("rrf_micros").desc, col(idCol))
       .limit(topK)
+  }
+
+  /** [[rrfFuse]] over rankings already collected to the driver: each list
+    * holds ids best first (rank = position + 1), the same arithmetic
+    * (documented at [[rrfFuse]]), the same cut and order. `idOrder` must
+    * be Spark's order for the id type — [[sparkOrder]] — so a tie on
+    * micros falls the way the plan's `orderBy(id)` does. Returns
+    * `(id, rrf_micros)` best first. The fusion of two bounded legs costs
+    * no Spark job this way.
+    */
+  def rrfFuseRanked[K](rankings: Seq[Seq[K]], c: Int = 60, topK: Int = 10)
+                      (implicit idOrder: Ordering[K]): Seq[(K, Long)] = {
+    require(rankings.nonEmpty, "need at least one ranking")
+    val raw = scala.collection.mutable.HashMap.empty[K, Double]
+    for (ranking <- rankings; (id, i) <- ranking.zipWithIndex)
+      raw(id) = raw.getOrElse(id, 0.0) + 1.0 / (c + (i + 1))
+    raw.toSeq
+      .map { case (id, x) => (id, math.floor(x * 1000000d + 0.5d).toLong) }
+      .sorted(Ordering.Tuple2(Ordering.Long.reverse, idOrder).on[(K, Long)](_.swap))
+      .take(topK)
+  }
+
+  /** Spark's ascending order (nulls first, as `orderBy(col)` sorts) over
+    * the external values of `dt` that `collect()` returns — strings by
+    * UTF-8 bytes, numbers by value — for driver-side tie-breaks that
+    * must match a plan's.
+    */
+  def sparkOrder(dt: org.apache.spark.sql.types.DataType): Ordering[Any] = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.RowOrdering
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val rows = RowOrdering.createNaturalAscendingOrdering(Seq(dt))
+    Ordering.by[Any, InternalRow](v => InternalRow(toCatalyst(v)))(rows)
   }
 
   /** Relative-score (alpha-weighted) fusion — the other standard hybrid
@@ -904,7 +959,7 @@ object Keyword {
     // the build indexes every token verbatim (including the '' a
     // whitespace-only doc tokenizes to); mining must drop it exactly as
     // the scan path's empty-token filter does
-    val postings = spark.read.parquet(s"$indexPath/postings")
+    val postings = readPostings(spark, indexPath)
       .filter(length(col("term")) > 0)
     val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val ftf = postings.filter(col("id").isin(fb: _*))

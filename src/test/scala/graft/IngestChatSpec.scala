@@ -723,6 +723,49 @@ class IngestChatSpec extends AnyFunSuite {
         indexStorePath = Some(tablePath))
     }
     assert(staleErr.getMessage.contains("stale"))
+
+    // a BIGINT-keyed store under a fixed query vector, so both legs'
+    // ranks are known: for "zebra" the vector leg ranks 9, 10 and the
+    // BM25 leg 10, 9 — the two tie on RRF micros and must fall in
+    // numeric order (string order would put "10" first); for "quokka"
+    // the BM25 leg's best document is far from the query vector, so a
+    // fused pick comes from the lexical leg alone and takes the store
+    // lookup. Scan and index legs, COSINE and EUCLIDEAN, single ≡ batch.
+    object AxisEmbedder extends graft.embed.Embedder {
+      val dim = 2
+      def embed(text: String): Array[Float] = Array(1f, 0f)
+    }
+    val longStore = Seq(
+      (9L, "zebra alpha beta gamma delta", Seq(1f, 0f)),
+      (10L, "zebra zebra", Seq(0.8f, 0.6f)),
+      (11L, "quokka", Seq(0.6f, 0.8f)),
+      (12L, "quokka quokka kiwi", Seq(-1f, 0f)),
+      (1L, "filler words here", Seq(0f, 1f))
+    ).toDF("id", "text", "embedding")
+    val longIdx = Files.createTempDirectory("disp-longidx").toString
+    graft.ops.Keyword.buildLexicalIndex(longStore, "id", "text", longIdx)
+    val longQs = Seq("zebra", "quokka")
+    val longQdf = longQs.zipWithIndex.map { case (q, i) => (i.toLong, q) }.toDF("qid", "question")
+    for (m <- Seq("COSINE", "EUCLIDEAN_DISTANCE");
+         st <- Seq(SearchType.Hybrid(fetchKPerLeg = 2),
+                   SearchType.Hybrid(fetchKPerLeg = 2, lexicalIndexPath = Some(longIdx)))) {
+      val batch = Chat.answerBatch(longQdf, "qid", "question", longStore,
+          "id", "text", "embedding", AxisEmbedder, topK = 2, metric = m, searchType = st)
+        .collect().map(r => r.getAs[String]("question") -> r).toMap
+      val single = longQs.map(q => q -> Chat.answer(spark, q, longStore, "id", "text",
+        "embedding", AxisEmbedder, topK = 2, metric = m, searchType = st)).toMap
+      assert(single("zebra").retrievedIds == Seq("9", "10"), s"$m / $st tie order")
+      assert(single("quokka").retrievedIds == Seq("9", "11"), s"$m / $st lexical-only pick")
+      assert(single("quokka").context == "zebra alpha beta gamma delta\n\nquokka")
+      longQs.foreach { q =>
+        val b = batch(q)
+        assert(b.getAs[String]("answer") == single(q).answer, s"$m / $st / $q")
+        assert(b.getAs[String]("context") == single(q).context, s"$m / $st / $q")
+        assert(b.getAs[scala.collection.Seq[String]]("retrieved_ids").toSeq
+          == single(q).retrievedIds, s"$m / $st / $q")
+        assert(b.getAs[Boolean]("relevant") == single(q).relevant, s"$m / $st / $q")
+      }
+    }
   }
 
   test("testset upsert is idempotent per tid and chunk JSON round-trips (S18, S13/S9)") {
