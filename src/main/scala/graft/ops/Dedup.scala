@@ -385,121 +385,74 @@ object Dedup {
     * `(id_a, id_b)`: returns `(id, component)` for every node that
     * appears in an edge, where `component` is the smallest id reachable
     * — the canonical representative, matching [[exact]]'s min-id
-    * convention. Iterative min-label propagation: each round every node
-    * adopts the minimum label among itself and its neighbors, so it
-    * converges in O(component diameter) rounds — near-dup clusters are
-    * dense and shallow, so a handful of rounds in practice. Each round
-    * is one equi-join + aggregation (all shuffles key on node id);
-    * rounds are localCheckpoint-materialized with the changed-label
-    * count observed on the same action (the Hierarchy pattern — one job
-    * per round). For adversarially long path-graphs the
-    * large-star/small-star variant halves rounds; dedup graphs don't
-    * need it.
+    * convention. The id columns resolve like `col(...)` (so case-
+    * insensitively by default). A pair with a null endpoint joins no
+    * cluster: it is dropped before the loop, so its other id is in no
+    * component (a [[nearDupSurvivors]] singleton).
+    *
+    * One loop for every id type: min-label propagation with pointer
+    * jumping, on co-partitioned RDDs of BIGINT ids. Each round every
+    * node adopts the minimum label among itself and its neighbors, then
+    * follows its new label one hop through the previous round's labels
+    * (labels only shrink, so the fixpoint is unchanged), which
+    * compresses long chains to ~O(log diameter) rounds. A round is ONE
+    * job (3 shuffles: neighbor-min combine, the jump rekey, the
+    * repartition back to id) with no per-round planning or codegen; the
+    * DataFrame formulation paid Catalyst analysis + AQE stage scheduling
+    * per round, measured ~10 jobs and ~0.3 s per round on a 1,634-edge
+    * graph whose per-round data work is microseconds. A fixed
+    * HashPartitioner keys every round's shuffle, `reduceByKey` combines
+    * map-side, and a per-round localCheckpoint truncates the lineage.
+    *
+    * BIGINT ids enter the loop as they are. Any other id type is first
+    * encoded into BIGINT in Spark's own ordering for that type: the
+    * distinct ids `orderBy(id)`, numbered by `monotonically_increasing_id`
+    * (which increases along the sort), materialized once; two joins
+    * encode the pairs and two decode the result. Code order equals id
+    * order, so the loop's min label is the min id and the round count is
+    * the BIGINT one. Codes that ignore the order (`zipWithUniqueId`, the
+    * distinct's hash order) lose both: the representative is no longer
+    * the min id, and a 10⁴-node string chain no longer converges in 20
+    * rounds. The order is never taken on the driver, where Java's UTF-16
+    * string order differs from Spark's UTF-8 byte order.
+    *
+    * The convergence test reads a LongAccumulator stamped where a
+    * neighbor-min strictly lowers a label. Updates from re-executed
+    * shuffle tasks can only OVER-count, so the `changed == 0` exit is
+    * exact and an overcount merely runs one extra no-op round.
+    * Partially-converged labels would silently keep extra duplicates in
+    * [[nearDupSurvivors]], so exhausting `maxIters` throws instead.
     */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxIters: Int = 50): DataFrame = {
-    // BIGINT ids (every declared caller: doc_id/vec_id/media_id) take
-    // the RDD loop — identical algorithm, one job per round instead of
-    // ~10 (see [[ccLong]]); other id types keep the generic Catalyst
-    // path below
-    val sch = pairs.schema
-    if (sch(idACol).dataType == org.apache.spark.sql.types.LongType &&
-        sch(idBCol).dataType == org.apache.spark.sql.types.LongType)
-      return ccLong(pairs, idACol, idBCol, maxIters)
-    // both directions from ONE pass over pairs (a union of two selects
-    // would execute the upstream pair-generation plan twice — for the
-    // dedup queries that upstream is the whole prefix join + verify);
-    // persisted because every propagation round joins against it
-    val edges = pairs
-      .select(explode(array(
-        struct(col(idACol).as("src"), col(idBCol).as("dst")),
-        struct(col(idBCol).as("src"), col(idACol).as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init = one aggregation that already folds in the first propagation
-    // round (component₀ = min(id, min neighbor)) — it also replaces the
-    // node-set distinct, saving two shuffles before the loop starts
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("nbr"))
-      .select(col("src").as("id"), least(col("src"), col("nbr")).as("component"))
+    val edges = pairs.select(col(idACol).as("a"), col(idBCol).as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
+    if (edges.schema.forall(_.dataType == org.apache.spark.sql.types.LongType))
+      return minLabelLoop(edges, maxIters)
+    // materialized once, so the encode and decode joins all read the
+    // same codes (a recomputed sort may number its rows differently)
+    val codes = edges.select(col("a").as("id")).union(edges.select(col("b").as("id")))
+      .distinct()
+      .orderBy(col("id"))
+      .withColumn("code", monotonically_increasing_id())
       .localCheckpoint()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("c")), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("c")).as("nbr"))
-      val obs = new org.apache.spark.sql.Observation()
-      val propagated = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr"), col("component"))).as("component"),
-          (coalesce(col("nbr"), col("component")) < col("component")).as("__chg"))
-        .observe(obs, count(when(col("__chg"), 1)).as("n"))
-        .select(col("id"), col("component"))
-      // pointer jump: follow the adopted component one more hop through
-      // the PREVIOUS round's materialized labels (labels only shrink, so
-      // any such min-combination stays ≥ the true component min and the
-      // fixpoint is unchanged) — compresses long chains toward
-      // O(log diameter) rounds without re-computing the propagation
-      // subtree. At the neighbor-min fixpoint (changed = 0) labels are
-      // component-constant and the jump is a no-op, so the observed
-      // neighbor-min change count remains the convergence test.
-      labels = propagated
-        .join(labels.select(col("id").as("component"), col("component").as("cc")),
-          Seq("component"), "left")
-        .select(col("id"), coalesce(col("cc"), col("component")).as("component"))
-        .localCheckpoint()
-      changed = obs.get("n").asInstanceOf[Long]
-      it += 1
-    }
-    edges.unpersist()
-    // partially-converged labels would silently keep extra duplicates in
-    // nearDupSurvivors — fail loudly instead. With pointer jumping the
-    // round count is ~O(log diameter), so 50 rounds covers any
-    // non-adversarial graph; hitting this means the input is pathological,
-    // not that the caller should quietly accept a wrong answer.
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge after $it rounds " +
-          s"($changed labels still changing); raise maxIters")
-    lastCcRounds = it
-    labels
+    def byId(c: String) = codes.select(col("id").as(c), col("code").as(s"${c}_code"))
+    val encoded = edges.join(byId("a"), "a").join(byId("b"), "b")
+      .select(col("a_code"), col("b_code"))
+    def byCode(c: String) = codes.select(col("code").as(c), col("id").as(s"${c}_id"))
+    minLabelLoop(encoded, maxIters)
+      .join(byCode("id"), "id").join(byCode("component"), "component")
+      .select(col("id_id").as("id"), col("component_id").as("component"))
   }
 
-  /** [[connectedComponents]] specialized to BIGINT node ids, as an RDD
-    * loop (round 19, guide §1.2 "per-task work" applied to the DRIVER):
-    * the DataFrame formulation pays Catalyst analysis + AQE stage
-    * scheduling PER ROUND — measured ~10 jobs and ~0.3 s per round on a
-    * 1,634-edge graph whose per-round data work is microseconds, and
-    * the pointer-jumped loop runs ~log₂(diameter) ≈ 10 rounds on the
-    * chain-shaped semantic-dedup graphs. The same min-label +
-    * pointer-jump algorithm on co-partitioned RDDs runs ONE job per
-    * round (3 shuffles: neighbor-min combine, the jump rekey, the
-    * repartition back to id), with no per-round planning or codegen.
-    * Scale-honest: the fixed HashPartitioner keys every round's shuffle
-    * exactly like the DataFrame exchanges did, map-side combining in
-    * reduceByKey replaces the partial aggregation, and the per-round
-    * localCheckpoint keeps lineage truncation semantics. Labels only
-    * shrink, so the min-combination/jump arguments are unchanged from
-    * the generic path; results are identical (component = min reachable
-    * id, exact).
-    *
-    * The convergence test reads a LongAccumulator stamped where a
-    * neighbor-min strictly lowers a label. Accumulator updates from
-    * re-executed shuffle tasks can only OVER-count, never report 0 when
-    * a change occurred (a successful task's update is always applied),
-    * so the `changed == 0` exit is exact and an overcount merely runs
-    * one extra no-op round.
-    */
-  private def ccLong(pairs: DataFrame, idACol: String, idBCol: String,
-                     maxIters: Int): DataFrame = {
+  // the loop of [[connectedComponents]] over non-null BIGINT pairs
+  private def minLabelLoop(pairs: DataFrame, maxIters: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     // keyed by dst: each round's message to src is label(dst); the graph
     // is symmetric (both directions emitted), so per-node min-neighbor
     // init reads off the same keying
-    val raw = pairs.select(col(idACol), col(idBCol)).as[(Long, Long)]
+    val raw = pairs.as[(Long, Long)]
       .rdd
       .mapPartitions(_.flatMap { case (a, b) => Iterator((a, b), (b, a)) },
         preservesPartitioning = false)
@@ -527,6 +480,8 @@ object Dedup {
         preservesPartitioning = true)
       .localCheckpoint()
     labels.count(): Unit
+    // edgesByDst is materialized now; the loop never reads raw again
+    raw.unpersist()
     var changed = 1L
     var it = 0
     while (changed > 0 && it < maxIters) {
@@ -543,8 +498,7 @@ object Dedup {
           if (nbr < comp) acc.add(1L)
           (id, math.min(comp, nbr))
         }, preservesPartitioning = true)
-      // pointer jump through the PREVIOUS round's labels (same argument
-      // as the generic path: labels only shrink, fixpoint unchanged)
+      // pointer jump through the PREVIOUS round's labels
       labels = propagated
         .map { case (id, comp) => (comp, id) }
         .leftOuterJoin(labels, part)
@@ -555,21 +509,13 @@ object Dedup {
       changed = acc.value
       it += 1
     }
-    raw.unpersist()
     edgesByDst.unpersist()
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge after $it rounds " +
           s"($changed labels still changing); raise maxIters")
-    lastCcRounds = it
     labels.toDF("id", "component")
   }
-
-  /** Rounds the last [[connectedComponents]] call took to converge —
-    * probe/spec observability only (the scale claim is rounds ~
-    * O(log diameter), and a probe asserting it needs the count).
-    */
-  @volatile private[graft] var lastCcRounds: Int = -1
 
   /** Near-dup survivors: drop every document whose component
     * representative is a different (smaller-id) document — the "keep one

@@ -1077,15 +1077,17 @@ object VersionedStore {
           s"written after adoption — invisible to read() and spared by vacuum; " +
           s"re-ingest them through append() or remove them: " +
           shadowed.take(5).mkString(", "))
-    dead.foreach(graft.Fs.delete(spark, _))
-    // drop any cached relation over a reclaimed segment: the manifest no
-    // longer references them so nothing SHOULD re-read them, but a stale
-    // file index silently serving a deleted directory is exactly the
-    // failure the readImmutable contract must make impossible (the keys
-    // use the caller-form `$table/<seg>` path, same as every read site)
-    dead.foreach { p =>
+    // drop each reclaimed segment's cached relation just before deleting
+    // it: the manifest no longer references it so nothing SHOULD re-read
+    // it, but a stale file index silently serving a deleted directory is
+    // exactly the failure the readImmutable contract must make impossible
+    // (the keys use the caller-form `$table/<seg>` path, same as every
+    // read site). Only segments are cached; the other dead paths are not.
+    deadSegs.foreach { p =>
       graft.ParquetIO.invalidate(s"$table/${p.substring(p.lastIndexOf('/') + 1)}")
+      graft.Fs.delete(spark, p)
     }
+    (deadTmp ++ deadLoose ++ deadManifests).foreach(graft.Fs.delete(spark, _))
     dead
   }
 }

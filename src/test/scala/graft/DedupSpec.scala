@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.SimHash64
@@ -181,6 +182,37 @@ class DedupSpec extends AnyFunSuite {
     // no pairs → everything survives (and the loop terminates immediately)
     val noPairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.nearDupSurvivors(docs, "doc_id", noPairs).count() == docs.count())
+    // INT ids: same clusters, the id type kept
+    val intComp = Dedup.connectedComponents(
+      Seq((1, 2), (2, 3), (5, 6), (3, 7)).toDF("id_a", "id_b"))
+    assert(intComp.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(intComp.as[(Int, Int)].collect().toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 1, 5 -> 5, 6 -> 5))
+    // STRING ids: the representative is the min in Spark's string order,
+    // so "10" (not "9") leads the chain 9-10-11, and U+FF61 (first by
+    // UTF-8 bytes) leads U+1F600 (first by UTF-16 units)
+    val (hi, emoji) = ("｡", "😀")
+    val strPairs = Seq(("9", "10"), ("11", "10"), (emoji, hi), ("b", "a")).toDF("id_a", "id_b")
+    val strComp = Dedup.connectedComponents(strPairs).as[(String, String)].collect().toMap
+    assert(strComp == Map("9" -> "10", "10" -> "10", "11" -> "10",
+      hi -> hi, emoji -> hi, "a" -> "a", "b" -> "a"))
+    val strDocs = Seq("9", "10", "11", hi, emoji, "a", "b", "z").toDF("doc_id")
+    assert(Dedup.nearDupSurvivors(strDocs, "doc_id", strPairs).as[String].collect().toSet ==
+      Set("10", hi, "a", "z"))
+  }
+
+  test("connected components: id columns resolve case-insensitively; a pair with a null id joins no cluster") {
+    val pairs = Seq((Some(1L), None), (Some(2L), Some(3L)), (None, Some(4L)))
+      .toDF("ID_A", "ID_B")
+    assert(Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap ==
+      Map(2L -> 2L, 3L -> 2L))
+    val docs = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    assert(Dedup.nearDupSurvivors(docs, "doc_id", pairs).as[Long].collect().toSet ==
+      Set(1L, 2L, 4L))
+    // the same through the encoded (non-BIGINT) path
+    val strPairs = Seq(("x", null), ("y", "z")).toDF("ID_A", "ID_B")
+    assert(Dedup.connectedComponents(strPairs).as[(String, String)].collect().toMap ==
+      Map("y" -> "y", "z" -> "y"))
   }
 
   test("softDedupWeights: 1/cluster_size per member, mass 1 per cluster, singletons weigh 1.0") {
@@ -234,6 +266,24 @@ class DedupSpec extends AnyFunSuite {
     val comp = Dedup.connectedComponents(pairs, maxIters = 20)
     assert(comp.count() == n)
     assert(comp.filter(col("component") =!= 0).count() == 0, "single chain: every node labels to 0")
+    // the same chain over STRING ids: the encoding must keep the id order
+    // for the round bound to hold (codes in any other order do not
+    // converge in 20 rounds)
+    val strPairs = pairs.select(format_string("%05d", col("id_a")).as("id_a"),
+      format_string("%05d", col("id_b")).as("id_b"))
+    val strComp = Dedup.connectedComponents(strPairs, maxIters = 20)
+    assert(strComp.count() == n)
+    assert(strComp.filter(col("component") =!= "00000").count() == 0,
+      "single chain: every node labels to 00000")
+  }
+
+  test("job budget: string-id connected components on a 2,000-node chain") {
+    // 79 jobs at the Catalyst loop this replaced, 21 through the encoded
+    // RDD loop; the count does not depend on the machine
+    val pairs = (0 until 1999).map(i => (f"$i%04d", f"${i + 1}%04d")).toDF("id_a", "id_b")
+    val (comp, jobs) = jobsOf(Dedup.connectedComponents(pairs, maxIters = 20).collect())
+    assert(comp.length == 2000 && comp.forall(_.getString(1) == "0000"))
+    assert(jobs <= 21, s"string-id CC ran $jobs jobs (budget 21)")
   }
 
   test("simhash banded pairs equal brute-force all-pairs at the pigeonhole-complete threshold") {

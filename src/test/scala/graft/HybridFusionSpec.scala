@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,31 +15,6 @@ import graft.ops.{Chat, Ingest, Keyword}
 class HybridFusionSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
-
-  /** Jobs started by `body` on this thread (a local property marks them,
-    * so a job of any other thread is not counted).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("graft.test.jobs") == tag))
-          n.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty("graft.test.jobs", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("rrfFuseRanked equals rrfFuse on the same legs; ties fall in Spark's id order") {
     // 9 and 10 swap ranks between the legs, so they tie on micros:

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +25,31 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Jobs started by `body` on this thread (a local property marks them,
+    * so a job of any other thread is not counted).
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty("graft.test.jobs") == tag))
+          n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {
