@@ -1,7 +1,10 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Trained quality classifier over hashed bag-of-words features — the
   * CCNet / LLaMA-pipeline "fastText quality gate" re-expressed
@@ -25,14 +28,14 @@ import org.apache.spark.sql.functions._
   * divergence cannot compound across steps because every step re-bases
   * on the rounded vector.
   *
-  * Scale shape: the model is ≤4097 (bucket, weight) rows and
-  * BROADCASTS to every join; the corpus-sized exchanges are the
-  * per-document feature agg (keyed by id) and the per-bucket gradient
-  * agg (collapses map-side to ≤4096 partials per task) — both linear,
-  * once per iteration, with the iteration count a small constant. The
-  * only driver round-trip is the labeled-row count (one scalar);
-  * features build once and `localCheckpoint` so K iterations never
-  * re-tokenize.
+  * Scale shape: the model is ≤4097 weights (4096 buckets + bias), so
+  * the fit holds it as a dense array on the driver and broadcasts it.
+  * The corpus-sized work runs once per fit: tokenizing, the
+  * per-document feature agg (keyed by id) and the label join build one
+  * persisted `(y, buckets, x)` row per document. Each GD step is then
+  * one Spark action — a `treeAggregate` of the dense gradient over
+  * those rows — with no query planned per step; the weight update is
+  * 4097 driver-side roundings.
   */
 object Classifier {
 
@@ -59,46 +62,110 @@ object Classifier {
     tokFeat.unionByName(biasFeat)
   }
 
+  /** Dense weight/gradient width: bucket `b` ∈ [−1, 4095] at index `b + 1`. */
+  private val Width = 4097
+
   /** Fit logistic-regression weights on `labeled` (`labelCol` ∈ {0, 1})
     * by `iters` full-batch GD steps at learning rate `lr` (scaled by
-    * 1/N, N = labeled rows). Returns `(b, w)` — ≤4097 rows, weights
-    * rounded to 6 decimals (the replayable-checkpoint contract).
+    * 1/N, N = labeled rows). Returns `(b INT, w DOUBLE)` — a local frame
+    * of ≤4097 rows, weights rounded to 6 decimals (the
+    * replayable-checkpoint contract).
     *
     * Each step: p_d = σ(Σ_b w_b·x_db); g_b = Σ_d (p_d − y_d)·x_db;
     * w ← round(w − (lr/N)·g, 6). Zero-init makes step 1's
-    * probabilities exactly 0.5 in every engine. The gradient inner
-    * join is total by construction: g's bucket domain equals w's
-    * (every feature bucket belongs to some labeled document, and every
-    * document has a probability row).
+    * probabilities exactly 0.5 in every engine. The model's bucket
+    * domain is the buckets of the trained documents; each one gets a
+    * gradient every step.
+    *
+    * Shape (see the object doc): one persisted `(y, buckets, x)` row
+    * per document; each step broadcasts the weights as a dense
+    * `Array[Double]` and runs ONE `treeAggregate` of `(p − y)·x` into a
+    * dense gradient. The logit sums in array order and the gradient in
+    * partition order, not a grouped SQL sum's order, so either may
+    * differ from another engine's in the last ulp. `round(·, 6)` maps
+    * both to the same weight unless the pre-round value lies within an
+    * ulp of a half-micro boundary, and the next step reads only the
+    * rounded vector, so no difference compounds.
+    *
+    * Refuses (IllegalArgumentException naming `labelCol`) a null label:
+    * its `(p − y)` would be null, so the document would drop out of
+    * every gradient sum and a bucket seen only in null-label documents
+    * would train to a null weight. A row with a null id is counted in N
+    * but not trained on (its features join no label).
     */
   def fitLogReg(labeled: DataFrame, idCol: String, textCol: String,
                 labelCol: String, iters: Int = 3, lr: Double = 5.0): DataFrame = {
     require(iters >= 1, s"iters must be >= 1 (got $iters)")
     require(lr > 0, s"lr must be > 0 (got $lr)")
+    val spark = labeled.sparkSession
     val ydf = labeled
       .select(col(idCol).as("__id"), col(labelCol).cast("double").as("__y"))
-    val feat = hashedFeatures(labeled, idCol, textCol).localCheckpoint()
-    val n = ydf.count()
+    val counts = ydf
+      .agg(count(lit(1)), count(when(col("__y").isNull, lit(1)))).head()
+    val n = counts.getLong(0)
     require(n > 0, "no labeled rows")
+    require(counts.getLong(1) == 0,
+      s"label column '$labelCol' has ${counts.getLong(1)} null value(s)")
     val step = lr / n
-    var w = feat.select(col("__b")).distinct()
-      .select(col("__b"), lit(0.0).as("__w")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val p = feat.join(broadcast(w), Seq("__b"))
-        .groupBy(col("__id")).agg(sum(col("__w") * col("__x")).as("__s"))
-        .join(ydf, Seq("__id"))
-        .select(col("__id"), col("__y"),
-          (lit(1.0) / (lit(1.0) + exp(-col("__s")))).as("__p"))
-      val g = feat.join(p, Seq("__id"))
-        .groupBy(col("__b"))
-        .agg(sum((col("__p") - col("__y")) * col("__x")).as("__g"))
-      w = w.join(g, Seq("__b"))
-        .select(col("__b"),
-          round(col("__w") - lit(step) * col("__g"), 6).as("__w"))
-        .localCheckpoint()
-    }
-    w.select(col("__b").as("b"), col("__w").as("w"))
+    val rows = hashedFeatures(labeled, idCol, textCol)
+      .groupBy(col("__id"))
+      .agg(collect_list(struct(col("__b"), col("__x"))).as("__f"))
+      .join(ydf, Seq("__id"))
+      .select(col("__y"), col("__f.__b"), col("__f.__x"))
+      .rdd
+      .map(r => (r.getDouble(0), r.getSeq[Int](1).toArray, r.getSeq[Double](2).toArray))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var w = new Array[Double](Width)
+    var seen = new Array[Boolean](Width)
+    try {
+      for (_ <- 1 to iters) {
+        val bw = spark.sparkContext.broadcast(w)
+        val (g, s) = try gradient(rows, bw) finally bw.destroy()
+        // a bucket no document has keeps g = 0, so its weight stays 0.0
+        w = w.zip(g).map { case (wb, gb) => round6(wb - step * gb) }
+        seen = s
+      }
+    } finally rows.unpersist()
+    import spark.implicits._
+    (0 until Width).filter(i => seen(i)).map(i => (i - 1, w(i))).toDF("b", "w")
   }
+
+  /** One GD step over the training rows under broadcast weights `bw`:
+    * the dense gradient, and which buckets occur in any row.
+    */
+  private def gradient(rows: RDD[(Double, Array[Int], Array[Double])],
+                       bw: Broadcast[Array[Double]]): (Array[Double], Array[Boolean]) =
+    rows.treeAggregate((new Array[Double](Width), new Array[Boolean](Width)))(
+      (acc, row) => {
+        val (g, seen) = acc
+        val (y, bs, xs) = row
+        val w = bw.value
+        var s = 0.0
+        var k = 0
+        while (k < bs.length) { s += w(bs(k) + 1) * xs(k); k += 1 }
+        val r = 1.0 / (1.0 + StrictMath.exp(-s)) - y
+        k = 0
+        while (k < bs.length) {
+          g(bs(k) + 1) += r * xs(k)
+          seen(bs(k) + 1) = true
+          k += 1
+        }
+        acc
+      },
+      (a, b) => {
+        var i = 0
+        while (i < Width) {
+          a._1(i) += b._1(i)
+          a._2(i) |= b._2(i)
+          i += 1
+        }
+        a
+      })
+
+  /** Spark's `round(v, 6)` on a double: HALF_UP on its shortest decimal form. */
+  private def round6(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Score `df` under trained `weights` — `(idCol, prob)` with prob
     * rounded to 6 decimals; buckets the model never saw contribute 0

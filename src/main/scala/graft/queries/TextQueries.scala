@@ -513,7 +513,7 @@ object TextQueries {
         .orderBy($"slice_a", $"slice_b")
     }),
 
-    // Trained quality gate: hashed-logreg fit INSIDE the engine (3
+    // Trained quality gate: hashed-logreg fit INSIDE the engine (12
     // full-batch GD steps, weights rounded per step so the whole
     // training trajectory replays in any engine), then scored over the
     // corpus. Labels: en vs rest — the classic "looks like the target
