@@ -34,6 +34,23 @@ object Tables {
     s
   }
 
+  /** The local session of every entry point but Bench (Verify, the tools,
+    * the test session): `local[cpus]` with as many shuffle partitions,
+    * the UI off, the UTC session time zone, [[bootstrap]] applied and
+    * WARN logging.
+    */
+  def localSession(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    bootstrap(s)
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Events with `ts` normalized to the canonical nanos-since-epoch
     * BIGINT shape every downstream consumer computes against. The
     * driver-generated parquet has shipped `ts` as both TIMESTAMP(NANOS)

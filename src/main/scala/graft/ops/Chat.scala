@@ -479,11 +479,15 @@ object Chat {
               .unionByName(kw.select(col("__qid2"), col(idCol), contrib.as("__c")))
           }
         // per-question reciprocal-rank fusion — the [[Keyword.rrfFuse]]
-        // algebra with the qid added to every key (same rounding, same
-        // rank tiebreak), so batch ≡ per-question bit for bit
+        // arithmetic with the qid added to every key: the same
+        // contributions, ranked on the same `Tables.micros` of their sum
+        // with the same id tiebreak as `rrfFuse` and the per-question
+        // path's `rrfFuseRanked`. An id's sum has at most two terms, one
+        // per leg, and a two-term double sum does not depend on order,
+        // so batch ≡ per-question bit for bit
         legs.groupBy(col("__qid2"), col(idCol))
           .agg(sum(col("__c")).as("__raw"))
-          .select(col("__qid2"), col(idCol), round(col("__raw"), 6).as("__rrf"))
+          .select(col("__qid2"), col(idCol), graft.Tables.micros(col("__raw")).as("__rrf"))
           .withColumn("rank", row_number().over(
             Window.partitionBy(col("__qid2")).orderBy(col("__rrf").desc, col(idCol))))
           .filter(col("rank") <= topK)

@@ -349,7 +349,7 @@ object TextAnalysis {
     * regex/LIKE pays O(|phrases|) per document — [[Gazetteer]]'s
     * Aho–Corasick automaton finds every occurrence of every phrase in
     * ONE pass per document (O(chars + matches), flat in |phrases|;
-    * GazetteerProbe: 200× the dictionary = 0.6× wall). Per doc:
+    * SCALE.md "Gazetteer probe": 200× the dictionary = 0.6× wall). Per doc:
     * `(n_chars, n_matches, n_terms_hit, drop_any, drop_density)` with
     * `drop_density ⇔ 1000·n_matches > maxPerMilleChars·n_chars` —
     * float-free, so both verdicts replay exactly relationally.

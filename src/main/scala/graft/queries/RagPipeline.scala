@@ -530,7 +530,8 @@ object RagPipeline {
          |    FROM kwscore)
          |  WHERE rank <= $FetchK),
          |fused AS (
-         |  SELECT qid, doc_id, round(sum(c), 6) AS rrf FROM (
+         |  SELECT qid, doc_id,
+         |    CAST(floor(sum(c) * 1000000 + 0.5) AS BIGINT) AS rrf FROM (
          |    SELECT qid, doc_id, 1.0 / ($RrfC + rank) AS c FROM vecleg
          |    UNION ALL
          |    SELECT qid, doc_id, 1.0 / ($RrfC + rank) AS c FROM kwleg)

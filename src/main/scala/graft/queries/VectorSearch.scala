@@ -202,8 +202,8 @@ object VectorSearch {
     // scan-IO tier past SQ8); here the coarse cut is corpus-covering,
     // so the result must EQUAL exact knn (shares its oracle) — the
     // pin-to-exact contract of ann_ivf_full_probe. Operating-point
-    // recall vs overfetch is measured in tools.PqProbe / SCALE.md, not
-    // silently shipped.
+    // recall vs overfetch is measured in SCALE.md's "PQ recall sweep
+    // across three fixture regimes" table, not silently shipped.
     "knn_pq_rescore" -> ((s, d) => {
       import s.implicits._
       val qv = queryVec(s, d)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit main: prints the formatted physical plan of selected
   * queries and greps for the scale-relevant properties (pushed filters,
   * broadcast joins, take-ordered top-k, whole-stage codegen spans).
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "8")
-      .getOrCreate()
-    graft.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeHarness.session()
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "filter_project_pushdown", "join_agg_topk", "sort_limit_topk",

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Round-18 optimization instrumentation (guide §1: measure first).
   *
@@ -23,16 +22,9 @@ object OptProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ProbeHarness.session()
     // same warmup as Bench so the first probed query is comparable
-    spark.range(100000).selectExpr("sum(id)").collect()
+    ProbeHarness.warmUp(spark)
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     args.headOption match {

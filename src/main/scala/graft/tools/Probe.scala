@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scratch probe main: drives the public library surface end-to-end —
@@ -10,11 +9,8 @@ import org.apache.spark.sql.functions._
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.ui.enabled", "false").config("spark.sql.shuffle.partitions", "32").getOrCreate()
-    graft.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
+    val spark = ProbeHarness.session()
+    ProbeHarness.warmUp(spark)
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.1")
     val t = sys.env.getOrElse("SPARK_GRAFT_PROBE_T", "0.2").toDouble
 

@@ -3,29 +3,27 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared scaffolding for the round scale probes (not driver-run).
-  *
-  * Every retired `R*Probe` (r9–r17) repeated the same ~40 lines:
-  * local[32] session, codegen warmup, a stage-listener shuffle-bytes
-  * counter, and a min-of-K timer (this sandbox stalls single runs
-  * 10-100× at random, so a single-shot timing is not a signal). Round
-  * 18 consolidated them here: the still-relevant probe suites live in
-  * [[RoundProbe]] behind one entry point, the superseded rounds'
-  * evidence stays in the committed `scaleprobe_*.log` files and
-  * SCALE.md rows, and a new round adds a suite instead of a file.
+/** Shared scaffolding for the tool mains, which are outside the
+  * Verify/Bench contract: the local session, codegen warm-up, a
+  * stage-listener shuffle-bytes counter, and a min-of-K timer (a
+  * shared host stalls single runs 10-100× at random, so a single-shot
+  * timing is not a signal). Probe suites live in [[RoundProbe]] behind
+  * one entry point — a new round adds a suite there, not a main; the
+  * retired one-off probes' evidence stays in the committed
+  * `scaleprobe_*.log` files and SCALE.md rows.
   */
 object ProbeHarness {
   final case class Sample(wall: Double, shuffleMb: Double, rows: Long)
 
-  def session(): SparkSession = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    graft.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(100000).selectExpr("sum(id)").collect()
-    spark
-  }
+  /** [[graft.Tables.localSession]] on `SPARK_GRAFT_CPUS` cores (default
+    * 4, as Verify and Bench), so tool numbers compare with Bench's.
+    */
+  def session(): SparkSession =
+    graft.Tables.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+
+  /** Codegen and class-loading warm-up before the first measured job. */
+  def warmUp(spark: SparkSession): Unit =
+    spark.range(100000).selectExpr("sum(id)").collect(): Unit
 
   private val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
   @volatile private var listenerInstalled = false

@@ -44,6 +44,7 @@ object RoundProbe {
       .getOrElse("r18-ledger16,r18-diff,r18-stratum").split(",").toSeq
     val runs = args.drop(1).headOption.map(_.toInt).getOrElse(2)
     val spark = ProbeHarness.session()
+    ProbeHarness.warmUp(spark)
     ProbeHarness.installShuffleListener(spark)
     def probe(label: String)(f: => Long): Unit =
       ProbeHarness.probe(spark, suites.mkString("+"), label, runs)(f): Unit

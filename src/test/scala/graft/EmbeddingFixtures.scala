@@ -1,11 +1,9 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Deterministic fixtures for the verification tools and specs — NOT part
-  * of the library surface.
-  */
-object Fixtures {
+/** Deterministic embedding fixtures for the specs. */
+object EmbeddingFixtures {
 
   /** A clustered embedding table: `k` gaussian clusters of `perCluster`
     * points each (centers ~ N(0, sep²) per coordinate, points = center +

@@ -220,28 +220,32 @@ class MergeSpec extends AnyFunSuite {
     assert(r2 == 0 && st2.version == st.version)
   }
 
+  private val cdcSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "id LONG, v STRING, seq LONG, deleted BOOLEAN")
+
+  /** One changelog file of `(id, v, seq, deleted)` rows in `cdcSchema`. */
+  private def writeCdcBatch(in: String, name: String,
+                            rows: Seq[(Long, String, Long, Boolean)]): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in, name),
+      rows.map { case (id, v, seq, del) =>
+        s"""{"id":$id,"v":"$v","seq":$seq,"deleted":$del}"""
+      }.mkString("\n"))
+
   test("CDC stream applies last-write-wins upserts and tombstones per micro-batch") {
     val in = java.nio.file.Files.createTempDirectory("cdc-in").toString
     val store = java.nio.file.Files.createTempDirectory("cdc-store").toString + "/t"
     val ckpt = java.nio.file.Files.createTempDirectory("cdc-ckpt").toString
-    def writeBatch(name: String, rows: Seq[(Long, String, Long, Boolean)]): Unit =
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(in, name),
-        rows.map { case (id, v, seq, del) =>
-          s"""{"id":$id,"v":"$v","seq":$seq,"deleted":$del}"""
-        }.mkString("\n"))
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "id LONG, v STRING, seq LONG, deleted BOOLEAN")
     // batch 1: inserts, including an intra-batch replay (id=1 twice,
     // higher seq must win)
-    writeBatch("b1.json", Seq((1L, "stale", 10L, false), (1L, "fresh", 11L, false),
+    writeCdcBatch(in, "b1.json", Seq((1L, "stale", 10L, false), (1L, "fresh", 11L, false),
       (2L, "b", 12L, false), (3L, "c", 13L, false)))
     val q = graft.streaming.IncrementalIngest.startCdc(
-      spark, in, store, schema, "id", "seq", ckpt, deleteFlagCol = Some("deleted"))
+      spark, in, store, cdcSchema, "id", "seq", ckpt, deleteFlagCol = Some("deleted"))
     try {
       q.processAllAvailable()
       assert(rows(store) == Set((1L, "fresh"), (2L, "b"), (3L, "c")))
       // batch 2: update id=2, tombstone id=3, insert id=4
-      writeBatch("b2.json", Seq((2L, "B2", 20L, false), (3L, "", 21L, true),
+      writeCdcBatch(in, "b2.json", Seq((2L, "B2", 20L, false), (3L, "", 21L, true),
         (4L, "d", 22L, false)))
       q.processAllAvailable()
       assert(rows(store) == Set((1L, "fresh"), (2L, "B2"), (4L, "d")))
@@ -251,6 +255,38 @@ class MergeSpec extends AnyFunSuite {
         .select($"id", $"v").as[(Long, String)].collect().toSet
       assert(afterB1 == Set((1L, "fresh"), (2L, "b"), (3L, "c")))
     } finally q.stop()
+  }
+
+  test("CDC stream restarted from its checkpoint applies only the new batch") {
+    val in = java.nio.file.Files.createTempDirectory("cdc-restart-in").toString
+    val store = java.nio.file.Files.createTempDirectory("cdc-restart-store").toString + "/t"
+    val ckpt = java.nio.file.Files.createTempDirectory("cdc-restart-ckpt").toString
+    def start() = graft.streaming.IncrementalIngest.startCdc(
+      spark, in, store, cdcSchema, "id", "seq", ckpt, deleteFlagCol = Some("deleted"))
+    def versions: Seq[Long] = VersionedStore.history(spark, store).map(_.version)
+
+    writeCdcBatch(in, "b1.json", Seq((1L, "a", 10L, false), (2L, "b", 11L, false),
+      (3L, "c", 12L, false)))
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(rows(store) == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    val afterB1 = versions
+
+    val q2 = start()
+    try {
+      // the checkpoint records batch 1 as committed: the restarted query
+      // must not apply it again (a replay would commit a new version)
+      q2.processAllAvailable()
+      assert(versions == afterB1)
+      writeCdcBatch(in, "b2.json", Seq((2L, "B2", 20L, false), (3L, "", 21L, true),
+        (4L, "d", 22L, false)))
+      q2.processAllAvailable()
+      assert(rows(store) == Set((1L, "a"), (2L, "B2"), (4L, "d")))
+    } finally q2.stop()
+    val hist = versions
+    assert(hist.take(afterB1.size) == afterB1)
+    // batch 2 applied once: its upsert and its tombstone, one version each
+    assert(hist.size == afterB1.size + 2, s"history $afterB1 -> $hist")
   }
 
   test("CDC batch with a tied winning sequence fails loudly") {

@@ -508,7 +508,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // (every cluster equally plausible, SCALE.md), here it must be
     // materially high, monotone in nprobe, and exact at full probe.
     import graft.ops.VersionedStore
-    val (df0, centers) = graft.tools.Fixtures.clusteredEmbeddings(
+    val (df0, centers) = EmbeddingFixtures.clusteredEmbeddings(
       spark, k = 8, perCluster = 250, dim = 32)
     val df = df0.persist()
     val table = Files.createTempDirectory("ivf-clustered").toString + "/store"

@@ -13,17 +13,7 @@ import graft.functions.{VectorFunctions, VectorKernels}
 import graft.ops.Similarity
 
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .appName("graft-test")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    Tables.bootstrap(s)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Tables.localSession(4)
   val sf: String = "/root/testdata/sf0.001"
 
   /** Jobs started by `body` on this thread (a local property marks them,
