@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Round-18 optimization instrumentation (guide §1: measure first).
   *
@@ -14,7 +16,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   *    job's wall time and call site, then print a per-job breakdown:
   *    where inside a 5-second lifecycle query the time actually goes
   *    (which action, which store write, which fold), which the SQL-tab
-  *    UI would show if the bench ran with the UI enabled.
+  *    UI would show if the bench ran with the UI enabled. The `==`
+  *    line also counts the generated classes the measured run compiled
+  *    (`compiles=`, `compile_ms=`): a warm run that still compiles is
+  *    missing Spark's code cache.
   */
 object OptProbe {
   private final case class J(id: Int, desc: String, site: String,
@@ -77,10 +82,14 @@ object OptProbe {
             }
           }
           spark.sparkContext.addSparkListener(listener)
+          val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val compileNs0 = CodeGenerator.compileTime
           val t0 = System.nanoTime()
           val err = try { fn(spark, sfDir).count(); None }
             catch { case e: Throwable => Some(e.toString.take(200)) }
           val wall = (System.nanoTime() - t0) / 1e9
+          val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+          val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
           // listener bus is async — give it a beat to drain
           Thread.sleep(400)
           spark.sparkContext.removeSparkListener(listener)
@@ -88,6 +97,7 @@ object OptProbe {
           val js = jobs.values().asScala.toSeq.sortBy(_.id)
           val jobSum = js.filter(_.end > 0).map(j => (j.end - j.start) / 1e9).sum
           println(f"== $n wall=$wall%.3f s jobs=${js.size} jobSum=$jobSum%.3f s" +
+            f" compiles=$compiles compile_ms=$compileMs%.0f" +
             err.map(e => s" ERR=$e").getOrElse(""))
           js.foreach { j =>
             val d = if (j.end > 0) (j.end - j.start) / 1e9 else -1.0

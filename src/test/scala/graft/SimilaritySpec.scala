@@ -3,7 +3,8 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,24 +20,39 @@ object TestSpark {
   /** Jobs started by `body` on this thread (a local property marks them,
     * so a job of any other thread is not counted).
     */
-  def jobsOf[T](body: => T): (T, Int) = {
+  def jobsOf[T](body: => T): (T, Int) = counted(body)((tag, n) => new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (marked(e.properties, tag)) n.incrementAndGet()
+  })
+
+  /** Stages submitted for `body`'s jobs on this thread. A stage whose
+    * output is already there (a shuffle map stage behind a persisted
+    * RDD) is skipped, never submitted, so it is not counted.
+    */
+  def stagesOf[T](body: => T): (T, Int) = counted(body)((tag, n) => new SparkListener {
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      if (marked(e.properties, tag)) n.incrementAndGet()
+  })
+
+  private val Mark = "graft.test.jobs"
+
+  private def marked(p: java.util.Properties, tag: String): Boolean =
+    Option(p).exists(_.getProperty(Mark) == tag)
+
+  private def counted[T](body: => T)(listen: (String, AtomicInteger) => SparkListener): (T, Int) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID().toString
     val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("graft.test.jobs") == tag))
-          n.incrementAndGet()
-    }
+    val listener = listen(tag, n)
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.jobs", tag)
+    sc.setLocalProperty(Mark, tag)
     try {
       val r = body
       ListenerBusDrain(sc)
       (r, n.get)
     } finally {
-      sc.setLocalProperty("graft.test.jobs", null)
+      sc.setLocalProperty(Mark, null)
       sc.removeSparkListener(listener)
     }
   }
