@@ -1,7 +1,12 @@
 package graft.ops
 
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.VectorFunctions
 
@@ -78,44 +83,44 @@ object Dedup {
                           numHashes: Int = 32, bands: Int = 8): DataFrame = {
     val shingled = df.select(col(idCol).as("id"),
         array_sort(wordShingles(col(textCol), n)).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager materialization: the banding self-join scans this twice and
-    // concurrent cache population would compute the shingles twice
-    shingled.count()
-    val banded = bandRowsFromShingled(shingled, "id", "sh", numHashes, bands)
-    // length filter in the bucket join: J ≥ t forces min(|A|,|B|) ≥
-    // t·max(|A|,|B|), so size-incompatible bucket collisions (which the
-    // exact verify would reject anyway) never reach the verify join —
-    // same output, strictly fewer candidate rows through the shuffle
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.id") < col("y.id") &&
-          col("x.sz") >= lit(threshold) * col("y.sz") - lit(1e-9) &&
-          col("y.sz") >= lit(threshold) * col("x.sz") - lit(1e-9))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      .distinct()
-    // candidates are usually few, but a single large duplicate cluster
-    // makes the pair set quadratic in the cluster size — never force a
-    // broadcast (driver collect) here. SHUFFLE_HASH on the array side:
-    // the default sort-merge join would SORT rows carrying the shingle
-    // arrays, and sorting KB-sized variable-length payloads is a
-    // measured 15x CPU cliff (see ngramJaccardPairs); a hash join moves
-    // them exactly once and never sorts them
-    val pairs = cand
-      .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("SHUFFLE_HASH"), "id_a")
-      .join(shingled.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("SHUFFLE_HASH"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      // eager, so the shingle cache can be released now rather than
-      // pinning executor storage until the caller remembers to (the
-      // checkpoint itself is ContextCleaner-managed)
-      .localCheckpoint()
-    shingled.unpersist()
-    pairs
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // eager materialization: the banding self-join scans this twice and
+      // concurrent cache population would compute the shingles twice
+      shingled.count()
+      val banded = bandRowsFromShingled(shingled, "id", "sh", numHashes, bands)
+      // length filter in the bucket join: J ≥ t forces min(|A|,|B|) ≥
+      // t·max(|A|,|B|), so size-incompatible bucket collisions (which the
+      // exact verify would reject anyway) never reach the verify join —
+      // same output, strictly fewer candidate rows through the shuffle
+      val cand = banded.as("x").join(banded.as("y"),
+          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+            col("x.id") < col("y.id") &&
+            col("x.sz") >= lit(threshold) * col("y.sz") - lit(1e-9) &&
+            col("y.sz") >= lit(threshold) * col("x.sz") - lit(1e-9))
+        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
+        .distinct()
+      // candidates are usually few, but a single large duplicate cluster
+      // makes the pair set quadratic in the cluster size — never force a
+      // broadcast (driver collect) here. SHUFFLE_HASH on the array side:
+      // the default sort-merge join would SORT rows carrying the shingle
+      // arrays, and sorting KB-sized variable-length payloads is a
+      // measured 15x CPU cliff (see ngramJaccardPairs); a hash join moves
+      // them exactly once and never sorts them
+      cand
+        .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a"))
+          .hint("SHUFFLE_HASH"), "id_a")
+        .join(shingled.select(col("id").as("id_b"), col("sh").as("sh_b"))
+          .hint("SHUFFLE_HASH"), "id_b")
+        .withColumn("jaccard",
+          graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+        // eager, so the shingle cache can be released now rather than
+        // pinning executor storage until the caller remembers to (the
+        // checkpoint itself is ContextCleaner-managed)
+        .localCheckpoint()
+    } finally shingled.unpersist()
   }
 
   /** Optimal LSH banding (b, r) for a target Jaccard threshold — the
@@ -292,40 +297,41 @@ object Dedup {
           .filter(size(col("sh")) > 0)
     }
     val docs = filtered
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count() // eager: concurrent cache population would shingle twice
-    val inv = docs
-      .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
-      .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
-    val prefix = prefixIndex(inv, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = ppjoinCandidates(prefix, prefix, threshold,
-      col("x.id") < col("y.id"), col("x.id"), col("y.id"))
-    // exact verification on the string arrays; as in minhashNearDupPairs,
-    // never force-broadcast the unbounded candidate set (AQE decides)
-    val pairs = cand
-      // SHUFFLE_HASH: at 1x AQE happily broadcasts this side, but past
-      // the broadcast threshold the default becomes a sort-merge join
-      // that sorts the candidate rows WITH their KB-sized shingle
-      // arrays twice — measured 60x CPU (3915 s vs 256 s hashed) on the
-      // 4x scale probe. Hash joins move the arrays once, sort nothing.
-      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a"))
-        .hint("SHUFFLE_HASH"), "id_a")
-      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
-        .hint("SHUFFLE_HASH"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      // eager: the pair set is tiny relative to the corpus; materializing
-      // it here lets the two heavyweight caches be released immediately
-      // instead of pinning executor storage for the caller's lifetime
-      // (checkpoint blocks are reference-tracked and GC'd by the
-      // ContextCleaner once the returned frame is unreachable)
-      .localCheckpoint()
-    prefix.unpersist()
-    docs.unpersist()
-    pairs
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      docs.count() // eager: concurrent cache population would shingle twice
+      val inv = docs
+        .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
+        .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
+      val prefix = prefixIndex(inv, threshold)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val cand = ppjoinCandidates(prefix, prefix, threshold,
+          col("x.id") < col("y.id"), col("x.id"), col("y.id"))
+        // exact verification on the string arrays; as in minhashNearDupPairs,
+        // never force-broadcast the unbounded candidate set (AQE decides)
+        cand
+          // SHUFFLE_HASH: at 1x AQE happily broadcasts this side, but past
+          // the broadcast threshold the default becomes a sort-merge join
+          // that sorts the candidate rows WITH their KB-sized shingle
+          // arrays twice — measured 60x CPU (3915 s vs 256 s hashed) on the
+          // 4x scale probe. Hash joins move the arrays once, sort nothing.
+          .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a"))
+            .hint("SHUFFLE_HASH"), "id_a")
+          .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
+            .hint("SHUFFLE_HASH"), "id_b")
+          .withColumn("jaccard",
+            graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
+          .filter(col("jaccard") >= threshold)
+          .select(col("id_a"), col("id_b"), col("jaccard"))
+          // eager: the pair set is tiny relative to the corpus; materializing
+          // it here lets the two heavyweight caches be released immediately
+          // instead of pinning executor storage for the caller's lifetime
+          // (checkpoint blocks are reference-tracked and GC'd by the
+          // ContextCleaner once the returned frame is unreachable)
+          .localCheckpoint()
+      } finally prefix.unpersist()
+    } finally docs.unpersist()
   }
 
   /** Cross-corpus exact n-gram Jaccard join: `(id_a, id_b, jaccard)`
@@ -354,31 +360,32 @@ object Dedup {
         .filter(size(col("sh")) > 0)
     val docs = prep(left, leftIdCol, leftTextCol, 0)
       .unionByName(prep(right, rightIdCol, rightTextCol, 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    docs.count() // eager: both the index and the verify read this cache
-    val inv = docs
-      .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
-      .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
-    val prefix = prefixIndex(inv, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cand = ppjoinCandidates(
-      prefix.filter(col("id.side") === 0), prefix.filter(col("id.side") === 1),
-      threshold, lit(true), col("x.id.i"), col("y.id.i"))
-    val pairs = cand
-      .join(docs.filter(col("id.side") === 0)
-        .select(col("id.i").as("id_a"), col("sh").as("sh_a"))
-        .hint("SHUFFLE_HASH"), "id_a")
-      .join(docs.filter(col("id.side") === 1)
-        .select(col("id.i").as("id_b"), col("sh").as("sh_b"))
-        .hint("SHUFFLE_HASH"), "id_b")
-      .withColumn("jaccard",
-        graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .localCheckpoint()
-    prefix.unpersist()
-    docs.unpersist()
-    pairs
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      docs.count() // eager: both the index and the verify read this cache
+      val inv = docs
+        .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
+        .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
+      val prefix = prefixIndex(inv, threshold)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        val cand = ppjoinCandidates(
+          prefix.filter(col("id.side") === 0), prefix.filter(col("id.side") === 1),
+          threshold, lit(true), col("x.id.i"), col("y.id.i"))
+        cand
+          .join(docs.filter(col("id.side") === 0)
+            .select(col("id.i").as("id_a"), col("sh").as("sh_a"))
+            .hint("SHUFFLE_HASH"), "id_a")
+          .join(docs.filter(col("id.side") === 1)
+            .select(col("id.i").as("id_b"), col("sh").as("sh_b"))
+            .hint("SHUFFLE_HASH"), "id_b")
+          .withColumn("jaccard",
+            graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
+          .filter(col("jaccard") >= threshold)
+          .select(col("id_a"), col("id_b"), col("jaccard"))
+          .localCheckpoint()
+      } finally prefix.unpersist()
+    } finally docs.unpersist()
   }
 
   /** Connected components over an undirected near-dup edge list
@@ -388,21 +395,54 @@ object Dedup {
     * convention. The id columns resolve like `col(...)` (so case-
     * insensitively by default). A pair with a null endpoint joins no
     * cluster: it is dropped before the loop, so its other id is in no
-    * component (a [[nearDupSurvivors]] singleton).
+    * component (a [[nearDupSurvivors]] singleton). A self-pair `(a, a)`
+    * alone outputs `(a, a)`.
     *
-    * One loop for every id type: min-label propagation with pointer
-    * jumping, on co-partitioned RDDs of BIGINT ids. Each round every
-    * node adopts the minimum label among itself and its neighbors, then
-    * follows its new label one hop through the previous round's labels
-    * (labels only shrink, so the fixpoint is unchanged), which
-    * compresses long chains to ~O(log diameter) rounds. A round is ONE
-    * job (3 shuffles: neighbor-min combine, the jump rekey, the
-    * repartition back to id) with no per-round planning or codegen; the
-    * DataFrame formulation paid Catalyst analysis + AQE stage scheduling
-    * per round, measured ~10 jobs and ~0.3 s per round on a 1,634-edge
-    * graph whose per-round data work is microseconds. A fixed
-    * HashPartitioner keys every round's shuffle, `reduceByKey` combines
-    * map-side, and a per-round localCheckpoint truncates the lineage.
+    * One loop for every id type, on BIGINT ids, in two parts.
+    *
+    * Local contraction first. The directed edges (both directions of
+    * every pair) are hash-partitioned by destination into the loop's
+    * `nParts` partitions, and each partition runs a union-find over its
+    * edges whose root is always the smallest id. When the graph fits one
+    * loop partition (fewer than 2¹⁶ directed edges, or fewer than 2²⁰
+    * under one shuffle partition), that union-find saw every edge: its
+    * roots are the labels, and no block is built and no round runs.
+    * Otherwise the loop runs on the contracted graph, where every node
+    * links both ways to the min node of each of its local components:
+    * the same components with the same min ids. A node's own partition
+    * holds all its edges, so its init label — the min over itself and
+    * its contracted neighbors — is already at most its min neighbor.
+    *
+    * On the contracted graph each round does min-label propagation with
+    * pointer jumping: every node adopts the minimum label among itself
+    * and its neighbors, then follows its new label one hop through the
+    * previous round's labels (labels only shrink, so the fixpoint is
+    * unchanged), which compresses a chain whose ids follow it to
+    * ~O(log diameter) rounds; a long chain in hash order of its ids still
+    * takes hundreds. A round is ONE job with no per-round planning or
+    * codegen: three `partitionBy` shuffles (neighbor-min to each source
+    * node's owner, the jump request to each label's owner, the answer
+    * back) between `zipPartitions` steps over co-partitioned blocks, and
+    * a localCheckpoint of the new labels that truncates the lineage.
+    *
+    * Every partition is one primitive block, not a stream of records:
+    * its contracted edges as a CSR adjacency of `Array[Long]`/`Array[Int]`
+    * and its labels as `(ids, labels)` long arrays, and every message
+    * crosses a shuffle as one `(partition, (keys, values))` chunk per
+    * target partition, min-combined in the map task. So no cogroup, no
+    * aggregator map and no per-record size tracking is left in the loop.
+    * The price: from the contraction on, a loop partition is held whole
+    * in memory, never streamed or spilled by the loop (a persisted block
+    * may still go to disk whole). Its raw directed edges cost 16 bytes
+    * each, and about four times that while the union-find runs (the
+    * gathered chunks, their concatenation, the sorted node set); its
+    * block costs at most 24 bytes per contracted edge, and the
+    * contraction emits fewer than two edges per node of a partition's
+    * local graph. The `1 + (nEdges >> 20)` partition floor keeps the raw
+    * edges near 2²⁰, about 16 MB, per loop partition (a hub's skew
+    * aside). Before that, the input pairs are read and persisted in
+    * blocks of at most 2¹⁶ pairs (1 MB), whatever the size of the
+    * caller's partitions, so that persist spills block by block.
     *
     * BIGINT ids enter the loop as they are. Any other id type is first
     * encoded into BIGINT in Spark's own ordering for that type: the
@@ -412,9 +452,9 @@ object Dedup {
     * order, so the loop's min label is the min id and the round count is
     * the BIGINT one. Codes that ignore the order (`zipWithUniqueId`, the
     * distinct's hash order) lose both: the representative is no longer
-    * the min id, and a 10⁴-node string chain no longer converges in 20
-    * rounds. The order is never taken on the driver, where Java's UTF-16
-    * string order differs from Spark's UTF-8 byte order.
+    * the min id, and a long string chain no longer converges in the
+    * BIGINT round count. The order is never taken on the driver, where
+    * Java's UTF-16 string order differs from Spark's UTF-8 byte order.
     *
     * The convergence test reads a LongAccumulator stamped where a
     * neighbor-min strictly lowers a label. Updates from re-executed
@@ -422,6 +462,8 @@ object Dedup {
     * exact and an overcount merely runs one extra no-op round.
     * Partially-converged labels would silently keep extra duplicates in
     * [[nearDupSurvivors]], so exhausting `maxIters` throws instead.
+    * The RDDs the loop persists are released when it returns or throws,
+    * and its label checkpoints too when it throws.
     */
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxIters: Int = 50): DataFrame = {
@@ -440,8 +482,17 @@ object Dedup {
     val encoded = edges.join(byId("a"), "a").join(byId("b"), "b")
       .select(col("a_code"), col("b_code"))
     def byCode(c: String) = codes.select(col("code").as(c), col("id").as(s"${c}_id"))
-    minLabelLoop(encoded, maxIters)
-      .join(byCode("id"), "id").join(byCode("component"), "component")
+    val labels = try minLabelLoop(encoded, maxIters) catch {
+      case t: Throwable =>
+        // the returned plan would read the codes' checkpoint; a failed
+        // loop releases it
+        codes.queryExecution.logical.foreach {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist()
+          case _ =>
+        }
+        throw t
+    }
+    labels.join(byCode("id"), "id").join(byCode("component"), "component")
       .select(col("id_id").as("id"), col("component_id").as("component"))
   }
 
@@ -449,72 +500,242 @@ object Dedup {
   private def minLabelLoop(pairs: DataFrame, maxIters: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // keyed by dst: each round's message to src is label(dst); the graph
-    // is symmetric (both directions emitted), so per-node min-neighbor
-    // init reads off the same keying
-    val raw = pairs.as[(Long, Long)]
-      .rdd
-      .mapPartitions(_.flatMap { case (a, b) => Iterator((a, b), (b, a)) },
-        preservesPartitioning = false)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // LOOP partition count derived from the MEASURED edge count, not the
-    // session's shuffle setting (guide §2.2 fewer-larger partitions):
-    // every round pays task-scheduling per partition ~16 times, so a
-    // 1,634-edge graph must not shuffle into 32 partitions per round
-    // (measured 0.2-0.3 s/round of pure scheduling), while a billions-
-    // of-edges graph keeps the cluster's configured width. The 64Ki
-    // rows-per-partition floor interpolates smoothly between the two.
-    val nEdges = raw.count()
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val nParts = math.max(
-      math.min(shufflePartitions.toLong, 1L + (nEdges >> 16)),
-      1L + (nEdges >> 20)).toInt
-    val part = new org.apache.spark.HashPartitioner(nParts)
-    val edgesByDst = raw
-      .partitionBy(part)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // init = min(id, min neighbor), co-partitioned with edges
-    var labels = edgesByDst
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .mapPartitions(_.map { case (id, nbr) => (id, math.min(id, nbr)) },
-        preservesPartitioning = true)
-      .localCheckpoint()
-    labels.count(): Unit
-    // edgesByDst is materialized now; the loop never reads raw again
-    raw.unpersist()
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val acc = spark.sparkContext.longAccumulator(s"cc-changed-$it")
-      // neighbor-min: co-partitioned narrow join, then one combined
-      // shuffle keyed on the receiving node
-      val nbrMin = edgesByDst.join(labels)
-        .map { case (_, (src, c)) => (src, c) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      // adopt the smaller label; stamp strict improvements
-      val propagated = labels.leftOuterJoin(nbrMin)
-        .mapPartitions(_.map { case (id, (comp, nbrOpt)) =>
-          val nbr = nbrOpt.getOrElse(comp)
-          if (nbr < comp) acc.add(1L)
-          (id, math.min(comp, nbr))
-        }, preservesPartitioning = true)
-      // pointer jump through the PREVIOUS round's labels
-      labels = propagated
-        .map { case (id, comp) => (comp, id) }
-        .leftOuterJoin(labels, part)
-        .map { case (comp, (id, ccOpt)) => (id, ccOpt.getOrElse(comp)) }
+    // the RDDs this call persists, released on the way out, when a job
+    // fails too; and its label checkpoints, released only when it fails
+    // (unpersisting a local checkpoint logs a warning, so a returned loop
+    // leaves its earlier rounds' labels to Spark's ContextCleaner)
+    val held = ArrayBuffer.empty[RDD[_]]
+    def hold[T](r: RDD[T]): RDD[T] = { held += r; r }
+    val checkpoints = ArrayBuffer.empty[RDD[_]]
+    def checkpoint[T](r: RDD[T]): RDD[T] = { checkpoints += r; r.localCheckpoint() }
+    try {
+      // the pairs as (a[], b[]) blocks of at most RawBlock pairs, so the
+      // persist stores and spills them block by block
+      val raw = hold(pairs.queryExecution.toRdd
+        .mapPartitions { rows =>
+          Iterator.continually {
+            val (a, b) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+            var n = 0
+            while (n < RawBlock && rows.hasNext) {
+              val r = rows.next()
+              a += r.getLong(0); b += r.getLong(1)
+              n += 1
+            }
+            (a.result(), b.result())
+          }.takeWhile(_._1.nonEmpty)
+        }
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      // LOOP partition count derived from the MEASURED directed edge
+      // count, not the session's shuffle setting (guide §2.2 fewer-larger
+      // partitions): every round pays task-scheduling per partition, so a
+      // 1,634-edge graph must not shuffle into 32 partitions per round
+      // (measured 0.2-0.3 s/round of pure scheduling), while a billions-
+      // of-edges graph keeps the cluster's configured width. The 64Ki
+      // rows-per-partition floor interpolates smoothly between the two.
+      val nEdges = 2 * raw.map(_._1.length.toLong).fold(0L)(_ + _)
+      val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val nParts = math.max(
+        math.min(shufflePartitions.toLong, 1L + (nEdges >> 16)),
+        1L + (nEdges >> 20)).toInt
+      val part = new HashPartitioner(nParts)
+      // (ids, local roots) of each loop partition's union-find
+      val roots = raw
+        .flatMap { case (a, b) => chunks(a ++ b, b ++ a, part) }
         .partitionBy(part)
-        .localCheckpoint()
+        .mapPartitions(cs => Iterator(unionFind(gather(cs))), preservesPartitioning = true)
+      // the contracted graph: every node linked both ways to its local
+      // root, the root to itself (so a lone self-pair keeps its node)
+      lazy val blocks = hold(roots
+        .flatMap { case (ids, root) =>
+          val child = ids.indices.filter(i => root(i) != ids(i)).toArray
+          chunks(ids ++ child.map(root), root ++ child.map(ids), part)
+        }
+        .partitionBy(part)
+        .mapPartitions(cs => Iterator(CcBlock(gather(cs))), preservesPartitioning = true)
+        .persist(StorageLevel.MEMORY_AND_DISK))
+      // one partition's union-find saw every edge: its roots are final
+      var labels = checkpoint(
+        if (nParts == 1) roots else blocks.map(b => (b.nodes, b.initLabels)))
       labels.count(): Unit
-      changed = acc.value
-      it += 1
+      var changed = if (nParts == 1) 0L else 1L
+      var it = 0
+      while (changed > 0 && it < maxIters) {
+        val acc = spark.sparkContext.longAccumulator(s"cc-changed-$it")
+        val prev = labels
+        // neighbor-min, combined per source node in the map task
+        val nbrMin = blocks.zipPartitions(prev) { (bs, ls) =>
+          val b = bs.next()
+          chunks(b.srcs, b.nbrMin(ls.next()._2), part)
+        }.partitionBy(part)
+        // adopt the smaller label, stamp strict improvements, and ask the
+        // owner of each adopted label for that label's previous label
+        val asks = prev.zipPartitions(nbrMin) { (ls, ms) =>
+          val (ids, lab) = ls.next()
+          val (ks, vs) = gather(ms)
+          val adopted = lab.clone()
+          var j = 0
+          while (j < ks.length) {
+            val i = java.util.Arrays.binarySearch(ids, ks(j))
+            if (vs(j) < adopted(i)) adopted(i) = vs(j)
+            j += 1
+          }
+          acc.add(adopted.indices.count(i => adopted(i) < lab(i)).toLong)
+          chunks(adopted, ids, part)
+        }.partitionBy(part)
+        // pointer jump through the PREVIOUS round's labels
+        val answers = prev.zipPartitions(asks) { (ls, as) =>
+          val (ids, lab) = ls.next()
+          val (cs, ns) = gather(as)
+          chunks(ns, cs.map(c => lab(java.util.Arrays.binarySearch(ids, c))), part)
+        }.partitionBy(part)
+        labels = checkpoint(prev.zipPartitions(answers) { (ls, as) =>
+          val ids = ls.next()._1
+          val (ns, next) = gather(as)
+          val out = new Array[Long](ids.length)
+          var j = 0
+          while (j < ns.length) {
+            out(java.util.Arrays.binarySearch(ids, ns(j))) = next(j)
+            j += 1
+          }
+          Iterator((ids, out))
+        })
+        labels.count(): Unit
+        changed = acc.value
+        it += 1
+      }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge after $it rounds " +
+            s"($changed labels still changing); raise maxIters")
+      labels.flatMap { case (ids, lab) => ids.iterator.zip(lab.iterator) }
+        .toDF("id", "component")
+    } catch {
+      case t: Throwable => checkpoints.foreach(_.unpersist()); throw t
+    } finally held.foreach(_.unpersist())
+  }
+
+  /** Pairs per block of the loop's input persist: 1 MB of pairs. */
+  private val RawBlock = 1 << 16
+
+  /** `(keys(i), vals(i))` bucketed by the loop partition that owns each
+    * key: one `(partition, (keys, vals))` chunk per non-empty bucket. */
+  private def chunks(keys: Array[Long], vals: Array[Long],
+                     part: Partitioner): Iterator[(Int, (Array[Long], Array[Long]))] = {
+    val nParts = part.numPartitions
+    val to = keys.map(part.getPartition(_))
+    val n = new Array[Int](nParts)
+    to.foreach(p => n(p) += 1)
+    val ks = n.map(new Array[Long](_))
+    val vs = n.map(new Array[Long](_))
+    java.util.Arrays.fill(n, 0)
+    var i = 0
+    while (i < keys.length) {
+      val p = to(i)
+      ks(p)(n(p)) = keys(i)
+      vs(p)(n(p)) = vals(i)
+      n(p) += 1
+      i += 1
     }
-    edgesByDst.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge after $it rounds " +
-          s"($changed labels still changing); raise maxIters")
-    labels.toDF("id", "component")
+    (0 until nParts).iterator.filter(ks(_).nonEmpty).map(p => (p, (ks(p), vs(p))))
+  }
+
+  /** The chunks that reached one partition, concatenated. */
+  private def gather(cs: Iterator[(Int, (Array[Long], Array[Long]))]): (Array[Long], Array[Long]) = {
+    val (ks, vs) = cs.map(_._2).toArray.unzip
+    (Array.concat(ks.toIndexedSeq: _*), Array.concat(vs.toIndexedSeq: _*))
+  }
+
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val s = xs.clone()
+    java.util.Arrays.sort(s)
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      if (n == 0 || s(i) != s(n - 1)) { s(n) = s(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(s, n)
+  }
+
+  /** Local union-find over one partition's directed edges `(dst, src)`,
+    * rooted at the smallest id: `(ids, roots)`, the partition's nodes
+    * sorted and each node's local root. */
+  private def unionFind(edges: (Array[Long], Array[Long])): (Array[Long], Array[Long]) = {
+    val (dst, src) = edges
+    val ids = distinctSorted(dst ++ src)
+    val parent = Array.range(0, ids.length)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var e = 0
+    while (e < dst.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, dst(e)))
+      val b = find(java.util.Arrays.binarySearch(ids, src(e)))
+      // ids are sorted, so the smaller index is the smaller id
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      e += 1
+    }
+    (ids, Array.tabulate(ids.length)(i => ids(find(i))))
+  }
+
+  /** One loop partition's contracted edges `(dst, src)`: `nodes` are the
+    * distinct destinations (the nodes the partition owns), sorted, and
+    * `adj(start(s) until start(s + 1))` index the nodes that source
+    * `srcs(s)` links to. */
+  private final case class CcBlock(nodes: Array[Long], srcs: Array[Long],
+                                   start: Array[Int], adj: Array[Int]) {
+    /** min(id, min neighbor) of every node */
+    def initLabels: Array[Long] = {
+      val out = nodes.clone()
+      var s = 0
+      while (s < srcs.length) {
+        var k = start(s)
+        while (k < start(s + 1)) {
+          if (srcs(s) < out(adj(k))) out(adj(k)) = srcs(s)
+          k += 1
+        }
+        s += 1
+      }
+      out
+    }
+
+    /** the min label over each source node's neighbors here */
+    def nbrMin(labels: Array[Long]): Array[Long] = {
+      val out = new Array[Long](srcs.length)
+      var s = 0
+      while (s < srcs.length) {
+        var m = Long.MaxValue
+        var k = start(s)
+        while (k < start(s + 1)) { m = math.min(m, labels(adj(k))); k += 1 }
+        out(s) = m
+        s += 1
+      }
+      out
+    }
+  }
+
+  private object CcBlock {
+    def apply(edges: (Array[Long], Array[Long])): CcBlock = {
+      val (dst, src) = edges
+      val nodes = distinctSorted(dst)
+      val srcs = distinctSorted(src)
+      val si = src.map(java.util.Arrays.binarySearch(srcs, _))
+      val start = new Array[Int](srcs.length + 1)
+      si.foreach(s => start(s + 1) += 1)
+      var s = 0
+      while (s < srcs.length) { start(s + 1) += start(s); s += 1 }
+      val fill = start.clone()
+      val adj = new Array[Int](dst.length)
+      var e = 0
+      while (e < dst.length) {
+        adj(fill(si(e))) = java.util.Arrays.binarySearch(nodes, dst(e))
+        fill(si(e)) += 1
+        e += 1
+      }
+      CcBlock(nodes, srcs, start, adj)
+    }
   }
 
   /** Near-dup survivors: drop every document whose component

@@ -256,19 +256,17 @@ class DedupSpec extends AnyFunSuite {
 
   test("connected components converge in O(log n) rounds on a 10^4-node path graph") {
     // the adversarial worst case for plain min-label propagation: one
-    // chain of 10,000 nodes (diameter 9,999). Pointer jumping through the
-    // previous round's labels must compress it in ~log2(n) rounds —
-    // maxIters = 20 IS the round-count assertion, because
-    // connectedComponents now throws when it exhausts maxIters
-    // unconverged.
+    // chain of 10,000 nodes (diameter 9,999). Its 19,998 directed edges
+    // fit one loop partition, so the local union-find solves it before
+    // any round; the 10^5-node case below needs the rounds.
+    // connectedComponents throws when it exhausts maxIters unconverged.
     val n = 10000
     val pairs = spark.range(n - 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
     val comp = Dedup.connectedComponents(pairs, maxIters = 20)
     assert(comp.count() == n)
     assert(comp.filter(col("component") =!= 0).count() == 0, "single chain: every node labels to 0")
-    // the same chain over STRING ids: the encoding must keep the id order
-    // for the round bound to hold (codes in any other order do not
-    // converge in 20 rounds)
+    // the same chain over STRING ids: the encoding keeps the id order,
+    // so the representative is the min id
     val strPairs = pairs.select(format_string("%05d", col("id_a")).as("id_a"),
       format_string("%05d", col("id_b")).as("id_b"))
     val strComp = Dedup.connectedComponents(strPairs, maxIters = 20)
@@ -277,13 +275,135 @@ class DedupSpec extends AnyFunSuite {
       "single chain: every node labels to 00000")
   }
 
+  test("connected components: a 10^5-node chain over 4 loop partitions converges within 20 rounds") {
+    // 2·(10^5 − 1) directed edges make 1 + (nEdges >> 16) = 4 loop
+    // partitions, so the local contraction leaves the chain to the
+    // rounds; maxIters = 20 is the round-count assertion
+    val n = 100000
+    val pairs = spark.range(n - 1).select(col("id").as("id_a"), (col("id") + 1).as("id_b"))
+    val comp = Dedup.connectedComponents(pairs, maxIters = 20)
+    assert(comp.count() == n)
+    assert(comp.filter(col("component") =!= 0).count() == 0, "single chain: every node labels to 0")
+    // over STRING ids the encoding must keep the id order for the round
+    // bound to hold (codes in any other order do not converge in 20)
+    val strPairs = pairs.select(format_string("%06d", col("id_a")).as("id_a"),
+      format_string("%06d", col("id_b")).as("id_b"))
+    val strComp = Dedup.connectedComponents(strPairs, maxIters = 20)
+    assert(strComp.count() == n)
+    assert(strComp.filter(col("component") =!= "000000").count() == 0,
+      "single chain: every node labels to 000000")
+  }
+
+  test("connected components equal a driver-side union-find at 1 and 4 loop partitions, BIGINT and STRING ids") {
+    val rnd = new scala.util.Random(20261019L)
+    val extremes = Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, Long.MaxValue - 1, Long.MaxValue)
+    // an order-preserving string form of a Long: the unsigned hex of the
+    // sign-flipped value, so Spark's string min is the Long min
+    def str(id: Long): String = f"${id ^ Long.MinValue}%016x"
+    // about 1,800 pairs make one loop partition; about 120,000 make
+    // 2.4·10^5 directed edges and so 4 (the session has 4 shuffle
+    // partitions), with a giant component that needs rounds
+    for (nPairs <- Seq(1500, 100000)) {
+      val pool = extremes ++ Seq.fill(nPairs * 3 / 2)(rnd.nextLong() >> rnd.nextInt(60))
+      def pick(): Long = pool(rnd.nextInt(pool.length))
+      val base = Seq.fill(nPairs)((pick(), pick()))
+      // duplicates, reversed pairs, self-pairs on paired nodes, and one
+      // node whose only pair is a self-pair
+      val lone = 4242424242L
+      val pairs = base ++ base.take(nPairs / 10) ++ base.take(nPairs / 10).map(_.swap) ++
+        base.take(20).map(p => (p._1, p._1)) ++ extremes.zip(extremes.reverse) :+ ((lone, lone))
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((a, b) <- pairs) {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val want = parent.keys.toSeq.map(id => id -> find(id)).toMap
+      assert(want(lone) == lone)
+      val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"), maxIters = 20)
+        .as[(Long, Long)].collect()
+      assert(got.length == want.size, s"$nPairs pairs: one row per node")
+      assert(got.toMap == want, s"$nPairs pairs")
+      val strGot = Dedup.connectedComponents(
+          pairs.map { case (a, b) => (str(a), str(b)) }.toDF("id_a", "id_b"), maxIters = 20)
+        .as[(String, String)].collect()
+      assert(strGot.toMap == want.map { case (id, c) => str(id) -> str(c) }, s"$nPairs STRING pairs")
+    }
+  }
+
+  test("job budget: BIGINT connected components on a 2,000-node chain") {
+    // 14 jobs before the local contraction (the edge count, the init, 11
+    // rounds and the collect); the contraction solves a one-partition
+    // graph outright, leaving the edge count, the init and the collect
+    val pairs = (0 until 1999).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
+    val (comp, jobs) = jobsOf(Dedup.connectedComponents(pairs, maxIters = 20).collect())
+    assert(comp.length == 2000 && comp.forall(_.getLong(1) == 0L))
+    assert(jobs <= 3, s"BIGINT CC ran $jobs jobs (budget 3)")
+  }
+
   test("job budget: string-id connected components on a 2,000-node chain") {
     // 79 jobs at the Catalyst loop this replaced, 21 through the encoded
-    // RDD loop; the count does not depend on the machine
+    // RDD loop, 10 after the local contraction; the count does not
+    // depend on the machine
     val pairs = (0 until 1999).map(i => (f"$i%04d", f"${i + 1}%04d")).toDF("id_a", "id_b")
     val (comp, jobs) = jobsOf(Dedup.connectedComponents(pairs, maxIters = 20).collect())
     assert(comp.length == 2000 && comp.forall(_.getString(1) == "0000"))
-    assert(jobs <= 21, s"string-id CC ran $jobs jobs (budget 21)")
+    assert(jobs <= 10, s"string-id CC ran $jobs jobs (budget 10)")
+  }
+
+  test("connected components and the n-gram/MinHash pair builders release persisted data when a job fails") {
+    val sc = spark.sparkContext
+    val boom = udf((s: String) => if (s == "boom") throw new IllegalStateException("boom") else s)
+    // over a range, not a local relation, which the optimizer would
+    // evaluate while planning: here the job that materializes fails.
+    // Each call gets its own ids, so a cache one call leaves cannot
+    // stand in for another call's.
+    val texts = array(lit("a b c d"), lit("boom"), lit("a b c e"))
+    def docs(from: Long) = spark.range(from, from + 3).select(col("id"),
+      boom(element_at(texts, (col("id") - from + 1).cast("int"))).as("text"))
+    val boomId = udf((x: Long) => if (x == 3L) throw new IllegalStateException("boom") else x)
+    val pairs = spark.range(2).select(boomId(col("id") * 2 + 1).as("id_a"), (col("id") * 2 + 2).as("id_b"))
+    val calls = Seq[(String, () => Any)](
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
+      "minhashNearDupPairs" -> (() => Dedup.minhashNearDupPairs(docs(10), "id", "text", 0.5)),
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs(20), "id", "text", 0.5)),
+      "ngramJaccardJoin" -> (() =>
+        Dedup.ngramJaccardJoin(docs(30), "id", "text", docs(40), "id", "text", 0.5)))
+    val leaks = calls.map { case (name, call) =>
+      val (rdds, entries) = (sc.getPersistentRDDs.keySet, org.apache.spark.sql.CachedEntries(spark))
+      val e = intercept[Exception](call())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("boom"))), s"$name: $e")
+      (name, (sc.getPersistentRDDs.keySet -- rdds).size,
+        org.apache.spark.sql.CachedEntries(spark) - entries)
+    }
+    assert(leaks.forall(l => l._2 == 0 && l._3 == 0),
+      s"(call, persisted RDDs, cached Datasets) left behind: $leaks")
+  }
+
+  test("connected components release persisted data when the loop fails after its first job") {
+    // a 40,000-node chain makes 2 loop partitions, so the loop persists
+    // its input blocks, the contracted blocks and the labels of each
+    // round before maxIters = 1 runs out. The ids are hashed: on ids
+    // 0, 1, 2, … the even partition holds every edge of the chain and its
+    // union-find alone solves it.
+    val sc = spark.sparkContext
+    val n = 40000
+    val pairs = spark.range(n - 1)
+      .select(xxhash64(col("id")).as("id_a"), xxhash64(col("id") + 1).as("id_b"))
+    val strPairs = pairs.select(col("id_a").cast("string").as("id_a"),
+      col("id_b").cast("string").as("id_b"))
+    for ((name, in) <- Seq("BIGINT" -> pairs, "STRING" -> strPairs)) {
+      val (rdds, entries) = (sc.getPersistentRDDs.keySet, org.apache.spark.sql.CachedEntries(spark))
+      val e = intercept[IllegalStateException](Dedup.connectedComponents(in, maxIters = 1))
+      assert(e.getMessage.contains("did not converge after 1 rounds"), s"$name: $e")
+      val left = (sc.getPersistentRDDs.keySet -- rdds).size
+      assert(left == 0 && org.apache.spark.sql.CachedEntries(spark) == entries,
+        s"$name: $left persisted RDDs left behind")
+    }
   }
 
   test("simhash banded pairs equal brute-force all-pairs at the pigeonhole-complete threshold") {
