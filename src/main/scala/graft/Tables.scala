@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Parquet table loaders for the driver-generated TPC-H-ish test data
   * (TESTDATA.md) plus shared numeric-determinism helpers.
@@ -49,6 +50,22 @@ object Tables {
     bootstrap(s)
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` on `df` persisted at MEMORY_AND_DISK and unpersists it
+    * when `body` ends, by return or by exception: the one release rule
+    * for a Dataset pinned because two consumers read it. The pin runs no
+    * job; the body's first action populates it, usually an eager count
+    * before consumers that run concurrently could each compute it. A
+    * result that outlives the pin is materialized inside `body`
+    * (`localCheckpoint`), whose blocks Spark's ContextCleaner frees once
+    * the result is unreachable. `Dataset.persist` itself is not
+    * ContextCleaner-managed: an entry lives in the CacheManager until
+    * `unpersist` or `clearCache`.
+    */
+  def pinned[T](df: DataFrame)(body: DataFrame => T): T = {
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try body(df) finally df.unpersist()
   }
 
   /** Events with `ts` normalized to the canonical nanos-since-epoch

@@ -103,7 +103,7 @@ object Classifier {
           docs.map { case (_, label) => (label, bs, xs) }
         }
       }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK) // an RDD pin, released in the finally below
     var w = new Array[Double](Width)
     var seen = new Array[Boolean](Width)
     try {

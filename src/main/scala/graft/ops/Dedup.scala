@@ -8,6 +8,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.Tables.pinned
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -81,10 +82,8 @@ object Dedup {
   def minhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double, n: Int = 3,
                           numHashes: Int = 32, bands: Int = 8): DataFrame = {
-    val shingled = df.select(col(idCol).as("id"),
-        array_sort(wordShingles(col(textCol), n)).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    pinned(df.select(col(idCol).as("id"),
+        array_sort(wordShingles(col(textCol), n)).as("sh"))) { shingled =>
       // eager materialization: the banding self-join scans this twice and
       // concurrent cache population would compute the shingles twice
       shingled.count()
@@ -116,11 +115,8 @@ object Dedup {
           graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
         .filter(col("jaccard") >= threshold)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-        // eager, so the shingle cache can be released now rather than
-        // pinning executor storage until the caller remembers to (the
-        // checkpoint itself is ContextCleaner-managed)
         .localCheckpoint()
-    } finally shingled.unpersist()
+    }
   }
 
   /** Optimal LSH banding (b, r) for a target Jaccard threshold — the
@@ -183,10 +179,8 @@ object Dedup {
     * Carries `sz` (the document's full shingle count) and `rk` (the
     * shingle's 1-based position in the document's globally-ordered list)
     * so the candidate join can apply the length and positional filters.
-    * Shared with `tools.Probe`'s candidate-count measurement so the
-    * published numbers can never drift from the shipped formula.
     */
-  private[graft] def prefixIndex(inv: DataFrame, threshold: Double): DataFrame = {
+  private def prefixIndex(inv: DataFrame, threshold: Double): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     // docfreq as an unordered whole-partition window over the exploded
     // index itself: one exchange on shingle, replacing the r2
@@ -214,13 +208,12 @@ object Dedup {
     * plain distinct (zero extra exchanges). Epsilons only ever loosen.
     * Within-document hash-collision ties could in principle perturb a
     * position — the same ~|sh|²/2⁶⁵ risk class as the prefix
-    * construction itself. ONE definition shared by [[ngramJaccardPairs]],
-    * [[ngramJaccardJoin]], and `tools.Probe`'s candidate measurement, so
-    * the measured formula can never drift from the shipped one.
+    * construction itself. ONE definition shared by [[ngramJaccardPairs]]
+    * and [[ngramJaccardJoin]].
     */
-  private[graft] def ppjoinCandidates(x: DataFrame, y: DataFrame, threshold: Double,
-                                      extraCond: Column, idA: Column,
-                                      idB: Column): DataFrame = {
+  private def ppjoinCandidates(x: DataFrame, y: DataFrame, threshold: Double,
+                               extraCond: Column, idA: Column,
+                               idB: Column): DataFrame = {
     val tl = lit(threshold)
     x.as("x").join(y.as("y"),
         col("x.shingle") === col("y.shingle") && extraCond &&
@@ -296,16 +289,12 @@ object Dedup {
           .groupBy(col("id")).agg(array_sort(collect_list(col("s"))).as("sh"))
           .filter(size(col("sh")) > 0)
     }
-    val docs = filtered
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    pinned(filtered) { docs =>
       docs.count() // eager: concurrent cache population would shingle twice
       val inv = docs
         .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
         .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
-      val prefix = prefixIndex(inv, threshold)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+      pinned(prefixIndex(inv, threshold)) { prefix =>
         val cand = ppjoinCandidates(prefix, prefix, threshold,
           col("x.id") < col("y.id"), col("x.id"), col("y.id"))
         // exact verification on the string arrays; as in minhashNearDupPairs,
@@ -324,14 +313,9 @@ object Dedup {
             graft.functions.SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
           .filter(col("jaccard") >= threshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
-          // eager: the pair set is tiny relative to the corpus; materializing
-          // it here lets the two heavyweight caches be released immediately
-          // instead of pinning executor storage for the caller's lifetime
-          // (checkpoint blocks are reference-tracked and GC'd by the
-          // ContextCleaner once the returned frame is unreachable)
           .localCheckpoint()
-      } finally prefix.unpersist()
-    } finally docs.unpersist()
+      }
+    }
   }
 
   /** Cross-corpus exact n-gram Jaccard join: `(id_a, id_b, jaccard)`
@@ -358,17 +342,13 @@ object Dedup {
       df.select(struct(lit(side).as("side"), col(idCol).as("i")).as("id"),
           array_sort(wordShingles(col(textCol), n)).as("sh"))
         .filter(size(col("sh")) > 0)
-    val docs = prep(left, leftIdCol, leftTextCol, 0)
-      .unionByName(prep(right, rightIdCol, rightTextCol, 1))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    pinned(prep(left, leftIdCol, leftTextCol, 0)
+        .unionByName(prep(right, rightIdCol, rightTextCol, 1))) { docs =>
       docs.count() // eager: both the index and the verify read this cache
       val inv = docs
         .select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
         .select(col("id"), col("sz"), xxhash64(col("s")).as("shingle"))
-      val prefix = prefixIndex(inv, threshold)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+      pinned(prefixIndex(inv, threshold)) { prefix =>
         val cand = ppjoinCandidates(
           prefix.filter(col("id.side") === 0), prefix.filter(col("id.side") === 1),
           threshold, lit(true), col("x.id.i"), col("y.id.i"))
@@ -384,8 +364,8 @@ object Dedup {
           .filter(col("jaccard") >= threshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
           .localCheckpoint()
-      } finally prefix.unpersist()
-    } finally docs.unpersist()
+      }
+    }
   }
 
   /** Connected components over an undirected near-dup edge list
@@ -500,8 +480,9 @@ object Dedup {
   private def minLabelLoop(pairs: DataFrame, maxIters: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // the RDDs this call persists, released on the way out, when a job
-    // fails too; and its label checkpoints, released only when it fails
+    // the RDDs this call persists (RDD pins, outside Tables.pinned, which
+    // takes a Dataset), released on the way out, when a job fails too;
+    // and its label checkpoints, released only when it fails
     // (unpersisting a local checkpoint logs a warning, so a returned loop
     // leaves its earlier rounds' labels to Spark's ContextCleaner)
     val held = ArrayBuffer.empty[RDD[_]]
@@ -855,25 +836,23 @@ object Dedup {
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val hashed = fingerprints
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    hashed.count() // eager: the banding self-join scans this twice
-    val banded = hashed.select(col("id"), col("h"), posexplode(array(
-        (0 until bands).map(b => shiftright(col("h"), b * width).bitwiseAND(lit(mask))): _*)))
-      .select(col("id"), col("h"), col("pos").as("band"), col("col").as("bv"))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-          col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("x.h").as("h_a"),
-        col("y.id").as("id_b"), col("y.h").as("h_b"))
-      .distinct()
-    val pairs = cand
-      .withColumn("hamming", graft.functions.SimHash64.hamming64(col("h_a"), col("h_b")))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .localCheckpoint() // as in ngramJaccardPairs: release the cache now
-    hashed.unpersist()
-    pairs
+    pinned(fingerprints) { hashed =>
+      hashed.count() // eager: the banding self-join scans this twice
+      val banded = hashed.select(col("id"), col("h"), posexplode(array(
+          (0 until bands).map(b => shiftright(col("h"), b * width).bitwiseAND(lit(mask))): _*)))
+        .select(col("id"), col("h"), col("pos").as("band"), col("col").as("bv"))
+      val cand = banded.as("x").join(banded.as("y"),
+          col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
+            col("x.id") < col("y.id"))
+        .select(col("x.id").as("id_a"), col("x.h").as("h_a"),
+          col("y.id").as("id_b"), col("y.h").as("h_b"))
+        .distinct()
+      cand
+        .withColumn("hamming", graft.functions.SimHash64.hamming64(col("h_a"), col("h_b")))
+        .filter(col("hamming") <= maxHamming)
+        .select(col("id_a"), col("id_b"), col("hamming"))
+        .localCheckpoint()
+    }
   }
 
   /** Test-set decontamination, the flag half: ids of corpus documents
@@ -975,41 +954,42 @@ object Dedup {
     * state, not a literal); the corpus scan + explode stay codegen'd and
     * the UDF boundary costs one virtual call per shingle, repaid by the
     * shuffle it prevents.
+    *
+    * The flagged ids are materialized (`localCheckpoint`) before
+    * returning, so the eval-shingle pin is released inside the call.
     */
   def contaminatedIdsBloom(corpus: DataFrame, idCol: String, textCol: String,
                            evalSet: DataFrame, evalTextCol: String, n: Int = 8,
                            fpp: Double = 0.01): DataFrame = {
     val spark = corpus.sparkSession
-    // persisted: the shingle explode+distinct (a full shuffle of the
-    // eval stream — the expensive side by premise) feeds THREE
-    // consumers — the sizing count, the bloomFilter treeAggregate, and
-    // the exact-verify semi-join. The blocks release via the
-    // ContextCleaner once the returned frame is done (same lifecycle
-    // note as deterministicShuffle's backing RDD).
-    val evalShingles = evalSet
-      .select(explode(wordShingles(col(evalTextCol), n)).as("__s"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one count job over the (already distinct) eval shingles sizes the
-    // filter honestly; an undersized bloom silently degrades to
-    // fpp ≈ 1 and the "map-side cut" stops cutting. An EMPTY eval set
-    // contaminates nothing (and Spark's bloomFilter aggregate NPEs on
-    // zero rows), so short-circuit before building the sketch.
-    val nShingles = evalShingles.count()
-    if (nShingles == 0) {
-      evalShingles.unpersist()
-      return corpus.select(col(idCol)).limit(0)
+    // pinned: the shingle explode+distinct (a full shuffle of the eval
+    // stream — the expensive side by premise) feeds THREE consumers —
+    // the sizing count, the bloomFilter treeAggregate, and the
+    // exact-verify semi-join
+    pinned(evalSet
+        .select(explode(wordShingles(col(evalTextCol), n)).as("__s"))
+        .distinct()) { evalShingles =>
+      // one count job over the (already distinct) eval shingles sizes the
+      // filter honestly; an undersized bloom silently degrades to
+      // fpp ≈ 1 and the "map-side cut" stops cutting. An EMPTY eval set
+      // contaminates nothing (and Spark's bloomFilter aggregate NPEs on
+      // zero rows), so short-circuit before building the sketch.
+      val nShingles = evalShingles.count()
+      if (nShingles == 0) corpus.select(col(idCol)).limit(0)
+      else {
+        val bloom = evalShingles.stat.bloomFilter("__s", nShingles, fpp)
+        val bloomBc = spark.sparkContext.broadcast(bloom)
+        val mightContain = udf { s: String =>
+          s != null && bloomBc.value.mightContainString(s)
+        }
+        corpus
+          .select(col(idCol), explode(wordShingles(col(textCol), n)).as("__s"))
+          .filter(mightContain(col("__s")))
+          .join(evalShingles, Seq("__s"), "left_semi")
+          .select(col(idCol)).distinct()
+          .localCheckpoint()
+      }
     }
-    val bloom = evalShingles.stat.bloomFilter("__s", nShingles, fpp)
-    val bloomBc = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf { s: String =>
-      s != null && bloomBc.value.mightContainString(s)
-    }
-    corpus
-      .select(col(idCol), explode(wordShingles(col(textCol), n)).as("__s"))
-      .filter(mightContain(col("__s")))
-      .join(evalShingles, Seq("__s"), "left_semi")
-      .select(col(idCol)).distinct()
   }
 
   /** Bloom-filter decontamination, the drop half: exactly
@@ -1273,23 +1253,21 @@ object Dedup {
         sequence(lit(0), size(col("__t")) - k),
         i => md5(concat_ws(" ", slice(col("__t"), i + 1, lit(k))).cast("binary")))))
       .toDF(idCol, "__pos0", "__h")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    grams.count(): Unit
-    val dup = grams.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") >= 2)
-      .select(col("__h"))
-    // eager: one row per AFFECTED doc with its covered positions —
-    // small next to the corpus — so the gram cache can be released
-    // before the caller's first action instead of pinning executor
-    // storage (the checkpoint itself is ContextCleaner-managed)
-    val covered = grams.join(dup.hint("SHUFFLE_HASH"), Seq("__h"), "left_semi")
-      .select(col(idCol),
-        explode(sequence(col("__pos0") + 1, col("__pos0") + k)).as("__cpos"))
-      .groupBy(col(idCol))
-      .agg(collect_set(col("__cpos")).as("__cov"))
-      .localCheckpoint()
-    grams.unpersist(): Unit
+    // one row per AFFECTED doc with its covered positions — small next
+    // to the corpus
+    val covered = pinned(grams) { grams =>
+      grams.count(): Unit
+      val dup = grams.groupBy(col("__h"))
+        .agg(count(lit(1)).as("__n"))
+        .filter(col("__n") >= 2)
+        .select(col("__h"))
+      grams.join(dup.hint("SHUFFLE_HASH"), Seq("__h"), "left_semi")
+        .select(col(idCol),
+          explode(sequence(col("__pos0") + 1, col("__pos0") + k)).as("__cpos"))
+        .groupBy(col(idCol))
+        .agg(collect_set(col("__cpos")).as("__cov"))
+        .localCheckpoint()
+    }
     // SHUFFLE_HASH: a sort-merge choice here would SORT rows carrying
     // the full token arrays — the measured 15-60× array-payload cliff
     // (SCALE.md round-5); the hash join exchanges both sides sort-free
@@ -1490,37 +1468,35 @@ object Dedup {
       s"sidecar at $path ($vTok) is stale against " +
         s"$table (v$cur) — run appendToMinhashSidecar first; a stale check " +
         "silently misses near-dups of freshly appended rows")
-    val bShingled = batch.select(col(idCol).as("batch_id"),
-        array_sort(wordShingles(col(textCol), n)).as("sh_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bShingled.count(): Unit
-    val bBands = bandRowsFromShingled(bShingled, "batch_id", "sh_b",
-      numHashes, bands)
-    val sidecar = spark.read.parquet(s"$path/bands")
-    val cand = bBands.as("b").join(sidecar.as("s"),
-        col("b.band") === col("s.band") && col("b.bh") === col("s.bh") &&
-          col("b.sz") >= lit(threshold) * col("s.sz") - lit(1e-9) &&
-          col("s.sz") >= lit(threshold) * col("b.sz") - lit(1e-9))
-      .select(col("b.batch_id"), col("s.id").as("store_id"))
-      .distinct()
-      .localCheckpoint() // bounded: verified candidates, not corpus
-    val store = VersionedStore.read(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    val candStoreSh = store
-      .join(cand.select(col("store_id").as(idCol)).distinct()
-        .hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
-      .select(col(idCol).as("store_id"),
-        array_sort(wordShingles(col(textCol), n)).as("sh_s"))
-    val pairs = cand
-      .join(bShingled.hint("SHUFFLE_HASH"), "batch_id")
-      .join(candStoreSh.hint("SHUFFLE_HASH"), "store_id")
-      .withColumn("jaccard",
-        graft.functions.SetFunctions.jaccardSorted(col("sh_b"), col("sh_s")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("store_id"), col("jaccard"))
-      .localCheckpoint()
-    bShingled.unpersist()
-    pairs
+    pinned(batch.select(col(idCol).as("batch_id"),
+        array_sort(wordShingles(col(textCol), n)).as("sh_b"))) { bShingled =>
+      bShingled.count(): Unit
+      val bBands = bandRowsFromShingled(bShingled, "batch_id", "sh_b",
+        numHashes, bands)
+      val sidecar = spark.read.parquet(s"$path/bands")
+      val cand = bBands.as("b").join(sidecar.as("s"),
+          col("b.band") === col("s.band") && col("b.bh") === col("s.bh") &&
+            col("b.sz") >= lit(threshold) * col("s.sz") - lit(1e-9) &&
+            col("s.sz") >= lit(threshold) * col("b.sz") - lit(1e-9))
+        .select(col("b.batch_id"), col("s.id").as("store_id"))
+        .distinct()
+        .localCheckpoint() // bounded: verified candidates, not corpus
+      val store = VersionedStore.read(spark, table).getOrElse(
+        throw new IllegalStateException(s"$table has no committed state"))
+      val candStoreSh = store
+        .join(cand.select(col("store_id").as(idCol)).distinct()
+          .hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
+        .select(col(idCol).as("store_id"),
+          array_sort(wordShingles(col(textCol), n)).as("sh_s"))
+      cand
+        .join(bShingled.hint("SHUFFLE_HASH"), "batch_id")
+        .join(candStoreSh.hint("SHUFFLE_HASH"), "store_id")
+        .withColumn("jaccard",
+          graft.functions.SetFunctions.jaccardSorted(col("sh_b"), col("sh_s")))
+        .filter(col("jaccard") >= threshold)
+        .select(col("batch_id"), col("store_id"), col("jaccard"))
+        .localCheckpoint()
+    }
   }
 
   // ---- incremental EMBEDDING near-dup: the SRP bucket sidecar ----
@@ -1646,34 +1622,32 @@ object Dedup {
     require(stats(4) == s"v$cur",
       s"SRP sidecar at $path (${stats.lift(4).getOrElse("-")}) is stale against " +
         s"$table (v$cur) — run appendToSrpSidecar first")
-    val bBase = batch.select(col(idCol).as("batch_id"), col(embCol).as("emb_b"))
-      .filter(col("emb_b").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bBase.count(): Unit
-    requireSrpDim(bBase, "emb_b", dim, "arriving batch")
-    val bBuckets = srpBucketRows(bBase, "batch_id", "emb_b", dim, nTables,
-      nBits, seed).withColumnRenamed("id", "batch_id")
-    val sidecar = spark.read.parquet(s"$path/buckets")
-    val cand = bBuckets.as("b").join(sidecar.as("s"),
-        col("b.t") === col("s.t") && col("b.bucket") === col("s.bucket"))
-      .select(col("b.batch_id"), col("s.id").as("store_id"))
-      .distinct()
-      .localCheckpoint()
-    val store = VersionedStore.read(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    val candEmb = store
-      .join(cand.select(col("store_id").as(idCol)).distinct()
-        .hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
-      .select(col(idCol).as("store_id"), col(embCol).as("emb_s"))
-    val pairs = cand
-      .join(bBase.hint("SHUFFLE_HASH"), "batch_id")
-      .join(candEmb.hint("SHUFFLE_HASH"), "store_id")
-      .withColumn("sim", VectorFunctions.cosineSim(col("emb_b"), col("emb_s")))
-      .filter(col("sim") > threshold)
-      .select(col("batch_id"), col("store_id"), col("sim"))
-      .localCheckpoint()
-    bBase.unpersist()
-    pairs
+    pinned(batch.select(col(idCol).as("batch_id"), col(embCol).as("emb_b"))
+        .filter(col("emb_b").isNotNull)) { bBase =>
+      bBase.count(): Unit
+      requireSrpDim(bBase, "emb_b", dim, "arriving batch")
+      val bBuckets = srpBucketRows(bBase, "batch_id", "emb_b", dim, nTables,
+        nBits, seed).withColumnRenamed("id", "batch_id")
+      val sidecar = spark.read.parquet(s"$path/buckets")
+      val cand = bBuckets.as("b").join(sidecar.as("s"),
+          col("b.t") === col("s.t") && col("b.bucket") === col("s.bucket"))
+        .select(col("b.batch_id"), col("s.id").as("store_id"))
+        .distinct()
+        .localCheckpoint()
+      val store = VersionedStore.read(spark, table).getOrElse(
+        throw new IllegalStateException(s"$table has no committed state"))
+      val candEmb = store
+        .join(cand.select(col("store_id").as(idCol)).distinct()
+          .hint("SHUFFLE_HASH"), Seq(idCol), "left_semi")
+        .select(col(idCol).as("store_id"), col(embCol).as("emb_s"))
+      cand
+        .join(bBase.hint("SHUFFLE_HASH"), "batch_id")
+        .join(candEmb.hint("SHUFFLE_HASH"), "store_id")
+        .withColumn("sim", VectorFunctions.cosineSim(col("emb_b"), col("emb_s")))
+        .filter(col("sim") > threshold)
+        .select(col("batch_id"), col("store_id"), col("sim"))
+        .localCheckpoint()
+    }
   }
 
   /** Register the SRP sidecar on the maintenance seam — the second

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.pinned
 import graft.embed.{EmbedText, Embedder}
 
 /** The ingestion pipeline (SURVEY.md §3.2): load → split → metadata ids →
@@ -56,48 +57,51 @@ object Ingest {
           lit("source"), col(idCol).cast("string"),
           lit("start_index"), col("chunk_start").cast("string"),
           lit("chunk_id"), col("chunk_id")).as("metadata"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the split runs exactly once: this count materializes the cache the
-    // dedup pass reads (previously the count re-ran the whole split UDF)
-    val chunksIn = chunks.count()
+    pinned(chunks) { chunks =>
+      // the split runs exactly once: this count materializes the cache the
+      // dedup pass reads (previously the count re-ran the whole split UDF)
+      val chunksIn = chunks.count()
 
-    // P5 exact dedup by content (embedding.py:296-304) — content-keyed id
-    // makes dropDuplicates(id) equivalent to dedup-by-text. The embed
-    // runs through [[embedBatched]]: batches of 500 per partition, one
-    // Embedder.embedBatch (= one throttle token under a
-    // RateLimitedEmbedder) per batch — the reference's quantitative
-    // ingest contract (embedding.py:320-338).
-    val deduped = embedBatched(chunks.dropDuplicates("id"), "text", embedder)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dedupedN = deduped.count()
-    chunks.unpersist()
+      // P5 exact dedup by content (embedding.py:296-304) — content-keyed id
+      // makes dropDuplicates(id) equivalent to dedup-by-text. The embed
+      // runs through [[embedBatched]]: batches of 500 per partition, one
+      // Embedder.embedBatch (= one throttle token under a
+      // RateLimitedEmbedder) per batch — the reference's quantitative
+      // ingest contract (embedding.py:320-338).
+      pinned(embedBatched(chunks.dropDuplicates("id"), "text", embedder)) { deduped =>
+        val dedupedN = deduped.count()
+        // the two pins overlap without nesting: the chunks are released
+        // as soon as the deduped rows hold their data, before the merge
+        // (the outer pin's own release then finds nothing to do)
+        chunks.unpersist()
 
-    // S15 idempotent merge: anti-join against the existing store.
-    val existing = readStore(spark, storeDir, config)
-    // count(*) over parquet decodes no columns — near-metadata cost,
-    // unlike a full post-append table re-read
-    val existingN = existing.map(_.count()).getOrElse(0L)
-    // SHUFFLE_HASH on the store-id side: when the store's id column
-    // outgrows the broadcast threshold (it does — it's the whole corpus)
-    // the default anti-join becomes sort-merge, which sorts the NEW
-    // chunk rows together with their text + embedding payloads — the
-    // same measured payload-sort cliff as the dedup verify joins. The
-    // hash anti-join builds on the bare ids and streams the wide rows.
-    val toAppend = existing match {
-      case Some(st) =>
-        deduped.join(st.select("id").hint("SHUFFLE_HASH"), Seq("id"), "left_anti")
-      case None => deduped
+        // S15 idempotent merge: anti-join against the existing store.
+        val existing = readStore(spark, storeDir, config)
+        // count(*) over parquet decodes no columns — near-metadata cost,
+        // unlike a full post-append table re-read
+        val existingN = existing.map(_.count()).getOrElse(0L)
+        // SHUFFLE_HASH on the store-id side: when the store's id column
+        // outgrows the broadcast threshold (it does — it's the whole corpus)
+        // the default anti-join becomes sort-merge, which sorts the NEW
+        // chunk rows together with their text + embedding payloads — the
+        // same measured payload-sort cliff as the dedup verify joins. The
+        // hash anti-join builds on the bare ids and streams the wide rows.
+        val toAppend = existing match {
+          case Some(st) =>
+            deduped.join(st.select("id").hint("SHUFFLE_HASH"), Seq("id"), "left_anti")
+          case None => deduped
+        }
+        // the append goes through the versioned manifest (atomic publish —
+        // concurrent readers see the old or the new complete table, never a
+        // half-written append), with the count observed on the segment write
+        // itself so the anti-join (a full scan of the store's id column, at
+        // scale) runs once — not count-then-write twice. A no-op re-ingest
+        // publishes nothing.
+        val appendedN = appendRespectingLayout(spark, path, toAppend)
+        writeManifest(spark, storeDir, config)
+        IngestResult(chunksIn, dedupedN, appendedN, existingN + appendedN)
+      }
     }
-    // the append goes through the versioned manifest (atomic publish —
-    // concurrent readers see the old or the new complete table, never a
-    // half-written append), with the count observed on the segment write
-    // itself so the anti-join (a full scan of the store's id column, at
-    // scale) runs once — not count-then-write twice. A no-op re-ingest
-    // publishes nothing.
-    val appendedN = appendRespectingLayout(spark, path, toAppend)
-    writeManifest(spark, storeDir, config)
-    deduped.unpersist()
-    IngestResult(chunksIn, dedupedN, appendedN, existingN + appendedN)
   }
 
   /** S14's quantitative embed contract, engine-side: append an

@@ -220,18 +220,16 @@ object Ivf {
     require(n > 0, "fitAuto needs at least one non-null embedding")
     val k = kForCorpus(n, maxK)
     val trainSize = 256L * k
-    // cached: fit runs 1 init collect + `iters` aggregation actions
+    // pinned: fit runs 1 init collect + `iters` aggregation actions
     // over the training set, and without the cut each would
     // re-materialize the corpus-wide TakeOrdered — O(N) per Lloyd
     // round, the exact cost the sample bound exists to avoid (the
     // Pq.fit sample discipline)
-    val train = (
+    val train =
       if (n <= trainSize) live
       else live.orderBy(xxhash64(col(idCol)).asc, col(idCol))
         .limit(trainSize.toInt)
-    ).cache()
-    try (fit(train, idCol, embCol, k, iters), n)
-    finally { train.unpersist(): Unit }
+    graft.Tables.pinned(train)(t => (fit(t, idCol, embCol, k, iters), n))
   }
 
   /** Deterministic k-means fit. Init: the k rows with smallest

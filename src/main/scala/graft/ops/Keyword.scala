@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Tables.pinned
+
 /** Keyword (lexical) retrieval: corpus-statistics BM25 scoring and
   * reciprocal-rank fusion — the lexical half of hybrid search. The
   * reference retrieves by vector similarity only
@@ -56,48 +58,53 @@ object Keyword {
     * `idf = ln(1 + (N - df + 0.5)/(df + 0.5))`,
     * `score = Σ_t idf_t · tf·(k1+1) / (tf + k1·(1 - b + b·dl/avgdl))`.
     *
-    * Eager: the corpus stats land as driver literals via one action that
-    * also populates the cache of the tokenized projection (id, doclen,
-    * query-term hits — small per row), and the tiny top-k result is
-    * localCheckpoint-materialized so the cache is released before
-    * returning (the [[Dedup.ngramJaccardPairs]] lifecycle).
+    * Eager: the corpus stats land as plan literals ([[withBm25Corpus]])
+    * and the tiny top-k result is localCheckpoint-materialized.
     */
   def bm25(docs: DataFrame, idCol: String, textCol: String, queryTerms: Seq[String],
            k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val base = docs
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__w"))
-      .select(col(idCol), size(col("__w")).cast("long").as("__dl"),
-        filter(col("__w"), t => t.isin(queryTerms: _*)).as("__qw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // avgdl over the WHOLE corpus (docs with zero query-term hits count);
-    // this single action is the one pass over the parquet scan — N and
-    // Σdl come back as literals, so no stats subtree survives in the
-    // returned plan to re-derive the scan
-    val statsRow = base.agg(count(lit(1)), sum(col("__dl"))).head()
-    val nDocs = statsRow.getLong(0)
-    val sumdl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val avgdl = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
-    val tf = base
-      .select(col(idCol), col("__dl"), explode(col("__qw")).as("__term"))
-      .groupBy(col(idCol), col("__dl"), col("__term"))
-      .agg(count(lit(1)).as("__tf"))
-    val df = tf.groupBy(col("__term")).agg(count(lit(1)).as("__df"))
-    val result = tf.join(broadcast(df), "__term")
-      .withColumn("__s",
-        termScore(col("__tf"), col("__dl"), col("__df"), nDocs, avgdl, k1, b))
-      .groupBy(col(idCol))
-      .agg(sum(col("__s")).as("__raw"))
-      // bm25 passes through ln (idf) — transcendental, so round(6) is
-      // the score convention here and at every other bm25 site; exact
-      // integer ratios leave as micros instead
-      .select(col(idCol), round(col("__raw"), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col(idCol))
-      .limit(topK)
-      .localCheckpoint() // topK rows — tiny; lets the cache go now
-    base.unpersist()
-    result
+    withBm25Corpus(docs, idCol, textCol, queryTerms) { (nDocs, avgdl, tf, df) =>
+      tf.join(broadcast(df), "__term")
+        .withColumn("__s",
+          termScore(col("__tf"), col("__dl"), col("__df"), nDocs, avgdl, k1, b))
+        .groupBy(col(idCol))
+        .agg(sum(col("__s")).as("__raw"))
+        // bm25 passes through ln (idf) — transcendental, so round(6) is
+        // the score convention here and at every other bm25 site; exact
+        // integer ratios leave as micros instead
+        .select(col(idCol), round(col("__raw"), 6).as("bm25"))
+        .orderBy(col("bm25").desc, col(idCol))
+        .limit(topK)
+        .localCheckpoint()
+    }
   }
+
+  /** The corpus prelude of [[bm25]] and [[bm25BatchRank]], which differ
+    * only in `terms`: the tokenized projection (id, doclen, hits of
+    * `terms` — small per row) pinned, N and avgdl taken as plan
+    * literals from one stats action that also populates the pin, and
+    * `body` run on (N, avgdl, per-(doc, term) tf, per-term df). avgdl
+    * is over the WHOLE corpus (docs with zero term hits count), and no
+    * stats subtree survives in the result plan to re-derive the scan.
+    */
+  private def withBm25Corpus[T](docs: DataFrame, idCol: String, textCol: String,
+                                terms: Seq[String])(
+      body: (Long, Double, DataFrame, DataFrame) => T): T =
+    pinned(docs
+        .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__w"))
+        .select(col(idCol), size(col("__w")).cast("long").as("__dl"),
+          filter(col("__w"), t => t.isin(terms: _*)).as("__qw"))) { base =>
+      val statsRow = base.agg(count(lit(1)), sum(col("__dl"))).head()
+      val nDocs = statsRow.getLong(0)
+      val sumdl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
+      val avgdl = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
+      val tf = base
+        .select(col(idCol), col("__dl"), explode(col("__qw")).as("__term"))
+        .groupBy(col(idCol), col("__dl"), col("__term"))
+        .agg(count(lit(1)).as("__tf"))
+      body(nDocs, avgdl, tf, tf.groupBy(col("__term")).agg(count(lit(1)).as("__df")))
+    }
 
   /** Positional exact-phrase search: documents containing the
     * `phrase` word sequence contiguously, with occurrence counts and the
@@ -431,27 +438,26 @@ object Keyword {
     */
   private def writePostings(docs: DataFrame, idCol: String, textCol: String,
                             path: String, buckets: Int, mode: String): (Long, Long, Int) = {
-    val toks = docs
-      .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("__w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one action populates the cache and yields the stats totals
-    val statsRow = toks.agg(count(lit(1)), sum(size(col("__w")).cast("long"))).head()
-    val n = statsRow.getLong(0)
-    val sumdl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val bk = if (buckets > 0) buckets else bucketsForCorpus(n)
-    toks.select(col("id"), size(col("__w")).cast("long").as("dl"),
-        explode(col("__w")).as("term"))
-      .groupBy(col("term"), col("id"), col("dl")).agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(bk)).cast("int"))
-      // co-locate each bucket before the Hive-partitioned write: without
-      // this every write task spills a file into every bucket directory —
-      // O(tasks × buckets) small files, a real file-index cost at scale;
-      // with it each bucket is one task's output (one exchange of narrow
-      // posting rows buys a bounded file count)
-      .repartition(col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(s"$path/postings")
-    toks.unpersist()
-    (n, sumdl, bk)
+    pinned(docs.select(col(idCol).as("id"),
+        TextAnalysis.tokens(col(textCol)).as("__w"))) { toks =>
+      // one action populates the cache and yields the stats totals
+      val statsRow = toks.agg(count(lit(1)), sum(size(col("__w")).cast("long"))).head()
+      val n = statsRow.getLong(0)
+      val sumdl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
+      val bk = if (buckets > 0) buckets else bucketsForCorpus(n)
+      toks.select(col("id"), size(col("__w")).cast("long").as("dl"),
+          explode(col("__w")).as("term"))
+        .groupBy(col("term"), col("id"), col("dl")).agg(count(lit(1)).as("tf"))
+        .withColumn("bucket", pmod(xxhash64(col("term")), lit(bk)).cast("int"))
+        // co-locate each bucket before the Hive-partitioned write: without
+        // this every write task spills a file into every bucket directory —
+        // O(tasks × buckets) small files, a real file-index cost at scale;
+        // with it each bucket is one task's output (one exchange of narrow
+        // posting rows buys a bounded file count)
+        .repartition(col("bucket"))
+        .write.mode(mode).partitionBy("bucket").parquet(s"$path/postings")
+      (n, sumdl, bk)
+    }
   }
 
   /** Incremental index maintenance: fold the rows appended to `table`
@@ -730,37 +736,23 @@ object Keyword {
     val allTerms = queryTermsD.select(col(termName)).distinct()
       .collect().map(_.getString(0)).toSeq
     require(allTerms.nonEmpty, "queryTerms must carry at least one (qid, term) pair")
-    val base = docs
-      .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("__w"))
-      .select(col(idCol), size(col("__w")).cast("long").as("__dl"),
-        filter(col("__w"), t => t.isin(allTerms: _*)).as("__qw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val statsRow = base.agg(count(lit(1)), sum(col("__dl"))).head()
-    val nDocs = statsRow.getLong(0)
-    val sumdl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val avgdl = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
-    val tf = base
-      .select(col(idCol), col("__dl"), explode(col("__qw")).as("__term"))
-      .groupBy(col(idCol), col("__dl"), col("__term"))
-      .agg(count(lit(1)).as("__tf"))
-    val df = tf.groupBy(col("__term")).agg(count(lit(1)).as("__df"))
-    val scored = tf.join(broadcast(df), "__term")
-      .join(broadcast(queryTermsD.withColumnRenamed(termName, "__term")), "__term")
-      .withColumn("__s",
-        termScore(col("__tf"), col("__dl"), col("__df"), nDocs, avgdl, k1, b))
-      .groupBy(col(qidName), col(idCol))
-      .agg(sum(col("__s")).as("__raw"))
-      .select(col(qidName).as("__qid"), col(idCol), round(col("__raw"), 6).as("__bm25"))
-    // the shared bounded-rank tail (per-partition top-k heap before the
-    // rank window, exactly the final ordering: rounded score desc, id) —
-    // the rank exchange carries ≤ k×|batch| rows per partition instead
-    // of every matched (question, doc) row
-    val result = Similarity
-      .boundedRank(scored, qidName, idCol, topKPerQuery, "COSINE", "__bm25", "rank")
-      .select(col(qidName), col(idCol), col("rank"))
-      .localCheckpoint() // ≤ topK×|batch| rows; releases the cache now
-    base.unpersist()
-    result
+    withBm25Corpus(docs, idCol, textCol, allTerms) { (nDocs, avgdl, tf, df) =>
+      val scored = tf.join(broadcast(df), "__term")
+        .join(broadcast(queryTermsD.withColumnRenamed(termName, "__term")), "__term")
+        .withColumn("__s",
+          termScore(col("__tf"), col("__dl"), col("__df"), nDocs, avgdl, k1, b))
+        .groupBy(col(qidName), col(idCol))
+        .agg(sum(col("__s")).as("__raw"))
+        .select(col(qidName).as("__qid"), col(idCol), round(col("__raw"), 6).as("__bm25"))
+      // the shared bounded-rank tail (per-partition top-k heap before the
+      // rank window, exactly the final ordering: rounded score desc, id) —
+      // the rank exchange carries ≤ k×|batch| rows per partition instead
+      // of every matched (question, doc) row
+      Similarity
+        .boundedRank(scored, qidName, idCol, topKPerQuery, "COSINE", "__bm25", "rank")
+        .select(col(qidName), col(idCol), col("rank"))
+        .localCheckpoint() // ≤ topK×|batch| rows
+    }
   }
 
   /** Reciprocal-rank fusion (RRF) of independent rankings, in two
@@ -900,19 +892,18 @@ object Keyword {
       .select(col(idCol)).collect().map(_.get(0)).toSeq
     if (fb.isEmpty) return queryTerms
     // ONE tokenize pass: tf per (doc, term) feeds BOTH branches (df and
-    // the feedback tf) — persisted, since the two branches meet in one
+    // the feedback tf) — pinned, since the two branches meet in one
     // plan and would otherwise each re-derive the full corpus explode
-    val tf = docs.select(col(idCol).as("__id"),
+    val added = pinned(docs.select(col(idCol).as("__id"),
         explode(filter(TextAnalysis.tokens(col(textCol)), t => length(t) > 0))
           .as("term"))
-      .groupBy(col("__id"), col("term")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val ftf = tf.filter(col("__id").isin(fb: _*))
-      .groupBy(col("term")).agg(sum(col("tf")).as("ftf"))
-    val nDocs = docs.select(col(idCol)).count()
-    val added = rocchioSelect(ftf, dfreq, nDocs, queryTerms, expandTerms)
-    tf.unpersist()
+      .groupBy(col("__id"), col("term")).agg(count(lit(1)).as("tf"))) { tf =>
+      val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      val ftf = tf.filter(col("__id").isin(fb: _*))
+        .groupBy(col("term")).agg(sum(col("tf")).as("ftf"))
+      val nDocs = docs.select(col(idCol)).count()
+      rocchioSelect(ftf, dfreq, nDocs, queryTerms, expandTerms)
+    }
     queryTerms ++ added
   }
 

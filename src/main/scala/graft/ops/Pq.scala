@@ -77,54 +77,54 @@ object Pq {
           ncent: Int = 16, iters: Int = 2, sampleN: Int = 1 << 16): PqModel = {
     require(m >= 1 && ncent >= 1 && ncent <= 256,
       "ncent must fit a byte code (<= 256)")
-    val sample = df.select(col(idCol), col(embCol))
-      .filter(col(embCol).isNotNull)
-      .orderBy(xxhash64(col(idCol)).asc, col(idCol))
-      .limit(sampleN)
-      .cache()
-    try {
+    graft.Tables.pinned(df.select(col(idCol), col(embCol))
+        .filter(col(embCol).isNotNull)
+        .orderBy(xxhash64(col(idCol)).asc, col(idCol))
+        .limit(sampleN)) { sample =>
       val head = sample.select(col(embCol)).head(1)
-      if (head.isEmpty) return PqModel(Array.empty)
-      val dim = head(0).getSeq[Float](0).length
-      require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-      val dsub = dim / m
-      val initRows = sample
-        .orderBy(xxhash64(col(idCol)).asc, col(idCol)).limit(ncent)
-        .select(col(embCol)).collect()
-        .map(_.getSeq[Float](0).toArray)
-      var books = Array.tabulate(m)(j =>
-        initRows.map(r => r.slice(j * dsub, (j + 1) * dsub)))
-      for (_ <- 0 until iters) {
-        val subs = array((0 until m).map { j =>
-          val sub = slice(col(embCol), j * dsub + 1, dsub)
-          struct(lit(j).as("j"),
-            VectorFunctions.nearestCentroids(sub, books(j), 1)
-              .getItem(0).as("cid"),
-            sub.as("sub"))
-        }: _*)
-        val means = sample.select(explode(subs).as("a"))
-          .groupBy(col("a.j"), col("a.cid"))
-          .agg(graft.functions.VectorMean.vectorMean(col("a.sub"), dsub).as("mean"))
-          .collect()
-        val next = books.map(_.map(identity)) // empty clusters keep centroids
-        means.foreach { r =>
-          val (j, cid) = (r.getInt(0), r.getInt(1))
-          val mvec = r.getSeq[Any](2)
-          val v = new Array[Float](dsub)
-          var i = 0
-          while (i < dsub) {
-            mvec(i) match {
-              case x: java.lang.Double => v(i) = x.toFloat
-              case _ => // null element position keeps 0f (the Ivf.fit rule)
+      if (head.isEmpty) PqModel(Array.empty)
+      else {
+        val dim = head(0).getSeq[Float](0).length
+        require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
+        val dsub = dim / m
+        val initRows = sample
+          .orderBy(xxhash64(col(idCol)).asc, col(idCol)).limit(ncent)
+          .select(col(embCol)).collect()
+          .map(_.getSeq[Float](0).toArray)
+        var books = Array.tabulate(m)(j =>
+          initRows.map(r => r.slice(j * dsub, (j + 1) * dsub)))
+        for (_ <- 0 until iters) {
+          val subs = array((0 until m).map { j =>
+            val sub = slice(col(embCol), j * dsub + 1, dsub)
+            struct(lit(j).as("j"),
+              VectorFunctions.nearestCentroids(sub, books(j), 1)
+                .getItem(0).as("cid"),
+              sub.as("sub"))
+          }: _*)
+          val means = sample.select(explode(subs).as("a"))
+            .groupBy(col("a.j"), col("a.cid"))
+            .agg(graft.functions.VectorMean.vectorMean(col("a.sub"), dsub).as("mean"))
+            .collect()
+          val next = books.map(_.map(identity)) // empty clusters keep centroids
+          means.foreach { r =>
+            val (j, cid) = (r.getInt(0), r.getInt(1))
+            val mvec = r.getSeq[Any](2)
+            val v = new Array[Float](dsub)
+            var i = 0
+            while (i < dsub) {
+              mvec(i) match {
+                case x: java.lang.Double => v(i) = x.toFloat
+                case _ => // null element position keeps 0f (the Ivf.fit rule)
+              }
+              i += 1
             }
-            i += 1
+            next(j)(cid) = v
           }
-          next(j)(cid) = v
+          books = next
         }
-        books = next
+        PqModel(books)
       }
-      PqModel(books)
-    } finally { sample.unpersist(): Unit }
+    }
   }
 
   /** Append the codes column: per subspace, the nearest sub-centroid id

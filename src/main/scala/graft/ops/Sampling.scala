@@ -217,7 +217,8 @@ object Sampling {
     // Persisted so the count job's execution feeds the data pass and
     // later actions instead of re-running the sort's reduce side each
     // time (map-side shuffle output is already reused across jobs, but
-    // the reduce-side sort is not).
+    // the reduce-side sort is not). An RDD pin, not a Tables.pinned
+    // Dataset: the ContextCleaner releases it once the frame is unreachable.
     val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
       Row.fromSeq(r.toSeq :+ (i + 1L))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

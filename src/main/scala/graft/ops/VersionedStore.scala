@@ -757,8 +757,7 @@ object VersionedStore {
                             affected: Seq[String], newData: DataFrame,
                             rowsPerFile: Long, partitionBy: Seq[String],
                             marker: Option[String], op: String): State = {
-    val pinned = newData.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    graft.Tables.pinned(newData) { pinned =>
       val rows = pinned.count()
       val segOpt =
         if (rows == 0) None
@@ -799,7 +798,7 @@ object VersionedStore {
               "Ingest.mergeRespectingLayout / deleteRespectingLayout, which " +
               "derive the live layout from the store's own sidecars.")
       }
-    } finally pinned.unpersist()
+    }
   }
 
   /** Copy-on-write delete BY KEY SET — [[deleteWhere]] for the CDC case

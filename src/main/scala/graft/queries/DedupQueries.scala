@@ -90,7 +90,7 @@ object DedupQueries {
       // after its action; ad-hoc callers must do the same.
       val norm = documents(s, d).select($"doc_id",
         graft.functions.NormalizeText.normalizeText($"text").as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       norm.count(): Unit
       val spanned = Dedup.removeDuplicatedSpans(norm, "doc_id", "text", k = 8)
       val ent = graft.ops.TextAnalysis.charBigramEntropy(norm, "doc_id", "text")

@@ -189,97 +189,90 @@ object RagPipeline {
       // leg the subsequent jobs belong to
       def leg(name: String): Unit =
         s.sparkContext.setJobDescription(s"rag_e2e: $name")
-      val joined = documents(s, d)
-        .join(embeddings(s, d), $"doc_id" === $"vec_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // V5 provenance leg: EVEN qids carry a one-turn history, so the
-      // contextualization gate (history-on ∧ ctx-prompt-set ∧ prior
-      // turns) rewrites their query — deterministically (question +
-      // last turn), so the oracle recomputes the rewritten string, the
-      // lexical-leg terms it feeds, the grading, and the template
-      // answer; ODD qids have no history and the gate declines
-      val qa = joined.filter($"doc_id" < 20)
-        .select($"doc_id".as("qid"),
-          concat(lit("q"), $"doc_id".cast("string"), lit(" "),
-            concat_ws(" ", slice(split(trim($"text"), "\\s+"), 1, 5))).as("question"),
-          $"text".as("reference_answer"), $"lang".as("topic"), $"embedding")
-        .withColumn("hist",
-          when($"qid" % 2 === 0,
-            array(concat(lit("prior turn about "), $"topic")))
-          .otherwise(array().cast("array<string>")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // both pins are released and the leg label cleared however the
-      // body ends: an exception mid-lifecycle must not leak cached
-      // blocks or label the thread's later jobs as rag_e2e legs
-      try {
-        leg("pin docs⨝embeddings")
-        joined.count(): Unit
-        val corpus = joined.filter($"doc_id" >= 20)
-          .select($"doc_id", $"text", $"embedding")
-        // S14 + S15: half the corpus lands, then the full set merge-appends
-        // through the anti-join — re-ingested rows contribute nothing
-        leg("S14 first append")
-        VersionedStore.append(s, store, corpus.filter($"doc_id" % 2 === 0))
-        val existing = VersionedStore.read(s, store).get.select("doc_id")
-        leg("S15 anti-join merge append")
-        Ingest.appendRespectingLayout(s, store,
-          corpus.join(existing.hint("SHUFFLE_HASH"), Seq("doc_id"), "left_anti")): Unit
-        // S16: cluster-partition + model sidecar, THEN the lexical sidecar
-        // (stamped at the post-compaction version — no staleness window)
-        leg("S16 IVF indexStore")
-        val model = Ivf.indexStore(s, store, "doc_id", "embedding", k = 8)
-        leg("lexical index build")
-        Keyword.buildLexicalIndexForStore(s, store, "doc_id", "text", idx)
-        val stored = VersionedStore.read(s, store).get
-        // the embedding lookup is primed for BOTH spellings of each
-        // question (raw and rewritten) with the SAME vector — the embed
-        // service contract: one semantic query, one vector
-        leg("QA fixture collect")
-        val qvecs = qa
-          .select($"question", $"embedding",
-            concat($"question", lit(" prior turn about "), $"topic").as("rw"))
-          .collect()
-          .flatMap(r => Seq(r.getString(0) -> r.getSeq[Float](1),
-                            r.getString(2) -> r.getSeq[Float](1))).toMap
-        object CtxRewriteModel extends Chat.ChatModel {
-          def rewrite(q: String, h: Seq[String]): String = s"$q ${h.last}"
-          def generate(sys: String, c: String, q: String): String =
-            Chat.TemplateModel.generate(sys, c, q)
+      // the leg label is cleared however the body ends: an exception
+      // mid-lifecycle must not label the thread's later jobs as rag_e2e legs
+      try pinned(documents(s, d)
+          .join(embeddings(s, d), $"doc_id" === $"vec_id")) { joined =>
+        // V5 provenance leg: EVEN qids carry a one-turn history, so the
+        // contextualization gate (history-on ∧ ctx-prompt-set ∧ prior
+        // turns) rewrites their query — deterministically (question +
+        // last turn), so the oracle recomputes the rewritten string, the
+        // lexical-leg terms it feeds, the grading, and the template
+        // answer; ODD qids have no history and the gate declines
+        pinned(joined.filter($"doc_id" < 20)
+          .select($"doc_id".as("qid"),
+            concat(lit("q"), $"doc_id".cast("string"), lit(" "),
+              concat_ws(" ", slice(split(trim($"text"), "\\s+"), 1, 5))).as("question"),
+            $"text".as("reference_answer"), $"lang".as("topic"), $"embedding")
+          .withColumn("hist",
+            when($"qid" % 2 === 0,
+              array(concat(lit("prior turn about "), $"topic")))
+            .otherwise(array().cast("array<string>")))) { qa =>
+          leg("pin docs⨝embeddings")
+          joined.count(): Unit
+          val corpus = joined.filter($"doc_id" >= 20)
+            .select($"doc_id", $"text", $"embedding")
+          // S14 + S15: half the corpus lands, then the full set merge-appends
+          // through the anti-join — re-ingested rows contribute nothing
+          leg("S14 first append")
+          VersionedStore.append(s, store, corpus.filter($"doc_id" % 2 === 0))
+          val existing = VersionedStore.read(s, store).get.select("doc_id")
+          leg("S15 anti-join merge append")
+          Ingest.appendRespectingLayout(s, store,
+            corpus.join(existing.hint("SHUFFLE_HASH"), Seq("doc_id"), "left_anti")): Unit
+          // S16: cluster-partition + model sidecar, THEN the lexical sidecar
+          // (stamped at the post-compaction version — no staleness window)
+          leg("S16 IVF indexStore")
+          val model = Ivf.indexStore(s, store, "doc_id", "embedding", k = 8)
+          leg("lexical index build")
+          Keyword.buildLexicalIndexForStore(s, store, "doc_id", "text", idx)
+          val stored = VersionedStore.read(s, store).get
+          // the embedding lookup is primed for BOTH spellings of each
+          // question (raw and rewritten) with the SAME vector — the embed
+          // service contract: one semantic query, one vector
+          leg("QA fixture collect")
+          val qvecs = qa
+            .select($"question", $"embedding",
+              concat($"question", lit(" prior turn about "), $"topic").as("rw"))
+            .collect()
+            .flatMap(r => Seq(r.getString(0) -> r.getSeq[Float](1),
+                              r.getString(2) -> r.getSeq[Float](1))).toMap
+          object CtxRewriteModel extends Chat.ChatModel {
+            def rewrite(q: String, h: Seq[String]): String = s"$q ${h.last}"
+            def generate(sys: String, c: String, q: String): String =
+              Chat.TemplateModel.generate(sys, c, q)
+          }
+          val answered = Chat.answerBatch(
+            qa.select($"qid", $"question", $"hist"), "qid", "question",
+            stored, "doc_id", "text", "embedding",
+            LookupEmbedder(qvecs), CtxRewriteModel, Chat.OverlapGrader,
+            topK = TopK, historyCol = Some("hist"), index = Some((model, 8)),
+            searchType = Chat.SearchType.Hybrid(
+              c = RrfC, fetchKPerLeg = FetchK, lexicalIndexPath = Some(idx)),
+            indexStorePath = Some(store),
+            useHistory = true, ctxPrompt = Some("rephrase for retrieval"))
+          leg("answer + grade + aggregate")
+          val wTopic = Window.partitionBy($"topic")
+          val wAll = Window.partitionBy(lit(1))
+          qa.select($"qid", $"reference_answer", $"topic")
+            .join(answered, Seq("qid"))
+            .withColumn("correct", Testbed.keywordJudgeCol($"answer", $"reference_answer"))
+            .select($"qid", $"topic", $"rewritten_query",
+              concat_ws(",", $"retrieved_ids").as("retrieved"),
+              $"relevant", $"correct", $"answer",
+              count(lit(1)).over(wTopic).as("n_topic"),
+              // k/n ratios with n ≤ 20: provably tie-free at round(·, 6) —
+              // a tie needs frac(k·10⁶/n) = ½, i.e. n | 2k·10⁶ with an odd
+              // quotient, impossible for every n ≤ 20 (all even n ≤ 20
+              // divide 10⁶ exactly), and the nearest boundary sits ≥
+              // 1/(2n)·10⁻⁶ away, 8 orders above double error — so these
+              // may keep round() (the Tables.micros convention's safe case)
+              round(avg($"correct".cast("int")).over(wTopic), 6).as("topic_correctness"),
+              round(avg($"correct".cast("int")).over(wAll), 6).as("overall_correctness"))
+            .orderBy($"qid")
+            .localCheckpoint() // 20 rows
         }
-        val answered = Chat.answerBatch(
-          qa.select($"qid", $"question", $"hist"), "qid", "question",
-          stored, "doc_id", "text", "embedding",
-          LookupEmbedder(qvecs), CtxRewriteModel, Chat.OverlapGrader,
-          topK = TopK, historyCol = Some("hist"), index = Some((model, 8)),
-          searchType = Chat.SearchType.Hybrid(
-            c = RrfC, fetchKPerLeg = FetchK, lexicalIndexPath = Some(idx)),
-          indexStorePath = Some(store),
-          useHistory = true, ctxPrompt = Some("rephrase for retrieval"))
-        leg("answer + grade + aggregate")
-        val wTopic = Window.partitionBy($"topic")
-        val wAll = Window.partitionBy(lit(1))
-        qa.select($"qid", $"reference_answer", $"topic")
-          .join(answered, Seq("qid"))
-          .withColumn("correct", Testbed.keywordJudgeCol($"answer", $"reference_answer"))
-          .select($"qid", $"topic", $"rewritten_query",
-            concat_ws(",", $"retrieved_ids").as("retrieved"),
-            $"relevant", $"correct", $"answer",
-            count(lit(1)).over(wTopic).as("n_topic"),
-            // k/n ratios with n ≤ 20: provably tie-free at round(·, 6) —
-            // a tie needs frac(k·10⁶/n) = ½, i.e. n | 2k·10⁶ with an odd
-            // quotient, impossible for every n ≤ 20 (all even n ≤ 20
-            // divide 10⁶ exactly), and the nearest boundary sits ≥
-            // 1/(2n)·10⁻⁶ away, 8 orders above double error — so these
-            // may keep round() (the Tables.micros convention's safe case)
-            round(avg($"correct".cast("int")).over(wTopic), 6).as("topic_correctness"),
-            round(avg($"correct".cast("int")).over(wAll), 6).as("overall_correctness"))
-          .orderBy($"qid")
-          .localCheckpoint() // 20 rows, eager: materialized before the release
-      } finally {
-        qa.unpersist()
-        joined.unpersist()
-        s.sparkContext.setJobDescription(null)
-      }
+      } finally s.sparkContext.setJobDescription(null)
     }),
 
     // S12/S17: the catalog scan over store manifests — two ingests with

@@ -774,19 +774,16 @@ object TextQueries {
 
     "vocab_hll_estimate" -> ((s, d) => {
       import s.implicits._
-      val toks = documents(s, d)
-        .select(explode(split($"text", "\\s+")).as("t"))
-        .filter(length($"t") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val result = graft.ops.Sketch.hllEstimate(
-          graft.ops.Sketch.hllRegisters(toks, "t"))
-        .crossJoin(toks.agg(count_distinct($"t").as("exact_distinct")))
-        .select($"exact_distinct", $"hll_estimate",
-          (abs($"hll_estimate" - $"exact_distinct") <=
-            lit(0.195) * $"exact_distinct").as("within_3sigma"))
-        .localCheckpoint()
-      toks.unpersist()
-      result
+      pinned(documents(s, d)
+          .select(explode(split($"text", "\\s+")).as("t"))
+          .filter(length($"t") > 0)) { toks =>
+        graft.ops.Sketch.hllEstimate(graft.ops.Sketch.hllRegisters(toks, "t"))
+          .crossJoin(toks.agg(count_distinct($"t").as("exact_distinct")))
+          .select($"exact_distinct", $"hll_estimate",
+            (abs($"hll_estimate" - $"exact_distinct") <=
+              lit(0.195) * $"exact_distinct").as("within_3sigma"))
+          .localCheckpoint()
+      }
     }),
 
     // The HLL sidecar lifecycle, FULLY hash-checked: half the corpus
@@ -1294,11 +1291,13 @@ object TextQueries {
     // (doc_id < 250) — the ingest anti-join as a pure query.
     "ingest_antijoin_chunks" -> ((s, d) => {
       import s.implicits._
-      // persisted: the chunk set feeds both sides of the anti-join
+      // persisted: the chunk set feeds both sides of the anti-join. The
+      // returned frame is lazy, so the pin outlives this body: the
+      // declared-query runners release it with catalog.clearCache()
       val chunks = Split.chunkDocs(documents(s, d), "doc_id", "text",
           t => Split.fixedWindow(t, 200, 150))
         .withColumn("ckey", Split.contentKey($"chunk_text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val existing = chunks.filter($"doc_id" < 250).select($"ckey").distinct()
       // SHUFFLE_HASH as in Ingest.ingest: build on the bare keys, never
       // sort the wide chunk rows
@@ -1902,41 +1901,38 @@ object TextQueries {
       import graft.ops.Multimodal
       // media_id is STRING per the canonical media schema (filenames in
       // readMediaDir); cast back to BIGINT at the end for a numeric sort
-      val media = documents(s, d).filter(length($"text") > 0)
-        .select($"doc_id".cast("string").as("media_id"), lit("doc").as("kind"),
-          encode($"text", "UTF-8").as("bytes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val segs = Multimodal.sampleSegments(media, segmentBytes = 256)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val feats = Multimodal.extractFeatures(
-        segs.select($"media_id", $"kind", $"segment_bytes".as("bytes")),
-        Multimodal.FakeDecoder(32))
-      val unitNorm = feats
-        .select($"media_id",
-          (abs(sqrt(aggregate($"features", lit(0.0d), (a, x) => a + x * x)) - 1.0d) < 1e-3)
-            .as("__u"))
-        .groupBy($"media_id").agg(bool_and($"__u").as("features_unit_norm"))
-      val shape = segs
-        .groupBy($"media_id")
-        .agg(
-          count(lit(1)).as("n_segments"),
-          (max($"segment_idx") === count(lit(1)) - 1 &&
-            count_distinct($"segment_idx") === count(lit(1))).as("contiguous"),
-          sum(length($"segment_bytes")).as("total_bytes"),
-          concat_ws("", transform(
-            array_sort(collect_list(struct($"segment_idx", hex($"segment_bytes").as("h")))),
-            x => x.getField("h"))).as("__hexcat"))
-      val result = shape
-        .join(media.select($"media_id", hex($"bytes").as("__hexorig")), "media_id")
-        .join(unitNorm, "media_id")
-        .select($"media_id".cast("long").as("media_id"), $"n_segments", $"total_bytes",
-          $"contiguous", ($"__hexcat" === $"__hexorig").as("reassembles"),
-          $"features_unit_norm")
-        .orderBy($"media_id")
-        .localCheckpoint() // one row per doc; releases both caches now
-      segs.unpersist()
-      media.unpersist()
-      result
+      pinned(documents(s, d).filter(length($"text") > 0)
+          .select($"doc_id".cast("string").as("media_id"), lit("doc").as("kind"),
+            encode($"text", "UTF-8").as("bytes"))) { media =>
+        pinned(Multimodal.sampleSegments(media, segmentBytes = 256)) { segs =>
+          val feats = Multimodal.extractFeatures(
+            segs.select($"media_id", $"kind", $"segment_bytes".as("bytes")),
+            Multimodal.FakeDecoder(32))
+          val unitNorm = feats
+            .select($"media_id",
+              (abs(sqrt(aggregate($"features", lit(0.0d), (a, x) => a + x * x)) - 1.0d) < 1e-3)
+                .as("__u"))
+            .groupBy($"media_id").agg(bool_and($"__u").as("features_unit_norm"))
+          val shape = segs
+            .groupBy($"media_id")
+            .agg(
+              count(lit(1)).as("n_segments"),
+              (max($"segment_idx") === count(lit(1)) - 1 &&
+                count_distinct($"segment_idx") === count(lit(1))).as("contiguous"),
+              sum(length($"segment_bytes")).as("total_bytes"),
+              concat_ws("", transform(
+                array_sort(collect_list(struct($"segment_idx", hex($"segment_bytes").as("h")))),
+                x => x.getField("h"))).as("__hexcat"))
+          shape
+            .join(media.select($"media_id", hex($"bytes").as("__hexorig")), "media_id")
+            .join(unitNorm, "media_id")
+            .select($"media_id".cast("long").as("media_id"), $"n_segments", $"total_bytes",
+              $"contiguous", ($"__hexcat" === $"__hexorig").as("reassembles"),
+              $"features_unit_norm")
+            .orderBy($"media_id")
+            .localCheckpoint() // one row per doc
+        }
+      }
     }),
 
     // Perceptual image near-dup: dHash fingerprints over the decoded

@@ -950,38 +950,33 @@ object VectorSearch {
     import graft.ops.{Similarity, Testbed}
     val joined = documents(s, d)
       .join(embeddings(s, d), $"doc_id" === $"vec_id")
-    val store = joined.filter($"doc_id" >= 50)
-      .select($"doc_id", $"text", $"embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // qa (with its qid) feeds both the retrieval batch and the report
-    // join — persist so the documents scan runs once, not twice
-    val qa = joined.filter($"doc_id" < 50)
-      .select(
-        $"doc_id".as("qid"),
-        concat_ws(" ", slice(split($"text", "\\s+"), 1, 5)).as("question"),
-        $"text".as("reference_answer"),
-        $"lang".as("topic"),
-        $"embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // distributed retrieval for the whole question batch at once
-    // (similarity join, k=1 already enforces rank 1), then grounded
-    // "generation" = top-1 context.
-    val answered = Similarity.similarityJoin(
-        qa, store, "qid", "embedding", "doc_id", "embedding", k = 1)
-      .join(store.select($"doc_id", $"text".as("answer")), "doc_id")
-      .select($"qid", $"answer")
-    val report = qa
-      .join(answered, "qid")
-      .withColumn("correct",
-        Testbed.keywordJudgeCol($"answer", $"reference_answer"))
-      .select($"question", $"topic", $"answer", $"correct")
-    // the by-topic report is a handful of rows: materialize it eagerly
-    // (localCheckpoint) so the caches can be released before returning —
-    // otherwise store+qa stay pinned for the rest of the query run.
-    val result = Testbed.byTopic(report).localCheckpoint()
-    store.unpersist()
-    qa.unpersist()
-    result
+    // join — pinned so the documents scan runs once, not twice
+    pinned(joined.filter($"doc_id" < 50)
+        .select(
+          $"doc_id".as("qid"),
+          concat_ws(" ", slice(split($"text", "\\s+"), 1, 5)).as("question"),
+          $"text".as("reference_answer"),
+          $"lang".as("topic"),
+          $"embedding")) { qa =>
+      pinned(joined.filter($"doc_id" >= 50)
+          .select($"doc_id", $"text", $"embedding")) { store =>
+        // distributed retrieval for the whole question batch at once
+        // (similarity join, k=1 already enforces rank 1), then grounded
+        // "generation" = top-1 context.
+        val answered = Similarity.similarityJoin(
+            qa, store, "qid", "embedding", "doc_id", "embedding", k = 1)
+          .join(store.select($"doc_id", $"text".as("answer")), "doc_id")
+          .select($"qid", $"answer")
+        val report = qa
+          .join(answered, "qid")
+          .withColumn("correct",
+            Testbed.keywordJudgeCol($"answer", $"reference_answer"))
+          .select($"question", $"topic", $"answer", $"correct")
+        // the by-topic report is a handful of rows
+        Testbed.byTopic(report).localCheckpoint()
+      }
+    }
   }
 
   private val bitextMiningOracle: String =

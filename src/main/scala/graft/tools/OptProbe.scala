@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.graftshim.CachedEntries
 
 /** Round-18 optimization instrumentation (guide §1: measure first).
   *
@@ -19,7 +20,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   *    UI would show if the bench ran with the UI enabled. The `==`
   *    line also counts the generated classes the measured run compiled
   *    (`compiles=`, `compile_ms=`): a warm run that still compiles is
-  *    missing Spark's code cache.
+  *    missing Spark's code cache. `cached_left=` counts the Datasets
+  *    still in Spark's cache after the measured run, before the probe's
+  *    `clearCache`: a query that releases its own pins leaves 0.
   */
 object OptProbe {
   private final case class J(id: Int, desc: String, site: String,
@@ -90,6 +93,7 @@ object OptProbe {
           val wall = (System.nanoTime() - t0) / 1e9
           val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
           val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+          val cachedLeft = CachedEntries(spark)
           // listener bus is async — give it a beat to drain
           Thread.sleep(400)
           spark.sparkContext.removeSparkListener(listener)
@@ -97,7 +101,7 @@ object OptProbe {
           val js = jobs.values().asScala.toSeq.sortBy(_.id)
           val jobSum = js.filter(_.end > 0).map(j => (j.end - j.start) / 1e9).sum
           println(f"== $n wall=$wall%.3f s jobs=${js.size} jobSum=$jobSum%.3f s" +
-            f" compiles=$compiles compile_ms=$compileMs%.0f" +
+            f" compiles=$compiles compile_ms=$compileMs%.0f cached_left=$cachedLeft" +
             err.map(e => s" ERR=$e").getOrElse(""))
           js.foreach { j =>
             val d = if (j.end > 0) (j.end - j.start) / 1e9 else -1.0

@@ -435,6 +435,17 @@ class CurationSpec extends AnyFunSuite {
       .count() == 10)
   }
 
+  test("decontaminateBloom releases its eval-shingle pin") {
+    val corpus = ((1 to 10).map(i => (i.toLong, s"doc $i has some words in it yes")) :+
+      (11L, "the secret benchmark answer is forty two")).toDF("doc_id", "text")
+    val eval = Seq("the secret benchmark answer is forty two indeed").toDF("text")
+    val before = org.apache.spark.sql.graftshim.CachedEntries(spark)
+    val kept = Dedup.decontaminateBloom(corpus, "doc_id", "text", eval, "text", n = 4)
+      .select($"doc_id").as[Long].collect().sorted.toSeq
+    assert(kept == (1L to 10L))
+    assert(org.apache.spark.sql.graftshim.CachedEntries(spark) == before)
+  }
+
   // --- text normalization ----------------------------------------------------
 
   test("homoglyph table loads from the committed UTS#39 snapshot; breadth covers fullwidth, numerals, key-poisoners") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CachedEntries
 import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -366,19 +367,39 @@ class DedupSpec extends AnyFunSuite {
       boom(element_at(texts, (col("id") - from + 1).cast("int"))).as("text"))
     val boomId = udf((x: Long) => if (x == 3L) throw new IllegalStateException("boom") else x)
     val pairs = spark.range(2).select(boomId(col("id") * 2 + 1).as("id_a"), (col("id") * 2 + 2).as("id_b"))
+    // the store-side checks read a store and its sidecar, built here
+    // from rows that do not throw
+    val root = java.nio.file.Files.createTempDirectory("dedup-leak").toString
+    val plain = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("id", "text")
+    graft.ops.VersionedStore.append(spark, s"$root/t", plain)
+    Dedup.buildMinhashSidecarForStore(spark, s"$root/t", "id", "text", s"$root/mh")
+    graft.ops.VersionedStore.append(spark, s"$root/e",
+      Seq((1L, Array(1f, 0f)), (2L, Array(0f, 1f))).toDF("id", "embedding"))
+    Dedup.buildSrpSidecarForStore(spark, s"$root/e", "id", "embedding", s"$root/srp")
+    val boomVec = udf((x: Long) =>
+      if (x == 91L) throw new IllegalStateException("boom") else Array(1f, 0f))
+    val embBatch = spark.range(90, 93).select(col("id"), boomVec(col("id")).as("embedding"))
     val calls = Seq[(String, () => Any)](
       "connectedComponents" -> (() => Dedup.connectedComponents(pairs)),
       "minhashNearDupPairs" -> (() => Dedup.minhashNearDupPairs(docs(10), "id", "text", 0.5)),
       "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs(20), "id", "text", 0.5)),
       "ngramJaccardJoin" -> (() =>
-        Dedup.ngramJaccardJoin(docs(30), "id", "text", docs(40), "id", "text", 0.5)))
+        Dedup.ngramJaccardJoin(docs(30), "id", "text", docs(40), "id", "text", 0.5)),
+      "simhashNearDupPairs" -> (() => Dedup.simhashNearDupPairs(docs(50), "id", "text")),
+      "removeDuplicatedSpans" -> (() => Dedup.removeDuplicatedSpans(docs(60), "id", "text", k = 2)),
+      "nearDupAgainstStore" -> (() =>
+        Dedup.nearDupAgainstStore(spark, docs(70), "id", "text", s"$root/t", s"$root/mh", 0.5)),
+      "embNearDupAgainstStore" -> (() => Dedup.embNearDupAgainstStore(spark, embBatch,
+        "id", "embedding", s"$root/e", s"$root/srp", 0.5)),
+      "contaminatedIdsBloom" -> (() =>
+        Dedup.contaminatedIdsBloom(plain, "id", "text", docs(80), "text", n = 2)))
     val leaks = calls.map { case (name, call) =>
-      val (rdds, entries) = (sc.getPersistentRDDs.keySet, org.apache.spark.sql.CachedEntries(spark))
+      val (rdds, entries) = (sc.getPersistentRDDs.keySet, CachedEntries(spark))
       val e = intercept[Exception](call())
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(t => Option(t.getMessage).exists(_.contains("boom"))), s"$name: $e")
       (name, (sc.getPersistentRDDs.keySet -- rdds).size,
-        org.apache.spark.sql.CachedEntries(spark) - entries)
+        CachedEntries(spark) - entries)
     }
     assert(leaks.forall(l => l._2 == 0 && l._3 == 0),
       s"(call, persisted RDDs, cached Datasets) left behind: $leaks")
@@ -397,11 +418,11 @@ class DedupSpec extends AnyFunSuite {
     val strPairs = pairs.select(col("id_a").cast("string").as("id_a"),
       col("id_b").cast("string").as("id_b"))
     for ((name, in) <- Seq("BIGINT" -> pairs, "STRING" -> strPairs)) {
-      val (rdds, entries) = (sc.getPersistentRDDs.keySet, org.apache.spark.sql.CachedEntries(spark))
+      val (rdds, entries) = (sc.getPersistentRDDs.keySet, CachedEntries(spark))
       val e = intercept[IllegalStateException](Dedup.connectedComponents(in, maxIters = 1))
       assert(e.getMessage.contains("did not converge after 1 rounds"), s"$name: $e")
       val left = (sc.getPersistentRDDs.keySet -- rdds).size
-      assert(left == 0 && org.apache.spark.sql.CachedEntries(spark) == entries,
+      assert(left == 0 && CachedEntries(spark) == entries,
         s"$name: $left persisted RDDs left behind")
     }
   }

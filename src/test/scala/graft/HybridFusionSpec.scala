@@ -2,11 +2,20 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CachedEntries
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.embed.HashEmbedder
 import graft.ops.{Chat, Ingest, Keyword}
+
+/** Reads of the "boom" row in the release-on-failure case below: a
+  * module, so every task of the local session counts into one value.
+  */
+private object BoomReads {
+  val n = new java.util.concurrent.atomic.AtomicInteger
+}
 
 /** The two shapes of reciprocal-rank fusion agree, and the single-question
   * hybrid path stays within its Spark job budget. Job counts do not depend
@@ -99,5 +108,46 @@ class HybridFusionSpec extends AnyFunSuite {
     val (_, planJobs) = jobsOf(Keyword.bm25Indexed(spark, idx, Seq("pasta", "spark"),
       topK = 5, store = Some(table)))
     assert(planJobs == 0, s"building the bm25Indexed plan ran $planJobs jobs")
+  }
+
+  test("bm25, bm25BatchRank, prfExpandTerms and buildLexicalIndex release persisted data when a job fails") {
+    val sc = spark.sparkContext
+    val boom = udf((s: String) => if (s == "boom") throw new IllegalStateException("boom") else s)
+    // prfExpandTerms runs bm25 first: its "boom" row throws on the
+    // second read only, so that bm25 pass succeeds and the failure
+    // lands on prfExpandTerms' own pin
+    val boomOnReread = udf((s: String) =>
+      if (s == "boom" && BoomReads.n.incrementAndGet() > 1) throw new IllegalStateException("boom")
+      else s)
+    val texts = array(lit("a b c d"), lit("boom"), lit("a b c e"))
+    // over a range, not a local relation, so the job that materializes
+    // the pin is the one that fails; each call gets its own ids
+    def docs(from: Long, f: org.apache.spark.sql.expressions.UserDefinedFunction = boom) =
+      spark.range(from, from + 3).select(col("id"),
+        f(element_at(texts, (col("id") - from + 1).cast("int"))).as("text"))
+    val idx = Files.createTempDirectory("graft-leak-lex").toString
+    val calls = Seq[(String, () => Any)](
+      "bm25" -> (() => Keyword.bm25(docs(10), "id", "text", Seq("a"))),
+      "bm25BatchRank" -> (() => Keyword.bm25BatchRank(docs(20), "id", "text",
+        Seq((1L, "a")).toDF("qid", "term"))),
+      "prfExpandTerms" -> { () =>
+        BoomReads.n.set(0)
+        val e = intercept[Exception](Keyword.prfExpandTerms(docs(30, boomOnReread), "id", "text", Seq("a")))
+        assert(e.getStackTrace.exists(_.getMethodName.contains("rocchioSelect")), e)
+        throw e
+      },
+      "buildLexicalIndex" -> (() => Keyword.buildLexicalIndex(docs(40), "id", "text", idx)))
+    // the persisted RDDs but materialized local checkpoints: the result
+    // of prfExpandTerms' bm25 pass is one, freed by Spark's ContextCleaner
+    def pins = sc.getPersistentRDDs.filterNot(_._2.isCheckpointed).keySet
+    val leaks = calls.map { case (name, call) =>
+      val (rdds, entries) = (pins, CachedEntries(spark))
+      val e = intercept[Exception](call())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("boom"))), s"$name: $e")
+      (name, (pins -- rdds).size, CachedEntries(spark) - entries)
+    }
+    assert(leaks.forall(l => l._2 == 0 && l._3 == 0),
+      s"(call, persisted RDDs, cached Datasets) left behind: $leaks")
   }
 }

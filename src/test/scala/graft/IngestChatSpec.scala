@@ -3,16 +3,48 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CachedEntries
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.embed.HashEmbedder
+import graft.embed.{Embedder, HashEmbedder}
 import graft.ops.{Chat, Ingest, Testbed}
+
+/** Fails in the embed, after the ingest has pinned and counted its chunks. */
+private final case class BoomEmbedder(inner: Embedder) extends Embedder {
+  def dim: Int = inner.dim
+  def embed(text: String): Array[Float] =
+    if (text == "boom embed") throw new IllegalStateException("boom") else inner.embed(text)
+}
 
 class IngestChatSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
   private val embedder = HashEmbedder(dim = 32)
+
+  test("ingest releases persisted data when a job fails") {
+    val sc = spark.sparkContext
+    val boom = udf((s: String) => if (s == "boom") throw new IllegalStateException("boom") else s)
+    // over a range, not a local relation, so the job that materializes
+    // the pin is the one that fails
+    def docs(texts: String*) = spark.range(texts.size).select(col("id").as("doc_id"),
+      boom(element_at(array(texts.map(lit): _*), (col("id") + 1).cast("int"))).as("text"))
+    val cfg = Ingest.StoreConfig("leak", "hash-32", 120, 20)
+    val calls = Seq[(String, () => Any)](
+      "split" -> (() => Ingest.ingest(spark, docs("a b c", "boom", "d e f"), "doc_id", "text",
+        Files.createTempDirectory("graft-leak").toString, cfg, embedder)),
+      "embed" -> (() => Ingest.ingest(spark, docs("a b c", "boom embed", "d e f"), "doc_id",
+        "text", Files.createTempDirectory("graft-leak").toString, cfg, BoomEmbedder(embedder))))
+    val leaks = calls.map { case (name, call) =>
+      val (rdds, entries) = (sc.getPersistentRDDs.keySet, CachedEntries(spark))
+      val e = intercept[Exception](call())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("boom"))), s"$name: $e")
+      (name, (sc.getPersistentRDDs.keySet -- rdds).size, CachedEntries(spark) - entries)
+    }
+    assert(leaks.forall(l => l._2 == 0 && l._3 == 0),
+      s"(stage, persisted RDDs, cached Datasets) left behind: $leaks")
+  }
 
   test("ingest is idempotent: re-ingesting the same corpus appends zero rows (S15)") {
     val dir = Files.createTempDirectory("graft-store").toString
