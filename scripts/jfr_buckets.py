@@ -17,6 +17,14 @@ frame that belongs to one; samples with no such frame count as `other`.
 Then, per thread kind, the `graft.*` methods with the most samples, each
 sample credited to its innermost `graft.*` frame (lambdas to the method
 that defines them).
+
+With `--by-line M`, it also credits each main-thread sample that has `M`
+on its stack (matched like `--window`) to the source line of the
+outermost `M` frame, and prints those samples by line and bucket: which
+call in `M` the time goes to, and what it is spent on, e.g.
+
+    ... | python3 scripts/jfr_buckets.py --window ChatWorkload.op \
+        --by-line 'Chat$.answer'
 """
 
 import argparse
@@ -74,8 +82,25 @@ def kind(thread):
     return "main" if thread == "main" else "other"
 
 
-def samples(lines, window):
-    """Yield (time, kind, bucket, graft method, in window method) per sample."""
+LINE = re.compile(r"line: (\d+)")
+
+
+def method_of(frame):
+    return frame.split("(", 1)[0]
+
+
+def outer_line(frames, method):
+    """The source line of the outermost frame of `method`, or None."""
+    for f in reversed(frames):
+        if method_of(f).endswith(method):
+            m = LINE.search(f)
+            return int(m.group(1)) if m else -1
+    return None
+
+
+def samples(lines, window, by_line=None):
+    """Yield (time, kind, bucket, graft method, in window method, line of
+    the outermost `by_line` frame) per sample."""
     t, thread, frames, in_stack = None, "", [], False
     for line in lines:
         s = line.strip()
@@ -101,8 +126,9 @@ def samples(lines, window):
         elif line.startswith("}"):
             k = kind(thread)
             hit = bool(window) and k == "main" and any(
-                f.split("(", 1)[0].endswith(window) for f in frames)
-            yield t, k, bucket(frames), graft_method(frames), hit
+                method_of(f).endswith(window) for f in frames)
+            line_no = outer_line(frames, by_line) if by_line and k == "main" else None
+            yield t, k, bucket(frames), graft_method(frames), hit, line_no
 
 
 def main(argv):
@@ -110,10 +136,12 @@ def main(argv):
     ap.add_argument("--window", help="count only samples between the first and last "
                     "main-thread sample with this Class.method on the stack")
     ap.add_argument("--top", type=int, default=12, help="graft methods listed per thread kind")
+    ap.add_argument("--by-line", metavar="METHOD", help="split the main-thread samples "
+                    "under this Class.method by the line of its outermost frame")
     args = ap.parse_args(argv[1:])
-    rows = list(samples(sys.stdin, args.window))
+    rows = list(samples(sys.stdin, args.window, args.by_line))
     if args.window:
-        hits = [t for t, _, _, _, h in rows if h and t is not None]
+        hits = [t for t, _, _, _, h, _ in rows if h and t is not None]
         if not hits:
             sys.exit(f"jfr_buckets: no main-thread sample has {args.window} on its stack")
         lo, hi = min(hits), max(hits)
@@ -122,7 +150,7 @@ def main(argv):
               f"({(hi - lo).total_seconds():.3f} s), {len(rows)} samples")
     else:
         print(f"{len(rows)} samples")
-    counts = collections.Counter((k, b) for _, k, b, _, _ in rows)
+    counts = collections.Counter((k, b) for _, k, b, _, _, _ in rows)
     names = [b for b, _ in BUCKETS] + ["other"]
     width = max(len(n) for n in names)
     print(f"{'bucket':<{width}} " + " ".join(f"{k:>9}" for k in KINDS) + f" {'all':>9}")
@@ -131,11 +159,21 @@ def main(argv):
                  for k in KINDS]
         print(f"{b:<{width}} " + " ".join(f"{c:>9}" for c in cells) + f" {sum(cells):>9}")
     for k in KINDS:
-        methods = collections.Counter(g for _, kk, _, g, _ in rows if kk == k)
+        methods = collections.Counter(g for _, kk, _, g, _, _ in rows if kk == k)
         if methods:
             print(f"\n{k}: innermost graft.* method")
             for g, c in methods.most_common(args.top):
                 print(f"  {c:>7}  {g}")
+    if args.by_line:
+        by = collections.Counter((ln, b) for _, _, b, _, _, ln in rows if ln is not None)
+        lines = sorted({ln for ln, _ in by})
+        print(f"\nmain: samples by line of the outermost {args.by_line} frame "
+              f"({sum(by.values())} samples)")
+        short = [n.split()[0][:9] for n in names]
+        print(f"{'line':>6} {'all':>7} " + " ".join(f"{n:>9}" for n in short))
+        for ln in lines:
+            cells = [by[(ln, b)] for b in names]
+            print(f"{ln:>6} {sum(cells):>7} " + " ".join(f"{c:>9}" for c in cells))
 
 
 if __name__ == "__main__":

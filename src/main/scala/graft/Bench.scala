@@ -272,7 +272,7 @@ object Bench {
     val fullLine = s"""{"metric":"total","value":${num(total)},"unit":"sec","runs_per_query":$runs,"publishable":$publishable,"queries":$qs,"queries_max":$qmax,"cpu_util":$utils,"load":$loads,"gc_ms":$gcs,"stalled":$stalled,"retried":$retried,"errors":$errs,"loadavg_start":"$loadStart","loadavg_end":"$loadavg",$gate,"sf":"$sfDir"}"""
     System.err.println(fullLine)
     val sideCar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "/root/repo/BENCH_FULL.json")
+      Checkout.root.resolve("BENCH_FULL.json").toString)
     // never clobber a clean closing sidecar with an unpublishable run —
     // the r17 submitted artifact was exactly that mistake
     val sideCarPath = {

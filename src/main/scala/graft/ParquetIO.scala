@@ -32,51 +32,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * read and would silently miss files added later. Callers own that
   * contract; only the two families above go through here.
   *
-  * Cache hygiene (round 19): keys use `SparkSession.sessionUUID` (unique
-  * for the JVM lifetime — `System.identityHashCode` could collide
-  * between a dead and a live session and serve a relation resolved
-  * under another session's conf), eviction is true LRU (access-ordered
-  * LinkedHashMap) instead of a wholesale clear() — on a long-lived
-  * ingest JVM the old overflow behavior was a periodic latency cliff
-  * where EVERY store's segments re-resolved at once — and entries from
-  * stopped sessions age out through the same LRU bound, so the map's
-  * footprint is capped regardless of session churn.
+  * Cache hygiene (round 19): a [[SessionCache]] — keys carry a session
+  * token unique for the JVM lifetime, eviction is true LRU, and entries
+  * from stopped sessions age out through the same bound.
   */
 object ParquetIO {
   // values are tiny (plan + file metadata), but a long-lived ingest JVM
   // touching millions of segments must not hoard plans for segments it
   // read once — least-recently-used wins stay, one-shot reads age out
-  private val MaxEntries = 65536
-  private val cache =
-    new java.util.LinkedHashMap[String, DataFrame](1024, 0.75f,
-      /* accessOrder = */ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DataFrame]): Boolean =
-        size() > MaxEntries
-    }
-
-  // a per-session token that can NEVER collide across the JVM lifetime
-  // (System.identityHashCode can coincide between a dead and a live
-  // session, which would serve a relation resolved under another
-  // session's conf): first use assigns a UUID, weakly keyed so the
-  // mapping itself never pins a dead session. A dead session's cache
-  // ENTRIES age out through the LRU bound below.
-  private val sessionIds =
-    new java.util.WeakHashMap[SparkSession, String]()
-
-  private def sessionKey(spark: SparkSession): String =
-    sessionIds.synchronized {
-      val hit = sessionIds.get(spark)
-      if (hit != null) hit
-      else {
-        val id = java.util.UUID.randomUUID().toString
-        sessionIds.put(spark, id)
-        id
-      }
-    }
-
-  private def key(spark: SparkSession, path: String): String =
-    sessionKey(spark) + "|" + path
+  private val cache = new SessionCache[DataFrame](65536)
 
   /** The parquet directory at `path` as a cached, re-usable DataFrame.
     * First call resolves it exactly like `spark.read.parquet(path)`;
@@ -84,20 +48,10 @@ object ParquetIO {
     * zero driver I/O. Only call on paths whose CONTENTS never change
     * while readable (see object doc).
     */
-  def readImmutable(spark: SparkSession, path: String): DataFrame = {
-    val k = key(spark, path)
-    val hit = cache.synchronized(cache.get(k))
-    if (hit != null) hit
-    else {
-      // resolve OUTSIDE the lock: relation resolution does real I/O, and
-      // a concurrent resolver of a different path must not wait on it.
-      // Two racers on the same path resolve twice and last-put wins —
-      // both relations are equivalent (the directory is immutable).
-      val df = spark.read.parquet(path)
-      cache.synchronized(cache.put(k, df)): Unit
-      df
-    }
-  }
+  def readImmutable(spark: SparkSession, path: String): DataFrame =
+    // two racers on the same path resolve twice and last-put wins — both
+    // relations are equivalent (the directory is immutable)
+    cache.getOrElseUpdate(spark, path, ())(spark.read.parquet(path))
 
   /** Drop every cached relation whose path starts with `prefix` (all
     * sessions) — called by the mutation-adjacent paths that delete or
@@ -106,11 +60,5 @@ object ParquetIO {
     * tests rewriting a fixture in place), so a future refactor of the
     * write-once discipline can never silently serve a stale index.
     */
-  def invalidate(prefix: String): Unit = cache.synchronized {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) {
-      val k = it.next()
-      if (k.substring(k.indexOf('|') + 1).startsWith(prefix)) it.remove()
-    }
-  }
+  def invalidate(prefix: String): Unit = cache.invalidate(prefix)
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` aggregates one named DataFrame plan per implemented operator
   * family from SURVEY.md §2; `oracleSql` carries the DuckDB-equivalent SQL

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.ColumnShim
 import org.apache.spark.sql.types._
 
@@ -392,6 +392,15 @@ object VectorFunctions {
     ColumnShim.column(MaxCosineToSet(ColumnShim.expression(emb), vecs))
   def seqDotProduct(a: Column, b: Column): Column =
     ColumnShim.column(SequentialDotProduct(ColumnShim.expression(a), ColumnShim.expression(b)))
+
+  /** A query vector as the `ARRAY<FLOAT>` literal `typedlit` makes of an
+    * `Array[Float]` (the same value class and type, `containsNull =
+    * false`), built straight from the primitive array: no Scala runtime
+    * reflection per vector.
+    */
+  def vectorLiteral(v: Array[Float]): Literal =
+    Literal(new GenericArrayData(v), ArrayType(FloatType, containsNull = false))
+  def vector(v: Array[Float]): Column = ColumnShim.column(vectorLiteral(v))
 
   /** Score column for a metric name, mirroring the reference's metric enum. */
   def score(metric: String)(a: Column, b: Column): Column = metric match {

@@ -1,10 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.PreparedPlans
 import graft.embed.Embedder
+import graft.functions.VectorFunctions
 
 /** The RAG chat pipeline (SURVEY.md §3.1) with the model calls behind
   * deterministic interfaces, exactly as the reference's own tests mock
@@ -256,6 +259,20 @@ object Chat {
     * → grade → grounded or plain generation, with provenance (V10) in the
     * result. The retrieval is pure Spark ([[Similarity.knn]]); the model
     * calls are the injected deterministic interfaces.
+    *
+    * Reuse per state: the Datasets a question collects are prepared
+    * plans ([[graft.PreparedPlans]]). The vector leg ([[vectorLeg]]) is
+    * analyzed once per (`store` frame, columns, search type, k, metric,
+    * probe count, vector type and length); each question binds its query
+    * vector and probe list into it. The indexed lexical leg reuses its
+    * plan per index state ([[Keyword.bm25Indexed]]). The `store` frame
+    * is matched by identity, not by plan equality: a frame keeps the
+    * file listing it was read with, so a frame read again (say, over a
+    * directory appended to since) is a new plan, and a frame passed
+    * again answers as it did before plans were kept.
+    * [[VersionedStore.read]] returns one frame per committed state. The
+    * IVF model guard and the lexical staleness check still run on every
+    * question.
     */
   def answer(spark: SparkSession, question: String, store: DataFrame,
              idCol: String, textCol: String, embCol: String,
@@ -276,38 +293,16 @@ object Chat {
     // [[contextualize]]; without a ctx prompt the model is never invoked
     val q = contextualize(question, history, useHistory, ctxPrompt, model)
     val qv = embedder.embed(q)
-    // with an index, retrieval probes only the question's nProbe nearest
-    // clusters. The pruning is real I/O savings ONLY on a
-    // writePartitioned store that carries cluster_id (pass
-    // `indexStorePath` so the model-fingerprint guard runs); assigning
-    // on the fly is semantics-preserving but strictly extra work for a
-    // single question — prefer the plain path unless the store is
-    // partitioned.
-    def fetch(n: Int, m: String): DataFrame = index match {
-      case Some((ivfModel, nProbe)) =>
-        val clustered =
-          if (store.columns.contains("cluster_id"))
-            store.select(col(idCol), col(textCol), col(embCol), col("cluster_id"))
-          else Ivf.assign(store.select(col(idCol), col(textCol), col(embCol)), embCol, ivfModel)
-        Ivf.search(clustered, embCol, ivfModel, qv, n, nProbe, m, indexStorePath)
-      case None =>
-        Similarity.knn(store.select(col(idCol), col(textCol), col(embCol)), embCol, qv, n, m)
-    }
+    // the probe guard runs on every question, whatever the plans reuse
+    index.foreach { case (ivfModel, _) =>
+      indexStorePath.foreach(Ivf.requireModelMatch(spark, _, ivfModel)) }
+    val leg = vectorLeg(store, idCol, textCol, embCol, index, qv, searchType, topK, metric)
+    def idText(rows: Array[org.apache.spark.sql.Row]): Seq[(String, String)] =
+      rows.map(r => (r.getString(0), r.getString(1))).toSeq
     val hits: Seq[(String, String)] = searchType match {
-      case SearchType.Similarity =>
-        fetch(topK, metric).select(col(idCol).cast("string"), col(textCol)).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-      case SearchType.ScoreThreshold(t) =>
-        // top-k then threshold ≡ threshold then top-k: relevance is
-        // monotone in the score ordering, so any kept prefix agrees
-        fetch(topK, metric)
-          .filter(Similarity.relevance(metric, col("score")) >= t)
-          .select(col(idCol).cast("string"), col(textCol)).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-      case SearchType.Mmr(fetchK, lm) =>
-        val cand = fetch(fetchK, "COSINE")
-          .select(col(idCol).cast("string"), col(textCol), col(embCol), col("score"))
-          .collect()
+      case SearchType.Similarity | SearchType.ScoreThreshold(_) => idText(leg.collect())
+      case SearchType.Mmr(_, lm) =>
+        val cand = leg.collect()
         val textOf = cand.map(r => r.getString(0) -> r.getString(1)).toMap
         Similarity
           .mmrGreedy(cand.map(r => (r.getString(0), r.getSeq[Float](2).toArray, r.getDouble(3))),
@@ -315,13 +310,12 @@ object Chat {
           .map { case (id, _, _) => (id, textOf(id)) }
       case SearchType.Hybrid(termsOf, c, fetchK, lexIdx) =>
         // (id, (id as string, text)) rows, in the order they come back
-        def withText(df: DataFrame): Array[(Any, (String, String))] =
-          df.select(col(idCol), col(idCol).cast("string").as("__sid"), col(textCol)).collect()
-            .map(r => r.get(0) -> (r.getString(1), r.getString(2)))
+        def byId(df: DataFrame): Array[(Any, (String, String))] =
+          df.collect().map(r => r.get(0) -> (r.getString(1), r.getString(2)))
         // both legs come back in rank order: knn sorts by the metric (a
         // EUCLIDEAN distance ascending, nearest first) then by its first
         // column, the id; the BM25 legs by rounded score desc, then id
-        val vec = withText(fetch(fetchK, metric))
+        val vec = byId(leg)
         val terms = termsOf(q)
         val lex =
           if (terms.isEmpty) Array.empty[Any]
@@ -331,20 +325,25 @@ object Chat {
             case Some(idx) => Keyword.bm25Indexed(spark, idx, terms,
               topK = fetchK, idName = idCol, store = indexStorePath)
             case None => Keyword.bm25(store.select(col(idCol), col(textCol)),
-              idCol, textCol, terms, topK = fetchK)
-          }).select(col(idCol)).collect().map(_.get(0))
+              idCol, textCol, terms, topK = fetchK).select(col(idCol))
+          }).collect().map(_.get(0)) // the id is column 0 of both legs
         // a null id, or one the store no longer holds, keeps its fused
         // slot but names no chunk to return
-        val idOrder = Keyword.sparkOrder(store.select(col(idCol)).schema.head.dataType)
+        val idOrder = Keyword.sparkOrder(leg.schema.head.dataType)
         val fused = Keyword.rrfFuseRanked(Seq(vec.map(_._1).toSeq, lex.toSeq), c, topK)(idOrder)
           .map(_._1).filter(_ != null)
         // text rides on the vector leg's rows; only ids the lexical leg
         // alone found are looked up, in one filtered read of the store
+        // (a prepared plan too, whose literals are those ids)
         val vecHits = vec.toMap
         val lexOnly = fused.filterNot(vecHits.contains)
         val lexHits =
           if (lexOnly.isEmpty) Map.empty[Any, (String, String)]
-          else withText(store.filter(col(idCol).isin(lexOnly: _*))).toMap
+          else byId(PreparedPlans.dataset(spark, "",
+            (PreparedPlans.frameKey(store), idCol, textCol, "lookup"),
+            PreparedPlans.inList(lexOnly.map(Literal(_)))) { ids =>
+            withText(store.filter(col(idCol).isin(ids: _*)), idCol, textCol)
+          }).toMap
         fused.flatMap(id => vecHits.get(id).orElse(lexHits.get(id)))
     }
     // A9 context concat (chatbot.py:76-81)
@@ -354,6 +353,67 @@ object Chat {
       if (rel) model.generate(sysPrompt, context, q)
       else model.generate(sysPrompt, "", q)
     RagAnswer(question, q, ans, context, hits.map(_._1), rel)
+  }
+
+  private def withText(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    df.select(col(idCol), col(idCol).cast("string").as("__sid"), col(textCol))
+
+  /** The Dataset the vector leg of [[answer]] collects for one question:
+    * the top rows of `store` nearest to `qv`, shaped for `searchType`
+    * — (id as string, text) for similarity and score threshold, plus
+    * the embedding and score for MMR's candidates, (id, id as string,
+    * text) for the hybrid vector leg. With an index, only the question's
+    * `nProbe` nearest clusters are probed. The pruning is real I/O
+    * savings ONLY on a writePartitioned store that carries cluster_id;
+    * assigning on the fly is semantics-preserving but strictly extra
+    * work for a single question — prefer the plain path unless the
+    * store is partitioned. Runs no guard: [[answer]] does.
+    *
+    * A prepared plan: analyzed once per key, which is the `store` frame
+    * itself ([[graft.PreparedPlans.frameKey]]: a new manifest state or a
+    * frame read again is a new key), the columns, the leg's shape, k,
+    * the metric and the IVF model; the query vector and the probe list
+    * are its literals.
+    */
+  private[graft] def vectorLeg(store: DataFrame, idCol: String, textCol: String,
+                               embCol: String, index: Option[(Ivf.IvfModel, Int)],
+                               qv: Array[Float], searchType: SearchType, topK: Int,
+                               metric: String): DataFrame = {
+    val (shape, n, m, finish) = searchType match {
+      case SearchType.Similarity =>
+        ("similarity", topK, metric,
+          (df: DataFrame) => df.select(col(idCol).cast("string"), col(textCol)))
+      case SearchType.ScoreThreshold(t) =>
+        // top-k then threshold ≡ threshold then top-k: relevance is
+        // monotone in the score ordering, so any kept prefix agrees
+        (s"threshold $t", topK, metric,
+          (df: DataFrame) => df.filter(Similarity.relevance(metric, col("score")) >= t)
+            .select(col(idCol).cast("string"), col(textCol)))
+      case SearchType.Mmr(fetchK, _) =>
+        ("mmr", fetchK, "COSINE",
+          (df: DataFrame) => df.select(col(idCol).cast("string"), col(textCol), col(embCol),
+            col("score")))
+      case SearchType.Hybrid(_, _, fetchK, _) =>
+        ("hybrid", fetchK, metric, (df: DataFrame) => withText(df, idCol, textCol))
+    }
+    val probes = index.toSeq.flatMap { case (ivfModel, nProbe) =>
+      ivfModel.probeOrder(qv).take(math.max(1, nProbe)).toSeq }
+    PreparedPlans.dataset(store.sparkSession, "",
+      (PreparedPlans.frameKey(store), idCol, textCol, embCol, shape, n, m,
+        index.map(_._1.fingerprint)),
+      VectorFunctions.vectorLiteral(qv) +: probes.map(Literal(_))) { slots =>
+      finish(index match {
+        case Some((ivfModel, _)) =>
+          val clustered =
+            if (store.columns.contains("cluster_id"))
+              store.select(col(idCol), col(textCol), col(embCol), col("cluster_id"))
+            else Ivf.assign(store.select(col(idCol), col(textCol), col(embCol)), embCol, ivfModel)
+          Ivf.probed(clustered, embCol, slots.head, slots.tail, n, m)
+        case None =>
+          Similarity.knnOf(store.select(col(idCol), col(textCol), col(embCol)),
+            embCol, slots.head, n, m)
+      })
+    }
   }
 
   /** Batch counterpart of [[answer]] for a whole question set: ONE

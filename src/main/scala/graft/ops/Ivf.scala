@@ -346,11 +346,18 @@ object Ivf {
              metric: String = "COSINE",
              storePath: Option[String] = None): DataFrame = {
     storePath.foreach(p => requireModelMatch(store.sparkSession, p, model))
-    val probes = model.probeOrder(queryVec).take(math.max(1, nProbe)).toSeq
-    Similarity.knn(
-      store.filter(col("cluster_id").isin(probes: _*)),
-      embCol, queryVec, topK, metric)
+    probed(store, embCol, VectorFunctions.vector(queryVec),
+      model.probeOrder(queryVec).take(math.max(1, nProbe)).toSeq.map(lit), topK, metric)
   }
+
+  /** [[search]]'s plan with the query vector and the probed cluster ids
+    * given as columns: literals, or the slots of a prepared plan
+    * ([[graft.PreparedPlans]]). Runs no guard; the caller does.
+    */
+  private[graft] def probed(store: DataFrame, embCol: String, queryVec: Column,
+                            probes: Seq[Column], topK: Int, metric: String): DataFrame =
+    Similarity.knnOf(store.filter(col("cluster_id").isin(probes: _*)),
+      embCol, queryVec, topK, metric)
 
   /** Metadata-filtered ANN — the vector-store feature every production
     * retrieval stack pairs with similarity search ("top-k docs about X

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.Tables.pinned
@@ -203,7 +204,7 @@ object Keyword {
     val spark = docs.sparkSession
     val stamp = store.map(t => (t, VersionedStore.currentState(spark, t)
       .map(_.version).getOrElse(0L)))
-    graft.Fs.delete(spark, s"$path/_stats")
+    retireStats(spark, path)
     val (n, bk) = writePositionalPostings(docs, idCol, textCol, path, buckets,
       "overwrite")
     stamp.foreach { case (table, v0) =>
@@ -272,7 +273,7 @@ object Keyword {
       s"$table's history v$v0 -> v${cur.version} is not pure-append — " +
         "incremental postings would double-count rewritten rows; rebuild")
     val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats") // stamp-first crash-safety
+    retireStats(spark, path) // stamp-first crash-safety
     val nNew =
       if (newSegs.isEmpty) 0L
       else writePositionalPostings(
@@ -311,24 +312,58 @@ object Keyword {
     }
     val terms = phrase.distinct
     val flat = readPostings(spark, indexPath)
-      .filter(col("bucket").isin(bucketsOfTerms(spark, terms, buckets): _*) &&
+      .filter(col("bucket").isin(bucketsOfTerms(terms, buckets): _*) &&
         col("term").isInCollection(terms))
       .select(col("id"), col("term"), explode(col("positions")).as("__p"))
     phraseAgree(flat, "id", "__p", "term", phrase)
   }
 
   /** The bucket ids [[buildPositionalIndex]]/[[writePostings]] assign
-    * the given terms — evaluated through the engine's own `xxhash64`
-    * expression so build and probe can never disagree on the
-    * partitioning function. The projection over a local relation is
-    * folded by the optimizer, so the collect runs no Spark job.
+    * the given terms, distinct, in first-seen order: the writers'
+    * Catalyst expression `pmod(xxhash64(term), buckets)` (whose `buckets`
+    * the analyzer widens to BIGINT, as here) evaluated on the driver, so
+    * build and probe share one partitioning function and no DataFrame is
+    * built.
     */
-  private def bucketsOfTerms(spark: org.apache.spark.sql.SparkSession,
-                             terms: Seq[String], buckets: Int): Seq[Int] = {
-    import spark.implicits._
-    terms.toDF("t")
-      .select(pmod(xxhash64(col("t")), lit(buckets)).cast("int"))
-      .collect().map(_.getInt(0)).toSeq.distinct
+  private[graft] def bucketsOfTerms(terms: Seq[String], buckets: Int): Seq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.{Pmod, XxHash64}
+    terms.map(t => Pmod(new XxHash64(Seq(Literal(t))), Literal(buckets.toLong)).eval()
+      .asInstanceOf[Long].toInt).distinct
+  }
+
+  /** A lexical or positional index's commit point as one query read it:
+    * the `_stats` text and its modification time. Every build, rebuild
+    * and incremental maintenance retires `_stats` before it touches the
+    * postings and writes it again after ([[retireStats]]), so the pair
+    * names one postings state, in this process or any other: an append
+    * changes the text, a rebuild in place the modification time. That
+    * last holds only where the rebuild lands at a later time than the
+    * build it replaces reads: on a filesystem whose mtime grain is one
+    * second, two writes of identical `_stats` text within that second
+    * look like one state.
+    */
+  private final case class IndexState(text: String, modTime: Long) {
+    def fields: Array[String] = text.trim.split(" ")
+  }
+
+  private def indexState(spark: org.apache.spark.sql.SparkSession,
+                         indexPath: String): IndexState = {
+    val p = s"$indexPath/_stats"
+    // text first: a commit landing between the reads pairs the old text
+    // with the new time, which keys a fresh resolution, never a stale one
+    val text = graft.Fs.readString(spark, p)
+    IndexState(text, graft.Fs.modTime(spark, p))
+  }
+
+  /** Retire an index's commit point before its postings change: delete
+    * `_stats` (a build or maintenance that fails after this leaves an
+    * index that refuses to serve) and drop the prepared plans kept for
+    * `path`. The next `_stats` keys a new state anyway; dropping them is
+    * the belt and braces `vacuum` wears with `ParquetIO.invalidate`.
+    */
+  private def retireStats(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    graft.Fs.delete(spark, s"$path/_stats")
+    graft.PreparedPlans.invalidate(path)
   }
 
   /** The `postings` table of a lexical or positional index — the one
@@ -336,7 +371,10 @@ object Keyword {
     * one parquet footer ([[graft.ParquetFooters.sparkSchema]]) plus the
     * `bucket` partition column both builds write, so the read runs no
     * schema-inference job. A postings directory holding no data file
-    * falls through to Spark's inference, which fails loudly.
+    * falls through to Spark's inference, which fails loudly. A prepared
+    * [[bm25Indexed]] plan holds the relation it read, so a later query
+    * at the same index state reads no footer, lists no bucket directory
+    * and builds no relation.
     */
   private def readPostings(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String): DataFrame = {
@@ -417,7 +455,7 @@ object Keyword {
     // (including the moved-during-build recheck) must leave an index
     // that refuses to serve ("no stats") rather than one that silently
     // scores fresh postings under the superseded corpus totals
-    graft.Fs.delete(spark, s"$path/_stats")
+    retireStats(spark, path)
     val (n, sumdl, bk) = writePostings(docs, idCol, textCol, path, buckets, "overwrite")
     storeStamp.foreach { case (table, v0) =>
       val v1 = VersionedStore.currentState(spark, table).map(_.version).getOrElse(0L)
@@ -505,7 +543,7 @@ object Keyword {
         "buildLexicalIndexForStore")
     val newSegs = cur.segments.filterNot(old.segments.toSet)
     // stamp-first: a failure below leaves a loud no-stats index
-    graft.Fs.delete(spark, s"$path/_stats")
+    retireStats(spark, path)
     val (nNew, sumdlNew) =
       if (newSegs.isEmpty) (0L, 0L)
       else {
@@ -613,22 +651,38 @@ object Keyword {
     * query-side enforcement of that contract). Passing `store` to an
     * index built without one fails too: an unstamped index makes no
     * snapshot promise, so it cannot back a versioned-store query.
+    *
+    * Reuse per index state: the plan is a prepared plan
+    * ([[graft.PreparedPlans]]) keyed by the index path, its `_stats`
+    * text and modification time, the term and bucket counts (each
+    * padded to a multiple of 8, [[graft.PreparedPlans.inList]]),
+    * `topK`, `k1`, `b` and `idName`. It is analyzed once per key, over
+    * the postings relation the first query of that state read
+    * ([[readPostings]]); each query binds its terms and their buckets
+    * into it. The staleness check reads `_stats` on every query.
     */
   def bm25Indexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                   queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
                   topK: Int = 10, idName: String = "id",
                   store: Option[String] = None): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    val (nDocs, avgdl, tf) = indexedPostings(spark, indexPath, queryTerms, store)
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).as("__df"))
-    tf.join(broadcast(df), "term")
-      .withColumn("__s",
-        termScore(col("tf"), col("dl"), col("__df"), nDocs, avgdl, k1, b))
-      .groupBy(col("id"))
-      .agg(sum(col("__s")).as("__raw"))
-      .select(col("id").as(idName), round(col("__raw"), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col(idName))
-      .limit(topK)
+    val st = indexStats(spark, indexPath, store)
+    val buckets = graft.PreparedPlans.inList(bucketsOfTerms(queryTerms, st.buckets).map(Literal(_)))
+    graft.PreparedPlans.dataset(spark, indexPath,
+      (st.state, topK, k1, b, idName),
+      buckets ++ graft.PreparedPlans.inList(queryTerms.map(Literal(_)))) { slots =>
+      val (bucketCols, termCols) = slots.splitAt(buckets.size)
+      val tf = indexedPostings(spark, indexPath, st, bucketCols, termCols)
+      val df = tf.groupBy(col("term")).agg(count(lit(1)).as("__df"))
+      tf.join(broadcast(df), "term")
+        .withColumn("__s",
+          termScore(col("tf"), col("dl"), col("__df"), st.nDocs, st.avgdl, k1, b))
+        .groupBy(col("id"))
+        .agg(sum(col("__s")).as("__raw"))
+        .select(col("id").as(idName), round(col("__raw"), 6).as("bm25"))
+        .orderBy(col("bm25").desc, col(idName))
+        .limit(topK)
+    }
   }
 
   /** Batch [[bm25Indexed]]: rank every query's term set from a
@@ -652,12 +706,14 @@ object Keyword {
     val allTerms = queryTermsD.select(col(termName)).distinct()
       .collect().map(_.getString(0)).toSeq
     require(allTerms.nonEmpty, "queryTerms must carry at least one (qid, term) pair")
-    val (nDocs, avgdl, tf) = indexedPostings(spark, indexPath, allTerms, store)
+    val st = indexStats(spark, indexPath, store)
+    val tf = indexedPostings(spark, indexPath, st,
+      bucketsOfTerms(allTerms, st.buckets).map(lit), allTerms.map(lit))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("__df"))
     val scored = tf.join(broadcast(df), "term")
       .join(broadcast(queryTermsD.withColumnRenamed(termName, "term")), "term")
       .withColumn("__s",
-        termScore(col("tf"), col("dl"), col("__df"), nDocs, avgdl, k1, b))
+        termScore(col("tf"), col("dl"), col("__df"), st.nDocs, st.avgdl, k1, b))
       .groupBy(col(qidName), col("id"))
       .agg(sum(col("__s")).as("__raw"))
       .select(col(qidName).as("__qid"), col("id"), round(col("__raw"), 6).as("__bm25"))
@@ -665,13 +721,23 @@ object Keyword {
       .select(col(qidName), col("id"), col("rank"))
   }
 
+  /** A lexical index's `_stats` as one query read it: its state
+    * ([[IndexState]]) and the corpus totals it holds.
+    */
+  private final case class IndexStats(state: IndexState, nDocs: Long, sumdl: Long,
+                                      buckets: Int) {
+    def avgdl: Double = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
+  }
+
   /** Staleness-guarded `_stats` read shared by the pruned query path
-    * ([[indexedPostings]]) and the unpruned mining path
-    * ([[prfExpandTermsIndexed]]). Returns (nDocs, sumdl, buckets).
+    * ([[bm25Indexed]], [[bm25IndexedBatchRank]]) and the unpruned mining
+    * path ([[prfExpandTermsIndexed]]); runs on every query, whatever the
+    * query reuses.
     */
   private def indexStats(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                         store: Option[String]): (Long, Long, Int) = {
-    val stats = graft.Fs.readString(spark, s"$indexPath/_stats").trim.split(" ")
+                         store: Option[String]): IndexStats = {
+    val state = indexState(spark, indexPath)
+    val stats = state.fields
     // pre-dl-on-posting indexes wrote a 3-field _stats and a doclen/ dir;
     // serving one would die deep in Catalyst on the missing `dl` posting
     // column — detect the layout here and name the remedy instead
@@ -691,25 +757,20 @@ object Keyword {
           "df/N/avgdl wrong. Rebuild with buildLexicalIndex (the reference rebuilds " +
           "after every merge).")
     }
-    (stats(0).toLong, stats(1).toLong, stats(2).toInt)
+    IndexStats(state, stats(0).toLong, stats(1).toLong, stats(2).toInt)
   }
 
   /** Shared index-read head of [[bm25Indexed]]/[[bm25IndexedBatchRank]]:
-    * staleness-guarded stats plus the postings pruned to the query
-    * terms' hash buckets ([[bucketsOfTerms]], [[readPostings]]). Builds
-    * the plan without running a Spark job. Returns
-    * (N, avgdl, postings(term,id,tf,dl)).
+    * the postings (term, id, tf, dl) pruned to the query terms' hash
+    * buckets ([[bucketsOfTerms]]) and to the terms, both given as
+    * columns (literals, or a prepared plan's slots). Builds the plan
+    * without running a Spark job.
     */
   private def indexedPostings(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                              queryTerms: Seq[String],
-                              store: Option[String]): (Long, Double, DataFrame) = {
-    val (nDocs, sumdl, buckets) = indexStats(spark, indexPath, store)
-    val avgdl = if (nDocs == 0) 1.0 else sumdl.toDouble / nDocs
-    val tf = readPostings(spark, indexPath)
-      .filter(col("bucket").isin(bucketsOfTerms(spark, queryTerms, buckets): _*) &&
-        col("term").isin(queryTerms: _*))
-    (nDocs, avgdl, tf)
-  }
+                              st: IndexStats, buckets: Seq[Column],
+                              terms: Seq[Column]): DataFrame =
+    readPostings(spark, indexPath)
+      .filter(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
 
   /** Batch [[bm25]]: rank every query's term set against the corpus in
     * ONE corpus scan (a per-question [[bm25]] loop would re-tokenize the
@@ -946,7 +1007,7 @@ object Keyword {
         store = store)
       .select(col("id")).collect().map(_.get(0)).toSeq
     if (fb.isEmpty) return queryTerms
-    val (nDocs, _, _) = indexStats(spark, indexPath, store)
+    val st = indexStats(spark, indexPath, store)
     // the build indexes every token verbatim (including the '' a
     // whitespace-only doc tokenizes to); mining must drop it exactly as
     // the scan path's empty-token filter does
@@ -955,7 +1016,7 @@ object Keyword {
     val dfreq = postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val ftf = postings.filter(col("id").isin(fb: _*))
       .groupBy(col("term")).agg(sum(col("tf")).as("ftf"))
-    queryTerms ++ rocchioSelect(ftf, dfreq, nDocs, queryTerms, expandTerms)
+    queryTerms ++ rocchioSelect(ftf, dfreq, st.nDocs, queryTerms, expandTerms)
   }
 
   /** Per-document keyword extraction: the top-`k` terms by TF-IDF

@@ -246,7 +246,7 @@ object Pq {
       coarseCandidates(store, idCol, embCol, queryVec, k * overfetch, metric, model))
     pruned
       .select(col(idCol), col(embCol))
-      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), typedlit(queryVec)))
+      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), VectorFunctions.vector(queryVec)))
       .filter(col(scoreName).isNotNull)
       .orderBy(ordering(metric, col(scoreName)), col(idCol))
       .limit(k)
@@ -428,7 +428,7 @@ object Pq {
         queryVec, k * overfetch, metric, ivf, model))
     pruned
       .select(col(idCol), col(embCol))
-      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), typedlit(queryVec)))
+      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), VectorFunctions.vector(queryVec)))
       .filter(col(scoreName).isNotNull)
       .orderBy(ordering(metric, col(scoreName)), col(idCol))
       .limit(k)

@@ -88,7 +88,7 @@ object Quantize {
     val sQv = queryVec.map(_.toDouble).sum
     val qvNorm = math.sqrt(queryVec.map(v => v.toDouble * v.toDouble).sum)
     val dotInt = VectorFunctions.dotProduct(
-      col(s"${embCol}_q").cast("array<float>"), typedlit(queryVec))
+      col(s"${embCol}_q").cast("array<float>"), VectorFunctions.vector(queryVec))
     val approxDot = col(s"${embCol}_qscale").cast("double") * (dotInt + lit(128.0d * sQv)) +
       col(s"${embCol}_qmin").cast("double") * lit(sQv)
     val qn = col(s"${embCol}_qnorm").cast("double")
@@ -275,7 +275,7 @@ object Quantize {
       coarseCandidates(store, idCol, embCol, queryVec, k * overfetch, metric))
     pruned
       .select(col(idCol), col(embCol))
-      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), typedlit(queryVec)))
+      .withColumn(scoreName, VectorFunctions.score(metric)(col(embCol), VectorFunctions.vector(queryVec)))
       .filter(col(scoreName).isNotNull)
       .orderBy(ordering(metric, col(scoreName)), col(idCol))
       .limit(k)

@@ -38,8 +38,15 @@ object Similarity {
     * only k rows per partition reach the driver-side merge.
     */
   def knn(corpus: DataFrame, embCol: String, queryVec: Array[Float], k: Int,
-          metric: String = "COSINE", scoreName: String = "score"): DataFrame = {
-    val score = VectorFunctions.score(metric)(col(embCol), typedlit(queryVec))
+          metric: String = "COSINE", scoreName: String = "score"): DataFrame =
+    knnOf(corpus, embCol, VectorFunctions.vector(queryVec), k, metric, scoreName)
+
+  /** [[knn]] with the query vector given as a column: a literal, or the
+    * slot of a prepared plan ([[graft.PreparedPlans]]).
+    */
+  private[graft] def knnOf(corpus: DataFrame, embCol: String, queryVec: Column, k: Int,
+                           metric: String, scoreName: String = "score"): DataFrame = {
+    val score = VectorFunctions.score(metric)(col(embCol), queryVec)
     corpus
       .withColumn(scoreName, score)
       .orderBy(ordering(metric, col(scoreName)), col(corpus.columns.head))
@@ -94,7 +101,7 @@ object Similarity {
   def scoreThreshold(corpus: DataFrame, embCol: String, queryVec: Array[Float],
                      threshold: Double, metric: String = "COSINE",
                      scoreName: String = "score"): DataFrame = {
-    val score = VectorFunctions.score(metric)(col(embCol), typedlit(queryVec))
+    val score = VectorFunctions.score(metric)(col(embCol), VectorFunctions.vector(queryVec))
     val keep = if (metric == "EUCLIDEAN_DISTANCE") col(scoreName) <= threshold
                else col(scoreName) >= threshold
     corpus.withColumn(scoreName, score).filter(keep)

@@ -109,6 +109,13 @@ object VersionedStore {
         else throw e
     }
 
+  // one union frame per committed state: a state's segments are
+  // immutable, so the frame [[read]] builds for it is reusable verbatim,
+  // and a reader opening the store once per request (a chat question)
+  // pays the union's analysis once per state. [[vacuum]] drops a table's
+  // frames when it reclaims a segment.
+  private val stateFrames = new graft.SessionCache[DataFrame](1024)
+
   /** Column-name set of a segment (footer read; includes discovered
     * partition columns). The write-time guards compare these so a
     * segment whose SCHEMA disagrees with the table (e.g. bare rows into
@@ -175,11 +182,12 @@ object VersionedStore {
     * A pre-manifest flat-layout table (loose part files, no manifests)
     * reads as-is, so legacy stores stay visible to pure readers; the
     * first write through [[appendNonEmpty]]/[[compact]] adopts them into
-    * a committed segment.
+    * a committed segment. A session reading the same committed state
+    * (version and segment list) again gets the same frame back.
     */
   def read(spark: SparkSession, table: String): Option[DataFrame] =
     currentState(spark, table).filter(_.segments.nonEmpty)
-      .map(st => readState(spark, table, st))
+      .map(st => stateFrames.getOrElseUpdate(spark, table, st)(readState(spark, table, st)))
       .orElse {
         val loose = looseParquet(spark, table)
         if (loose.isEmpty) None else Some(spark.read.parquet(loose: _*))
@@ -1082,6 +1090,7 @@ object VersionedStore {
     // exactly the failure the readImmutable contract must make impossible
     // (the keys use the caller-form `$table/<seg>` path, same as every
     // read site). Only segments are cached; the other dead paths are not.
+    if (deadSegs.nonEmpty) stateFrames.invalidate(table)
     deadSegs.foreach { p =>
       graft.ParquetIO.invalidate(s"$table/${p.substring(p.lastIndexOf('/') + 1)}")
       graft.Fs.delete(spark, p)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkout
 import graft.Tables._
 
 /** Relational operator parity queries over the driver's TPC-H-ish tables.
@@ -347,7 +348,7 @@ object Relational {
     "cdxj_scan" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readCdxj(s, "/root/repo/fixtures/cdx/sample.cdxj")
+        .readCdxj(s, Checkout.fixture("cdx/sample.cdxj"))
         .orderBy($"surt", $"ts")
     }),
 
@@ -359,7 +360,7 @@ object Relational {
     "cdx_fetch_plan" -> ((s, _) => {
       import s.implicits._
       val idx = graft.sources.DocumentSources
-        .readCdxj(s, "/root/repo/fixtures/cdx/sample.cdxj")
+        .readCdxj(s, Checkout.fixture("cdx/sample.cdxj"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"surt").orderBy($"ts".desc)
       idx
@@ -379,9 +380,9 @@ object Relational {
     "warc_index_roundtrip" -> ((s, _) => {
       import s.implicits._
       val idx = graft.sources.DocumentSources
-        .indexWarcGz(s, "/root/repo/fixtures/warc/sample2.warc.gz")
+        .indexWarcGz(s, Checkout.fixture("warc/sample2.warc.gz"))
       val fetched = graft.sources.DocumentSources
-        .fetchWarcRecords(s, idx, "/root/repo/fixtures/warc")
+        .fetchWarcRecords(s, idx, Checkout.fixture("warc"))
         .select($"surt", decode($"content", "UTF-8").as("body_text"))
       idx.join(fetched, Seq("surt"))
         .select($"surt", $"ts", $"url", $"status", $"mime",
@@ -398,9 +399,9 @@ object Relational {
     "cdx_ranged_fetch" -> ((s, _) => {
       import s.implicits._
       val idx = graft.sources.DocumentSources
-        .readCdxj(s, "/root/repo/fixtures/cdx/fetch.cdxj")
+        .readCdxj(s, Checkout.fixture("cdx/fetch.cdxj"))
       graft.sources.DocumentSources
-        .fetchWarcRecords(s, idx, "/root/repo/fixtures/warc")
+        .fetchWarcRecords(s, idx, Checkout.fixture("warc"))
         .select($"surt", $"url", $"record_type", $"http_status",
           $"content_type",
           decode($"content", "UTF-8").as("body_text"))
@@ -416,7 +417,7 @@ object Relational {
     "crawl_health_by_domain" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readWarc(s, "/root/repo/fixtures/warc/*")
+        .readWarc(s, Checkout.fixture("warc/*"))
         .filter($"record_type" === "response")
         .withColumn("domain", graft.ops.UrlOps.registeredDomain(
           graft.ops.UrlOps.host($"target_uri")))
@@ -2060,9 +2061,9 @@ object Relational {
         |      FROM documents)
         |ORDER BY doc_id""".stripMargin,
     "cdxj_scan" ->
-      """WITH lines AS (
+      ("""WITH lines AS (
         |  SELECT unnest(string_split(rtrim(content, chr(10)), chr(10))) AS l
-        |  FROM read_text('/root/repo/fixtures/cdx/sample.cdxj')),
+        |  FROM read_text('""" + Checkout.fixture("cdx/sample.cdxj") + """')),
         |p AS (
         |  SELECT regexp_extract(l, '^(\S+)', 1) AS surt,
         |    regexp_extract(l, '^\S+ (\S+)', 1) AS ts,
@@ -2076,7 +2077,7 @@ object Relational {
         |  json_extract_string(j, '$.length')::BIGINT AS rec_length,
         |  json_extract_string(j, '$.offset')::BIGINT AS rec_offset,
         |  json_extract_string(j, '$.filename') AS filename
-        |FROM p ORDER BY surt, ts""".stripMargin,
+        |FROM p ORDER BY surt, ts""").stripMargin,
     "cdx_fetch_plan" ->
       """SELECT * FROM (VALUES
         |  ('com,example)/index.html', 'http://example.com/index.html',

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Checkout
 import graft.Tables._
 import graft.ops.{Dedup, Split, TextAnalysis}
 
@@ -398,7 +399,7 @@ object TextQueries {
         .join(docs.select($"doc_id", $"lang"), "doc_id")
       val total = docs.count()
       val profiles = graft.ops.LangId.trainProfiles(
-        graft.ops.LangId.readTraining(s, "/root/repo/fixtures/langid/train.jsonl"),
+        graft.ops.LangId.readTraining(s, Checkout.fixture("langid/train.jsonl")),
         "lang", "text")
       val heads = docs.select($"doc_id", substring($"text", 1, 200).as("head"))
       val und = graft.ops.LangId.classifyTop2(heads, "doc_id", "head", profiles)
@@ -933,7 +934,7 @@ object TextQueries {
     "text_lang_id_trained" -> ((s, d) => {
       import s.implicits._
       val profiles = graft.ops.LangId.trainProfiles(
-        graft.ops.LangId.readTraining(s, "/root/repo/fixtures/langid/train.jsonl"),
+        graft.ops.LangId.readTraining(s, Checkout.fixture("langid/train.jsonl")),
         "lang", "text")
       val docs = documents(s, d).select($"doc_id",
         concat(langIdHeldOutPhrase($"doc_id"), lit(" doc "),
@@ -956,7 +957,7 @@ object TextQueries {
     "text_lang_id_margin" -> ((s, d) => {
       import s.implicits._
       val profiles = graft.ops.LangId.trainProfiles(
-        graft.ops.LangId.readTraining(s, "/root/repo/fixtures/langid/train.jsonl"),
+        graft.ops.LangId.readTraining(s, Checkout.fixture("langid/train.jsonl")),
         "lang", "text")
       val docs = documents(s, d).select($"doc_id",
         concat(langIdHeldOutPhrase($"doc_id"), lit(" doc "),
@@ -1494,7 +1495,7 @@ object TextQueries {
     // the binary.
     "pdf_extract" -> ((s, _) => {
       import s.implicits._
-      graft.sources.DocumentSources.readPdf(s, "/root/repo/fixtures/pdf/*.pdf")
+      graft.sources.DocumentSources.readPdf(s, Checkout.fixture("pdf/*.pdf"))
         .select($"doc_id", $"text",
           element_at($"metadata", "page").cast("long").as("page"))
         .orderBy($"doc_id")
@@ -1508,7 +1509,7 @@ object TextQueries {
     "docx_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readDocx(s, "/root/repo/fixtures/docx/*.docx")
+        .readDocx(s, Checkout.fixture("docx/*.docx"))
         .select($"doc_id", $"text",
           element_at($"metadata", "para").cast("long").as("para"))
         .orderBy($"doc_id")
@@ -1544,7 +1545,7 @@ object TextQueries {
     "epub_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readEpub(s, "/root/repo/fixtures/epub/*.epub")
+        .readEpub(s, Checkout.fixture("epub/*.epub"))
         .select($"doc_id", $"text",
           element_at($"metadata", "title").as("title"),
           element_at($"metadata", "href").as("href"))
@@ -1558,7 +1559,7 @@ object TextQueries {
     "markdown_sections_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readMarkdownSections(s, "/root/repo/fixtures/md/*.md")
+        .readMarkdownSections(s, Checkout.fixture("md/*.md"))
         .select($"doc_id", $"section_idx", $"level".cast("long").as("level"),
           $"title", length($"body").cast("long").as("body_len"),
           md5($"body".cast("binary")).as("body_md5"))
@@ -1577,7 +1578,7 @@ object TextQueries {
     "html_sections_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readHtmlSections(s, "/root/repo/fixtures/html/*.html")
+        .readHtmlSections(s, Checkout.fixture("html/*.html"))
         .select($"doc_id", $"section_idx".cast("long").as("section_idx"),
           $"header", $"text")
         .orderBy($"doc_id", $"section_idx")
@@ -1593,7 +1594,7 @@ object TextQueries {
     "csv_scan_docs" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readCsv(s, "/root/repo/fixtures/csv/people.csv")
+        .readCsv(s, Checkout.fixture("csv/people.csv"))
         .select($"doc_id", $"text")
         .orderBy($"doc_id")
     }),
@@ -1611,7 +1612,7 @@ object TextQueries {
     "warc_records_scan" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readWarc(s, "/root/repo/fixtures/warc/*")
+        .readWarc(s, Checkout.fixture("warc/*"))
         .select($"warc_file", $"record_idx", $"record_type", $"target_uri",
           $"http_status", $"content_type",
           length($"content").cast("long").as("body_len"),
@@ -1626,7 +1627,7 @@ object TextQueries {
     "warc_documents_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readWarcDocuments(s, "/root/repo/fixtures/warc/*")
+        .readWarcDocuments(s, Checkout.fixture("warc/*"))
         .select($"doc_id", $"text",
           element_at($"metadata", "url").as("url"),
           element_at($"metadata", "content_type").as("content_type"))
@@ -1647,7 +1648,7 @@ object TextQueries {
     "warc_curation_pipeline" -> ((s, _) => {
       import s.implicits._
       val docs = graft.sources.DocumentSources
-        .readWarcDocuments(s, "/root/repo/fixtures/warc/*", mainContent = true)
+        .readWarcDocuments(s, Checkout.fixture("warc/*"), mainContent = true)
         .select($"doc_id", $"text", element_at($"metadata", "url").as("url"))
       val robots = Seq(
         ("example.org", "User-agent: graftbot\nDisallow: /b$\nDisallow: /chunk*\n"),
@@ -1672,7 +1673,7 @@ object TextQueries {
       val decodeText = udf((ct: String, b: Array[Byte]) =>
         graft.sources.WarcCodec.decodeBody(ct, b))
       graft.sources.DocumentSources
-        .readWarc(s, "/root/repo/fixtures/warc/*")
+        .readWarc(s, Checkout.fixture("warc/*"))
         .filter($"record_type" === "response" &&
           $"http_status" >= 200 && $"http_status" < 300 &&
           $"content_type".rlike("(?i)^(text/html|application/xhtml)"))
@@ -1759,7 +1760,7 @@ object TextQueries {
       import s.implicits._
       val ex = udf((html: String) => graft.ops.MainContent.extractBlocks(html))
       s.read.option("wholetext", "true")
-        .text("/root/repo/fixtures/htmlmain/portal.html")
+        .text(Checkout.fixture("htmlmain/portal.html"))
         .select(posexplode(ex($"value")))
         .select($"pos".cast("long").as("block_idx"), $"col".as("block_text"))
         .orderBy($"block_idx")
@@ -1773,7 +1774,7 @@ object TextQueries {
     "warc_wet_extract" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readWarcWet(s, "/root/repo/fixtures/warc/*")
+        .readWarcWet(s, Checkout.fixture("warc/*"))
         .select(concat($"warc_file", lit("_r"), $"record_idx").as("doc_id"),
           $"target_uri", $"content_type", $"wet_text")
         .orderBy($"doc_id")
@@ -1786,7 +1787,7 @@ object TextQueries {
     "warc_wat_outlinks" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readWarcOutlinks(s, "/root/repo/fixtures/warc/*")
+        .readWarcOutlinks(s, Checkout.fixture("warc/*"))
         .orderBy($"doc_id", $"link_idx")
     }),
 
@@ -1796,7 +1797,7 @@ object TextQueries {
     "jsonl_chunks_scan" -> ((s, _) => {
       import s.implicits._
       graft.sources.DocumentSources
-        .readChunksJson(s, "/root/repo/fixtures/jsonl/chunks.jsonl")
+        .readChunksJson(s, Checkout.fixture("jsonl/chunks.jsonl"))
         .select($"doc_id", $"text",
           $"metadata.source".as("source"), $"metadata.page".as("page"))
         .orderBy($"doc_id")
@@ -1808,7 +1809,7 @@ object TextQueries {
     "jsonl_testset_scan" -> ((s, _) => {
       import s.implicits._
       graft.ops.Testbed
-        .readTestset(s, "/root/repo/fixtures/jsonl/testset.jsonl")
+        .readTestset(s, Checkout.fixture("jsonl/testset.jsonl"))
         .orderBy($"question")
     }),
 
@@ -1817,7 +1818,7 @@ object TextQueries {
     "json_testset_array_scan" -> ((s, _) => {
       import s.implicits._
       graft.ops.Testbed
-        .readTestset(s, "/root/repo/fixtures/jsonl/testset_array.json",
+        .readTestset(s, Checkout.fixture("jsonl/testset_array.json"),
           multiLine = true)
         .orderBy($"question")
     }),
@@ -1834,7 +1835,7 @@ object TextQueries {
       import s.implicits._
       val probe = udf((b: Array[Byte]) => graft.sources.WavCodec.probe(b))
       val wrms = udf((b: Array[Byte]) => graft.sources.WavCodec.windowRms(b, 4))
-      s.read.format("binaryFile").load("/root/repo/fixtures/media/*.wav")
+      s.read.format("binaryFile").load(Checkout.fixture("media/*.wav"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           probe($"content").as("p"), wrms($"content").as("w"))
         .select($"media_id",
@@ -1853,7 +1854,7 @@ object TextQueries {
       import s.implicits._
       val probe = udf((b: Array[Byte]) => graft.sources.BmpCodec.probe(b))
       val luma = udf((b: Array[Byte]) => graft.sources.BmpCodec.gridLuma(b, 2))
-      s.read.format("binaryFile").load("/root/repo/fixtures/media/*.bmp")
+      s.read.format("binaryFile").load(Checkout.fixture("media/*.bmp"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           probe($"content").as("p"), luma($"content").as("g"))
         .select($"media_id",
@@ -1879,7 +1880,7 @@ object TextQueries {
       import s.implicits._
       val dec = graft.ops.Multimodal.CodecDecoder()
       val probe = udf((kind: String, b: Array[Byte]) => dec.probe(kind, b))
-      s.read.format("binaryFile").load("/root/repo/fixtures/av/*")
+      s.read.format("binaryFile").load(Checkout.fixture("av/*"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           when($"path".endsWith(".mp4"), "video").otherwise("audio").as("kind"),
           $"content")
@@ -2126,7 +2127,7 @@ object TextQueries {
     "warc_revisit_dedup" -> ((s, _) => {
       import s.implicits._
       val recs = graft.sources.DocumentSources
-        .readWarc(s, "/root/repo/fixtures/warc-revisit/*")
+        .readWarc(s, Checkout.fixture("warc-revisit/*"))
       val orig = recs.filter($"record_type" === "response")
         .select($"payload_digest",
           $"target_uri".as("original_uri"),
@@ -2240,8 +2241,8 @@ object TextQueries {
           case other => (other, -1L, -1L, -1L, false, -1L)
         })
       s.read.format("binaryFile")
-        .load("/root/repo/fixtures/media/*.gif",
-          "/root/repo/fixtures/media/*.tif")
+        .load(Checkout.fixture("media/*.gif"),
+          Checkout.fixture("media/*.tif"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           probe($"content").as("p"))
         .select($"media_id", $"p._1".as("container"), $"p._2".as("width"),
@@ -2253,7 +2254,7 @@ object TextQueries {
     "image_dhash_pairs" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.bmp", "image")
+        .readMediaDir(s, Checkout.fixture("media/*.bmp"), "image")
       graft.ops.Multimodal
         .imageDHashPairs(media, "media_id", "bytes", maxHamming = 4, bands = 8)
         .select($"id_a", $"id_b", $"hamming".cast("long").as("hamming"))
@@ -2270,7 +2271,7 @@ object TextQueries {
     "image_dhash_mixed_pairs" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.{bmp,png,jpg}", "image")
+        .readMediaDir(s, Checkout.fixture("media/*.{bmp,png,jpg}"), "image")
       graft.ops.Multimodal
         .imageDHashPairs(media, "media_id", "bytes", maxHamming = 4, bands = 8)
         .select($"id_a", $"id_b", $"hamming".cast("long").as("hamming"))
@@ -2286,7 +2287,7 @@ object TextQueries {
     "image_exif_report" -> ((s, _) => {
       import s.implicits._
       val tags = udf((b: Array[Byte]) => graft.sources.ExifCodec.parse(b))
-      s.read.format("binaryFile").load("/root/repo/fixtures/media/*.jpg")
+      s.read.format("binaryFile").load(Checkout.fixture("media/*.jpg"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           posexplode(tags($"content")))
         .select($"media_id", $"pos".cast("long").as("tag_idx"),
@@ -2305,8 +2306,8 @@ object TextQueries {
       import s.implicits._
       val tags = udf((b: Array[Byte]) => graft.sources.PngMeta.parse(b))
       s.read.format("binaryFile")
-        .load("/root/repo/fixtures/pngmeta/*.png",
-          "/root/repo/fixtures/media/*.png")
+        .load(Checkout.fixture("pngmeta/*.png"),
+          Checkout.fixture("media/*.png"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           posexplode(tags($"content")))
         .select($"media_id", $"pos".cast("long").as("tag_idx"),
@@ -2333,7 +2334,7 @@ object TextQueries {
           graft.sources.ImageCodec.dHash64(b) ==
             graft.sources.ImageCodec.dHash64(stripped))
       })
-      s.read.format("binaryFile").load("/root/repo/fixtures/media/*.jpg")
+      s.read.format("binaryFile").load(Checkout.fixture("media/*.jpg"))
         .select(regexp_extract($"path", "([^/]+)$", 1).as("media_id"),
           audit($"content").as("a"))
         .select($"media_id",
@@ -2351,7 +2352,7 @@ object TextQueries {
     "media_dedup_survivors" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.{bmp,png,jpg}", "image")
+        .readMediaDir(s, Checkout.fixture("media/*.{bmp,png,jpg}"), "image")
       val pairs = graft.ops.Multimodal
         .imageDHashPairs(media, "media_id", "bytes", maxHamming = 4, bands = 8)
       graft.ops.Dedup.nearDupSurvivors(media, "media_id", pairs)
@@ -2368,7 +2369,7 @@ object TextQueries {
     "audio_dedup_survivors" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.wav", "audio")
+        .readMediaDir(s, Checkout.fixture("media/*.wav"), "audio")
       val pairs = graft.ops.Multimodal
         .audioFingerprintPairs(media, "media_id", "bytes", maxHamming = 4)
       graft.ops.Dedup.nearDupSurvivors(media, "media_id", pairs)
@@ -2382,7 +2383,7 @@ object TextQueries {
     "audio_activity_report" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.wav", "audio")
+        .readMediaDir(s, Checkout.fixture("media/*.wav"), "audio")
       graft.ops.Multimodal
         .audioActivity(media, "media_id", "bytes", windows = 8, threshold = 0.01)
         .orderBy($"media_id")
@@ -2399,7 +2400,7 @@ object TextQueries {
     "audio_fingerprint_pairs" -> ((s, _) => {
       import s.implicits._
       val media = graft.ops.Multimodal
-        .readMediaDir(s, "/root/repo/fixtures/media/*.wav", "audio")
+        .readMediaDir(s, Checkout.fixture("media/*.wav"), "audio")
       graft.ops.Multimodal
         .audioFingerprintPairs(media, "media_id", "bytes", maxHamming = 6)
         .select($"id_a", $"id_b", $"hamming".cast("long").as("hamming"))
@@ -2697,7 +2698,7 @@ object TextQueries {
   private def langIdDistCtes(docsBody: String): String =
     s"""train AS (
         |  SELECT lang, lower(regexp_replace(trim(text), '\\s+', ' ', 'g')) AS t
-        |  FROM read_json('/root/repo/fixtures/langid/train.jsonl',
+        |  FROM read_json('${Checkout.fixture("langid/train.jsonl")}',
         |                 format='newline_delimited')),
         |tg AS (
         |  SELECT lang, substr(t, p::INT, n::INT) AS gram
@@ -3605,10 +3606,10 @@ object TextQueries {
     // so any quote/escape/multiline/unicode divergence between the two
     // parsers fails the hash
     "csv_scan_docs" ->
-      """SELECT 'people_' || rid AS doc_id,
+      s"""SELECT 'people_' || rid AS doc_id,
         |  'rid: ' || rid || chr(10) || 'name: ' || name || chr(10) ||
         |  'role: ' || role || chr(10) || 'notes: ' || notes AS text
-        |FROM read_csv('/root/repo/fixtures/csv/people.csv',
+        |FROM read_csv('${Checkout.fixture("csv/people.csv")}',
         |              header=true, all_varchar=true)
         |ORDER BY doc_id""".stripMargin,
     "warc_records_scan" ->
@@ -3763,21 +3764,21 @@ object TextQueries {
         |) t(doc_id, link_idx, href, href_abs)
         |ORDER BY doc_id, link_idx""".stripMargin,
     "jsonl_chunks_scan" ->
-      """SELECT id AS doc_id, page_content AS text,
+      s"""SELECT id AS doc_id, page_content AS text,
         |  metadata.source AS source, metadata.page AS page
-        |FROM read_json('/root/repo/fixtures/jsonl/chunks.jsonl',
+        |FROM read_json('${Checkout.fixture("jsonl/chunks.jsonl")}',
         |               format='newline_delimited')
         |ORDER BY doc_id""".stripMargin,
     "jsonl_testset_scan" ->
-      """SELECT question, reference_answer, reference_context,
+      s"""SELECT question, reference_answer, reference_context,
         |  coalesce(metadata.topic, 'Others') AS topic
-        |FROM read_json('/root/repo/fixtures/jsonl/testset.jsonl',
+        |FROM read_json('${Checkout.fixture("jsonl/testset.jsonl")}',
         |               format='newline_delimited')
         |ORDER BY question""".stripMargin,
     "json_testset_array_scan" ->
-      """SELECT question, reference_answer, reference_context,
+      s"""SELECT question, reference_answer, reference_context,
         |  coalesce(metadata.topic, 'Others') AS topic
-        |FROM read_json('/root/repo/fixtures/jsonl/testset_array.json',
+        |FROM read_json('${Checkout.fixture("jsonl/testset_array.json")}',
         |               format='array')
         |ORDER BY question""".stripMargin,
     // the expected WAV probe values as literals — the engine must decode

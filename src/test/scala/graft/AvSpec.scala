@@ -11,7 +11,7 @@ class AvSpec extends AnyFunSuite {
 
   test("committed av fixtures are byte-identical to the generator") {
     AvFixtures.all.foreach { case (name, bytes) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/av/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"av/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenAvFixtures fixtures/av")
       assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p), bytes),

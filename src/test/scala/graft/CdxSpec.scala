@@ -6,7 +6,7 @@ class CdxSpec extends AnyFunSuite {
 
   test("committed cdx fixtures are byte-identical to the generator") {
     CdxFixtures.all.foreach { case (name, text) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/cdx/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"cdx/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenCdxFixtures fixtures/cdx")
       assert(new String(java.nio.file.Files.readAllBytes(p), "UTF-8") == text,
@@ -18,7 +18,7 @@ class CdxSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val rows = graft.sources.DocumentSources
-      .readCdxj(spark, "/root/repo/fixtures/cdx/sample.cdxj")
+      .readCdxj(spark, Checkout.fixture("cdx/sample.cdxj"))
       .orderBy($"surt", $"ts").collect()
     assert(rows.length == 6)
     val first = rows.head
@@ -37,9 +37,9 @@ class CdxSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val idx = graft.sources.DocumentSources
-      .readCdxj(spark, "/root/repo/fixtures/cdx/fetch.cdxj")
+      .readCdxj(spark, Checkout.fixture("cdx/fetch.cdxj"))
     val got = graft.sources.DocumentSources
-      .fetchWarcRecords(spark, idx, "/root/repo/fixtures/warc")
+      .fetchWarcRecords(spark, idx, Checkout.fixture("warc"))
       .select($"surt", $"record_type", $"http_status")
       .as[(String, String, Long)].collect().sortBy(_._1).toSeq
     assert(got == Seq(("org,example)/a", "response", 200L),
@@ -50,7 +50,7 @@ class CdxSpec extends AnyFunSuite {
       .toDF("surt", "ts", "url", "mime", "status", "digest",
         "rec_length", "rec_offset", "filename")
     val errRow = graft.sources.DocumentSources
-      .fetchWarcRecords(spark, bad, "/root/repo/fixtures/warc")
+      .fetchWarcRecords(spark, bad, Checkout.fixture("warc"))
       .select($"record_type").as[String].collect()
     assert(errRow.toSeq == Seq("error"))
   }
@@ -81,11 +81,11 @@ class CdxSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val built = graft.sources.DocumentSources
-      .indexWarcGz(spark, "/root/repo/fixtures/warc/sample2.warc.gz")
+      .indexWarcGz(spark, Checkout.fixture("warc/sample2.warc.gz"))
       .select($"surt", $"rec_offset", $"rec_length", $"filename")
       .as[(String, Long, Long, String)].collect().sortBy(_._1).toSeq
     val committed = graft.sources.DocumentSources
-      .readCdxj(spark, "/root/repo/fixtures/cdx/fetch.cdxj")
+      .readCdxj(spark, Checkout.fixture("cdx/fetch.cdxj"))
       .select($"surt", $"rec_offset", $"rec_length", $"filename")
       .as[(String, Long, Long, String)].collect().sortBy(_._1).toSeq
     assert(built == committed,

@@ -8,7 +8,7 @@ class DocxSpec extends AnyFunSuite {
 
   test("committed docx fixtures are byte-identical to the generator") {
     DocxFixtures.all.foreach { case (name, bytes) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/docx/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"docx/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenDocxFixtures fixtures/docx")
       assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p), bytes),
@@ -45,7 +45,7 @@ class DocxSpec extends AnyFunSuite {
   test("readDocx lands paragraph rows with stable provenance ids") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val rows = DocumentSources.readDocx(spark, "/root/repo/fixtures/docx/*.docx")
+    val rows = DocumentSources.readDocx(spark, Checkout.fixture("docx/*.docx"))
       .orderBy($"doc_id")
       .select($"doc_id", $"text").as[(String, String)].collect().toSeq
     assert(rows == Seq(

@@ -8,7 +8,7 @@ class EpubSpec extends AnyFunSuite {
 
   test("committed epub fixture is byte-identical to the generator") {
     EpubFixtures.all.foreach { case (name, bytes) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/epub/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"epub/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenEpubFixtures fixtures/epub")
       assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p), bytes),
@@ -37,7 +37,7 @@ class EpubSpec extends AnyFunSuite {
   test("readEpub lands spine rows with title/href metadata") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val rows = DocumentSources.readEpub(spark, "/root/repo/fixtures/epub/*.epub")
+    val rows = DocumentSources.readEpub(spark, Checkout.fixture("epub/*.epub"))
       .orderBy($"doc_id")
       .select($"doc_id", $"text", $"metadata"("title"), $"metadata"("href"))
       .as[(String, String, String, String)].collect().toSeq

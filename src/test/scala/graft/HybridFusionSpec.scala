@@ -110,6 +110,137 @@ class HybridFusionSpec extends AnyFunSuite {
     assert(planJobs == 0, s"building the bm25Indexed plan ran $planJobs jobs")
   }
 
+  test("term buckets hash on the driver exactly as Spark's pmod(xxhash64(t), b)") {
+    val terms = Seq("spark", "a", "", "café", "naïve", "東京", "データ", "😀", "a😀b𝄞",
+      "x" * 10240)
+    for (b <- Seq(1, 7, 4096)) {
+      val sql = terms.toDF("t").select(pmod(xxhash64(col("t")), lit(b)).cast("int"))
+        .as[Int].collect().toSeq
+      assert(Keyword.bucketsOfTerms(terms, b) == sql.distinct, s"buckets = $b")
+      assert(terms.map(t => Keyword.bucketsOfTerms(Seq(t), b).head) == sql, s"buckets = $b")
+    }
+  }
+
+  /** A second driver rewriting the index at `to`, which this process
+    * never hears about: the files of `from` replace those of `to`. The
+    * rewrite is repeated until `to`'s `_stats` carries a modification
+    * time other than the one it had, since on a filesystem whose mtime
+    * grain is coarse (one second on some) a rewrite within the grain
+    * keeps the old time, and `_stats`'s text and time are all a reader
+    * can tell states apart by.
+    */
+  private def replaceIndex(from: String, to: String): Unit = {
+    import java.nio.file.{Path, Paths}
+    def walk(p: Path): Seq[Path] = {
+      val s = Files.walk(p)
+      try { import scala.jdk.CollectionConverters._; s.iterator().asScala.toList } finally s.close()
+    }
+    def stamp = Fs.modTime(spark, s"$to/_stats")
+    val before = stamp
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    do {
+      Thread.sleep(5)
+      walk(Paths.get(to)).reverse.foreach(Files.delete)
+      walk(Paths.get(from)).foreach(p =>
+        Files.copy(p, Paths.get(to).resolve(Paths.get(from).relativize(p).toString)))
+    } while (stamp == before && System.nanoTime() < deadline)
+    assert(stamp != before, s"$to/_stats kept its modification time for 10 s")
+  }
+
+  /** A versioned table of four docs and a lexical index builder stamped
+    * at its current version; `lex` and `ask` are the lexical leg and a
+    * hybrid question over the index at a path.
+    */
+  private def lexicalFixture(name: String) = {
+    import graft.ops.VersionedStore
+    val embedder = HashEmbedder(dim = 32)
+    val table = Files.createTempDirectory(s"graft-lexstate-$name").toString + "/T"
+    val docs = Seq(
+      (1L, "spark catalyst optimizer plans queries"),
+      (2L, "parquet files store columnar data"),
+      (3L, "cooking pasta requires boiling water"),
+      (4L, "streaming watermarks bound state growth"))
+    def append(rows: Seq[(Long, String)]) = VersionedStore.append(spark, table,
+      rows.toDF("doc_id", "text")
+        .withColumn("embedding", graft.embed.EmbedText.embedText(col("text"), embedder)))
+    append(docs)
+    def index(rows: Seq[(Long, String)]): String = {
+      val p = Files.createTempDirectory(s"graft-lexstate-$name-idx").toString
+      Keyword.buildLexicalIndex(rows.toDF("doc_id", "text"), "doc_id", "text", p,
+        buckets = 8, store = Some(table))
+      p
+    }
+    def lex(idx: String) = Keyword.bm25Indexed(spark, idx, Seq("boiling", "pasta"),
+      topK = 3, idName = "doc_id", store = Some(table)).as[(Long, Double)].collect().toSeq
+    def ask(idx: String) = Chat.answer(spark, "boiling pasta",
+      VersionedStore.read(spark, table).get, "doc_id", "text", "embedding", embedder,
+      topK = 1, searchType = Chat.SearchType.Hybrid(fetchKPerLeg = 1,
+        lexicalIndexPath = Some(idx)), indexStorePath = Some(table))
+    (table, docs, append _, index _, lex _, ask _)
+  }
+
+  test("prepared lexical plans follow the index: a rebuild in place at the same store version") {
+    val (_, docs, _, index, lex, ask) = lexicalFixture("rebuild")
+    // the same doc count and lengths as the store's docs, so both builds
+    // write the same _stats text: only its modification time tells the
+    // two states apart
+    val pizza = docs.map { case (i, t) => (i, t.replace("pasta", "pizza")) }
+    val (reference, served, fresh) = (index(pizza), index(pizza), index(docs))
+    assert(Fs.readString(spark, s"$served/_stats") == Fs.readString(spark, s"$fresh/_stats"))
+    assert(lex(served) == lex(reference) && ask(served) == ask(reference))
+    assert(lex(served) != lex(fresh), "pasta scores only in the fresh build")
+    replaceIndex(fresh, served)
+    assert(lex(served) == lex(fresh) && ask(served) == ask(fresh))
+  }
+
+  test("prepared lexical plans follow the index: one incremental append") {
+    val (table, docs, append, index, lex, ask) = lexicalFixture("append")
+    val (served, maintained) = (index(docs), index(docs))
+    assert(lex(served) == lex(maintained) && ask(served) == ask(maintained))
+    append(Seq((5L, "fresh pasta with boiling broth")))
+    Keyword.appendToLexicalIndexForStore(spark, table, "doc_id", "text", maintained)
+    replaceIndex(maintained, served)
+    assert(lex(maintained).map(_._1).contains(5L))
+    assert(lex(served) == lex(maintained) && ask(served) == ask(maintained))
+  }
+
+  test("a second question at the same store and index state runs no analysis rule") {
+    import graft.ops.{Ivf, VersionedStore}
+    import graft.ops.Chat.SearchType
+    val embedder = HashEmbedder(dim = 32)
+    val dir = Files.createTempDirectory("graft-noanalysis").toString
+    val cfg = Ingest.StoreConfig("noan", "hash-32", 200, 0)
+    Ingest.ingest(spark, Seq(
+      (1L, "spark catalyst optimizer plans queries"),
+      (2L, "parquet files store columnar data"),
+      (3L, "cooking pasta requires boiling water")).toDF("doc_id", "text"),
+      "doc_id", "text", dir, cfg, embedder)
+    val table = s"$dir/${cfg.tableName}"
+    val model = Ivf.indexStore(spark, table, "id", "embedding", k = 2)
+    val idx = Files.createTempDirectory("graft-noanalysis-lex").toString
+    Keyword.buildLexicalIndexForStore(spark, table, "id", "text", idx)
+    def analysisRules(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.tracker.rules.keySet
+        .filter(_.startsWith("org.apache.spark.sql.catalyst.analysis")).toSet
+    for (st <- Seq(SearchType.Similarity, SearchType.ScoreThreshold(0.5), SearchType.Mmr(),
+                   SearchType.Hybrid())) {
+      def leg(q: String) = Chat.vectorLeg(VersionedStore.read(spark, table).get,
+        "id", "text", "embedding", Some((model, 1)), embedder.embed(q), st, 2, "COSINE")
+      val first = leg(s"$st first question about spark")
+      val second = leg("a second question about pasta water")
+      assert(analysisRules(first).nonEmpty, s"$st: the first question analyzes its plan")
+      assert(analysisRules(second).isEmpty, s"$st: ${analysisRules(second)}")
+      assert(second.collect().nonEmpty)
+    }
+    def lex(terms: Seq[String]) =
+      Keyword.bm25Indexed(spark, idx, terms, topK = 3, store = Some(table))
+    // questions of 1 to 8 terms share one plan
+    assert(analysisRules(lex(Seq("spark", "plans"))).nonEmpty)
+    val second = lex(Seq("pasta", "boiling", "water"))
+    assert(analysisRules(second).isEmpty, analysisRules(second))
+    assert(second.collect().nonEmpty)
+  }
+
   test("bm25, bm25BatchRank, prfExpandTerms and buildLexicalIndex release persisted data when a job fails") {
     val sc = spark.sparkContext
     val boom = udf((s: String) => if (s == "boom") throw new IllegalStateException("boom") else s)

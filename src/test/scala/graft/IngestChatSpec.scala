@@ -989,6 +989,86 @@ class IngestChatSpec extends AnyFunSuite {
       "shadowed rows stay invisible — the check is the discovery surface")
   }
 
+  /** A clustered store of four docs, its IVF model, and a question
+    * about a fifth doc no store row holds yet; `ask` reads the store
+    * afresh, as a server does per request.
+    */
+  private def preparedFixture(name: String) = {
+    import graft.ops.{Ivf, VersionedStore}
+    import graft.ops.Chat.SearchType
+    val dir = Files.createTempDirectory(s"graft-prepared-$name").toString
+    val cfg = Ingest.StoreConfig("prep", "hash-32", 200, 0)
+    val docs = Seq(
+      (1L, "spark catalyst optimizer plans queries"),
+      (2L, "parquet files store columnar data"),
+      (3L, "cooking pasta requires boiling water"),
+      (4L, "streaming watermarks bound state growth"))
+    Ingest.ingest(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg, embedder)
+    val table = s"$dir/${cfg.tableName}"
+    val model = Ivf.indexStore(spark, table, "id", "embedding", k = 2)
+    // named after the case, so no two cases' stores answer alike
+    val quokka = s"quokka marsupials hop across rottnest island $name"
+    def ask(st: SearchType) = Chat.answer(spark, quokka, VersionedStore.read(spark, table).get,
+      "id", "text", "embedding", embedder, topK = 1, index = Some((model, model.k)),
+      searchType = st, indexStorePath = Some(table))
+    // every leg shape, each asked once below: its plan is then kept
+    val legs = Seq(SearchType.Similarity, SearchType.ScoreThreshold(0.0),
+      SearchType.Mmr(fetchK = 3), SearchType.Hybrid(fetchKPerLeg = 3))
+    val append = () => Ingest.ingest(spark, (docs :+ ((5L, quokka))).toDF("doc_id", "text"),
+      "doc_id", "text", dir, cfg, embedder)
+    (dir, cfg, table, legs, quokka, ask _, append)
+  }
+
+  test("prepared question plans follow the store: a seam append is the next question's state") {
+    val (_, _, _, legs, quokka, ask, append) = preparedFixture("append")
+    legs.foreach(st => assert(!ask(st).context.contains("quokka"), st))
+    // a seam append commits a new manifest version holding a new segment
+    assert(append().appended == 1)
+    legs.foreach { st =>
+      val a = ask(st)
+      assert(a.context == quokka, s"$st must retrieve the appended row: $a")
+    }
+  }
+
+  test("prepared question plans follow the store: a question still answers after compact + vacuum") {
+    val (dir, cfg, table, legs, quokka, ask, append) = preparedFixture("vacuum")
+    assert(append().appended == 1)
+    val before = legs.map(ask)
+    assert(before.forall(_.context == quokka), before)
+    // compaction retires both segments and vacuum deletes them: a plan
+    // still bound to their relations would read files that are gone
+    assert(Ingest.compactStore(spark, dir, cfg) > 0)
+    assert(graft.ops.VersionedStore.vacuum(spark, table, graceMs = 0L).nonEmpty)
+    assert(legs.map(ask) == before)
+  }
+
+  test("prepared question plans follow the caller's frame: a plain directory read again") {
+    import graft.ops.Chat.SearchType
+    val dir = Files.createTempDirectory("graft-prepared-plain").toString + "/store"
+    def write(mode: String, rows: (Long, String)*): Unit = rows.toDF("id", "text")
+      .withColumn("embedding", graft.embed.EmbedText.embedText(col("text"), embedder))
+      .write.mode(mode).parquet(dir)
+    val docs = Seq(
+      (1L, "spark catalyst optimizer plans queries"),
+      (2L, "parquet files store columnar data"),
+      (3L, "cooking pasta requires boiling water"))
+    write("append", docs: _*)
+    val quokka = "quokka marsupials hop across rottnest island"
+    // read afresh per question: each frame lists the directory's files
+    def ask(st: SearchType) = Chat.answer(spark, quokka, spark.read.parquet(dir),
+      "id", "text", "embedding", embedder, topK = 1, searchType = st)
+    val legs = Seq(SearchType.Similarity, SearchType.ScoreThreshold(0.0),
+      SearchType.Mmr(fetchK = 3), SearchType.Hybrid(fetchKPerLeg = 3))
+    legs.foreach(st => assert(!ask(st).context.contains("quokka"), st))
+    // a new file in the same directory: the two frames' relations are
+    // equal plans to Spark, but only the new one lists the file
+    write("append", (4L, quokka))
+    legs.foreach(st => assert(ask(st).context == quokka, s"$st: ${ask(st)}"))
+    // an overwrite deletes the files the earlier frames listed
+    write("overwrite", (5L, quokka), (6L, docs.head._2))
+    legs.foreach(st => assert(ask(st).retrievedIds == Seq("5"), st))
+  }
+
   test("publishExclusive refuses schemes without an atomic no-overwrite publish") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mockobj.impl", classOf[MockObjectStoreFs].getName)

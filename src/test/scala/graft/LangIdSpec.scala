@@ -8,7 +8,7 @@ class LangIdSpec extends AnyFunSuite {
 
   test("committed langid fixtures are byte-identical to the generator") {
     LangIdFixtures.all.foreach { case (name, text) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/langid/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"langid/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenLangIdFixtures fixtures/langid")
       assert(new String(java.nio.file.Files.readAllBytes(p), "UTF-8") == text,
@@ -20,7 +20,7 @@ class LangIdSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val profiles = LangId.trainProfiles(
-      LangId.readTraining(spark, "/root/repo/fixtures/langid/train.jsonl"),
+      LangId.readTraining(spark, Checkout.fixture("langid/train.jsonl")),
       "lang", "text")
     // none of these sentences appear in the training corpus
     val held = Seq(
@@ -81,7 +81,7 @@ class LangIdSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val profiles = LangId.trainProfiles(
-      LangId.readTraining(spark, "/root/repo/fixtures/langid/train.jsonl"),
+      LangId.readTraining(spark, Checkout.fixture("langid/train.jsonl")),
       "lang", "text")
     val pmap = LangId.collectProfiles(profiles)
     assert(pmap.size == 30 && pmap.values.forall(_.nonEmpty))
@@ -124,7 +124,7 @@ class LangIdSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val profiles = LangId.trainProfiles(
-      LangId.readTraining(spark, "/root/repo/fixtures/langid/train.jsonl"),
+      LangId.readTraining(spark, Checkout.fixture("langid/train.jsonl")),
       "lang", "text")
     val docs = Seq(
       (0L, "der schnelle zug fährt heute nicht weil die strecke gesperrt wurde"),
@@ -152,7 +152,7 @@ class LangIdSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val profiles = LangId.trainProfiles(
-      LangId.readTraining(spark, "/root/repo/fixtures/langid/train.jsonl"),
+      LangId.readTraining(spark, Checkout.fixture("langid/train.jsonl")),
       "lang", "text")
     val pmap = LangId.collectProfiles(profiles)
     val docs = Seq(

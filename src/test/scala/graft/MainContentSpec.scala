@@ -8,7 +8,7 @@ class MainContentSpec extends AnyFunSuite {
 
   test("committed htmlmain fixtures are byte-identical to the generator") {
     HtmlMainFixtures.all.foreach { case (name, text) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/htmlmain/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"htmlmain/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenHtmlMainFixtures fixtures/htmlmain")
       assert(new String(java.nio.file.Files.readAllBytes(p), "UTF-8") == text,

@@ -13,7 +13,7 @@ class MediaSpec extends AnyFunSuite {
 
   test("committed media fixtures are byte-identical to the generator") {
     MediaFixtures.all.foreach { case (name, bytes) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/media/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"media/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenMediaFixtures fixtures/media")
       assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p), bytes),
@@ -145,7 +145,7 @@ class MediaSpec extends AnyFunSuite {
     // generator's output (bytes may differ across encoder versions —
     // the semantic pin is what must hold)
     MediaFixtures.rendered.foreach { case (name, gen) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/media/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"media/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenMediaFixtures fixtures/media")
       val committed = java.nio.file.Files.readAllBytes(p)
@@ -193,7 +193,7 @@ class MediaSpec extends AnyFunSuite {
     import TestSpark._
     import spark.implicits._
     val media = graft.ops.Multimodal
-      .readMediaDir(spark, "/root/repo/fixtures/media/*.wav", "audio")
+      .readMediaDir(spark, Checkout.fixture("media/*.wav"), "audio")
     val exact = graft.ops.Multimodal
       .audioFingerprintPairs(media, "media_id", "bytes", maxHamming = 4)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
@@ -210,7 +210,7 @@ class MediaSpec extends AnyFunSuite {
     import TestSpark._
     import spark.implicits._
     val media = graft.ops.Multimodal
-      .readMediaDir(spark, "/root/repo/fixtures/media/*.bmp", "image")
+      .readMediaDir(spark, Checkout.fixture("media/*.bmp"), "image")
     val got = graft.ops.Multimodal
       .imageDHashPairs(media, "media_id", "bytes", maxHamming = 4, bands = 8)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toList
@@ -244,7 +244,7 @@ class MediaSpec extends AnyFunSuite {
   }
 
   test("PNG text chunks: tEXt latin-1, iTXt utf-8 both flags, zTXt, junk tolerated") {
-    val p = java.nio.file.Paths.get("/root/repo/fixtures/pngmeta/meta.png")
+    val p = java.nio.file.Paths.get(Checkout.fixture("pngmeta/meta.png"))
     assert(java.nio.file.Files.exists(p),
       "run Test/runMain graft.GenPngMetaFixtures fixtures/pngmeta")
     assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p),

@@ -71,4 +71,21 @@ class ParquetIOSpec extends AnyFunSuite {
     ParquetIO.invalidate(s"$t/$seg")
     assert(!(ParquetIO.readImmutable(spark, s"$t/$seg") eq kept))
   }
+
+  test("VersionedStore.read returns one frame per committed state and session") {
+    val t = freshTable("state")
+    VersionedStore.append(spark, t, Seq((1L, "a")).toDF("id", "v"))
+    val r1 = VersionedStore.read(spark, t).get
+    assert(VersionedStore.read(spark, t).get eq r1)
+    assert(!(VersionedStore.read(spark.newSession(), t).get eq r1))
+    VersionedStore.append(spark, t, Seq((2L, "b")).toDF("id", "v"))
+    val r2 = VersionedStore.read(spark, t).get
+    assert(!(r2 eq r1) && r2.count() == 2 && r1.count() == 1)
+    // a compaction is a new state; vacuum then deletes the segments r2
+    // scans, and the compacted state still reads
+    assert(VersionedStore.compact(spark, t)._2 > 0)
+    assert(VersionedStore.vacuum(spark, t, graceMs = 0L).nonEmpty)
+    assert(VersionedStore.read(spark, t).get.as[(Long, String)].collect().toSet ==
+      Set((1L, "a"), (2L, "b")))
+  }
 }

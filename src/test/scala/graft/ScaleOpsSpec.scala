@@ -1876,7 +1876,7 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("readHtmlSections: committed fixtures pin sectioning, preamble, idx gaps, script strip") {
     val rows = DocumentSources
-      .readHtmlSections(spark, "/root/repo/fixtures/html/*.html")
+      .readHtmlSections(spark, Checkout.fixture("html/*.html"))
       .orderBy("doc_id", "section_idx")
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))

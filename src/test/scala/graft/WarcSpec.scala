@@ -13,7 +13,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("committed warc fixtures are byte-identical to the generator") {
     all.foreach { case (name, bytes) =>
-      val p = java.nio.file.Paths.get(s"/root/repo/fixtures/warc/$name")
+      val p = java.nio.file.Paths.get(Checkout.fixture(s"warc/$name"))
       assert(java.nio.file.Files.exists(p),
         s"missing fixture $name — run Test/runMain graft.GenWarcFixtures fixtures/warc")
       assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p), bytes),
@@ -22,7 +22,7 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("revisit records: payload digest, bracket-stripped refers-to, empty body") {
-    val p = java.nio.file.Paths.get("/root/repo/fixtures/warc-revisit/revisit.warc")
+    val p = java.nio.file.Paths.get(Checkout.fixture("warc-revisit/revisit.warc"))
     assert(java.nio.file.Files.exists(p),
       "missing fixture — run Test/runMain graft.GenWarcFixtures fixtures/warc")
     assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(p),
@@ -137,7 +137,7 @@ class WarcSpec extends AnyFunSuite {
   test("readWarc lands one row per record with stable provenance") {
     val spark = TestSpark.spark
     import spark.implicits._
-    val df = DocumentSources.readWarc(spark, "/root/repo/fixtures/warc/*")
+    val df = DocumentSources.readWarc(spark, Checkout.fixture("warc/*"))
       .orderBy($"warc_file", $"record_idx")
     val rows = df.select($"warc_file", $"record_idx", $"record_type",
       $"http_status").as[(String, Long, String, Long)].collect().toSeq
@@ -157,7 +157,7 @@ class WarcSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val docs = DocumentSources
-      .readWarcDocuments(spark, "/root/repo/fixtures/warc/*", mainContent = true)
+      .readWarcDocuments(spark, Checkout.fixture("warc/*"), mainContent = true)
       .select($"doc_id", $"text").as[(String, String)].collect().toMap
     // the chrome page keeps only the article (title/nav/banner/footer gone)
     assert(docs("sample5_r0") ==
@@ -253,7 +253,7 @@ class WarcSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     val docs = DocumentSources
-      .readWarcDocuments(spark, "/root/repo/fixtures/warc/*")
+      .readWarcDocuments(spark, Checkout.fixture("warc/*"))
       .orderBy($"doc_id")
     val got = docs.select($"doc_id", $"text", $"metadata"("url"))
       .as[(String, String, String)].collect().toSeq
