@@ -45,6 +45,13 @@ BUCKETS = [
                  "org.apache.spark.sql.catalyst.expressions.codegen.")),
     ("serialization", ("org.apache.spark.serializer.", "java.io.ObjectOutputStream",
                        "java.io.ObjectInputStream", "com.esotericsoftware.kryo.")),
+    # opening a parquet file: the task's Hadoop configuration copy, the
+    # footer read and the record reader's set-up
+    ("file-open", ("org.apache.hadoop.conf.Configuration.<init>",
+                   "org.apache.hadoop.mapred.JobConf.<init>",
+                   "org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader",
+                   "org.apache.spark.sql.execution.datasources.parquet."
+                   "SpecificParquetRecordReaderBase.initialize")),
     ("Dataset-cache build", ("org.apache.spark.sql.execution.columnar.",)),
 ]
 KINDS = ("executor", "main", "other")

@@ -49,8 +49,8 @@ object ParquetIO {
     * while readable (see object doc).
     */
   def readImmutable(spark: SparkSession, path: String): DataFrame =
-    // two racers on the same path resolve twice and last-put wins — both
-    // relations are equivalent (the directory is immutable)
+    // two racers on the same path resolve twice and the first put wins —
+    // both relations are equivalent (the directory is immutable)
     cache.getOrElseUpdate(spark, path, ())(spark.read.parquet(path))
 
   /** Drop every cached relation whose path starts with `prefix` (all

@@ -263,8 +263,8 @@ object Chat {
     * Reuse per state: the Datasets a question collects are prepared
     * plans ([[graft.PreparedPlans]]). The vector leg ([[vectorLeg]]) is
     * analyzed once per (`store` frame, columns, search type, k, metric,
-    * probe count, vector type and length); each question binds its query
-    * vector and probe list into it. The indexed lexical leg reuses its
+    * IVF model); each question binds its query vector and probe list
+    * (one array literal each) into it. The indexed lexical leg reuses its
     * plan per index state ([[Keyword.bm25Indexed]]). The `store` frame
     * is matched by identity, not by plan equality: a frame keeps the
     * file listing it was read with, so a frame read again (say, over a
@@ -273,6 +273,11 @@ object Chat {
     * [[VersionedStore.read]] returns one frame per committed state. The
     * IVF model guard and the lexical staleness check still run on every
     * question.
+    *
+    * Reuse of data: such a state frame is pinned in Spark's columnar
+    * cache from its second question on, while it fits the session's
+    * broadcast threshold ([[VersionedStore.pin]]), so a question opens
+    * no segment file.
     */
   def answer(spark: SparkSession, question: String, store: DataFrame,
              idCol: String, textCol: String, embCol: String,
@@ -374,6 +379,12 @@ object Chat {
     * frame read again is a new key), the columns, the leg's shape, k,
     * the metric and the IVF model; the query vector and the probe list
     * are its literals.
+    *
+    * Every call [[VersionedStore.pin]]s `store`: for a store state that
+    * fits the pin's size guard, from its second question on, Spark's
+    * cache manager swaps the in-memory relation in when the bound
+    * question executes (that question fills it); otherwise the leg
+    * reads the segments' parquet files.
     */
   private[graft] def vectorLeg(store: DataFrame, idCol: String, textCol: String,
                                embCol: String, index: Option[(Ivf.IvfModel, Int)],
@@ -396,19 +407,24 @@ object Chat {
       case SearchType.Hybrid(_, _, fetchK, _) =>
         ("hybrid", fetchK, metric, (df: DataFrame) => withText(df, idCol, textCol))
     }
-    val probes = index.toSeq.flatMap { case (ivfModel, nProbe) =>
-      ivfModel.probeOrder(qv).take(math.max(1, nProbe)).toSeq }
+    // the probed cluster ids as one array literal, not an IN list: an
+    // IN list's values are inlined into the generated code of a filter
+    // over an in-memory scan, so every probe set would compile a class
+    val probes = index.map { case (ivfModel, nProbe) =>
+      Literal(ivfModel.probeOrder(qv).take(math.max(1, nProbe))) }
+    VersionedStore.pin(store)
     PreparedPlans.dataset(store.sparkSession, "",
       (PreparedPlans.frameKey(store), idCol, textCol, embCol, shape, n, m,
         index.map(_._1.fingerprint)),
-      VectorFunctions.vectorLiteral(qv) +: probes.map(Literal(_))) { slots =>
+      VectorFunctions.vectorLiteral(qv) +: probes.toSeq) { slots =>
       finish(index match {
         case Some((ivfModel, _)) =>
           val clustered =
             if (store.columns.contains("cluster_id"))
               store.select(col(idCol), col(textCol), col(embCol), col("cluster_id"))
             else Ivf.assign(store.select(col(idCol), col(textCol), col(embCol)), embCol, ivfModel)
-          Ivf.probed(clustered, embCol, slots.head, slots.tail, n, m)
+          Similarity.knnOf(clustered.filter(array_contains(slots(1), col("cluster_id"))),
+            embCol, slots.head, n, m)
         case None =>
           Similarity.knnOf(store.select(col(idCol), col(textCol), col(embCol)),
             embCol, slots.head, n, m)

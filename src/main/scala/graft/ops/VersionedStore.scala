@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Poor-man's transaction log for parquet store tables — the atomicity
   * the reference gets for free from Oracle (its S15 merge runs inside a
@@ -112,9 +113,75 @@ object VersionedStore {
   // one union frame per committed state: a state's segments are
   // immutable, so the frame [[read]] builds for it is reusable verbatim,
   // and a reader opening the store once per request (a chat question)
-  // pays the union's analysis once per state. [[vacuum]] drops a table's
-  // frames when it reclaims a segment.
-  private val stateFrames = new graft.SessionCache[DataFrame](1024)
+  // pays the union's analysis once per state. [[read]] drops a table's
+  // older states when it reads a newer one, and [[vacuum]] the states
+  // whose segments it reclaims; a dropped state's pins are released.
+  private val stateFrames = new graft.SessionCache[StateFrame](1024, _.release())
+
+  // the frames [[read]] handed out, by identity, to their state; an
+  // entry lives as long as its state's [[stateFrames]] entry
+  private val handedOut = new java.util.IdentityHashMap[DataFrame, StateFrame]()
+
+  /** A committed state's frame, which [[pin]] may hold in memory. Once
+    * released (its state dropped from [[stateFrames]]) it pins nothing
+    * more; the frame itself still reads its segments.
+    */
+  private final class StateFrame(val frame: DataFrame) {
+    // the segments' bytes on disk: a union of parquet relations is
+    // estimated at its files' sizes
+    private lazy val estimate = frame.queryExecution.optimizedPlan.stats.sizeInBytes
+    private var asked = 0
+    private var released = false
+    handedOut.synchronized(handedOut.put(frame, this)): Unit
+
+    // Spark's cache is shared by every session of the application and
+    // matches plans by result, so whether the frame is cached is asked
+    // of it, not remembered: another release of an equal plan may have
+    // dropped the pin, and the next question puts it back
+    private def cached: Boolean = frame.storageLevel != StorageLevel.NONE
+
+    def pin(): Unit = synchronized {
+      asked = math.min(asked + 1, 2)
+      if (!released && asked == 2) {
+        val limit = frame.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+        val fits = limit >= 0 && estimate <= limit
+        val pinned = cached
+        if (fits && !pinned) frame.persist(StorageLevel.MEMORY_AND_DISK)
+        if (!fits && pinned) frame.unpersist(blocking = false)
+      }
+    }
+
+    // a frame that never reached its second question (the loser of a
+    // race to read the state) pinned nothing, and leaves an equal plan
+    // that another frame pinned alone
+    def release(): Unit = synchronized {
+      released = true
+      handedOut.synchronized(handedOut.remove(frame))
+      if (asked == 2 && cached) frame.unpersist(blocking = false)
+    }
+  }
+
+  /** Serve `frame` from memory from its second question on: when
+    * `frame` is a frame [[read]] handed out (matched by identity, never
+    * by plan, so a caller's own `spark.read.parquet` frame is never
+    * pinned) and Spark's size estimate of it, about its segments' bytes
+    * on disk, is at most `spark.sql.autoBroadcastJoinThreshold` (the
+    * session's bound on what every executor may hold whole; -1 pins
+    * nothing), the frame is persisted in Spark's columnar cache. A
+    * state's first question reads parquet, pruned to what it asks for:
+    * filling the cache reads every file of the state, which pays only
+    * when the state answers again. Lazy: no job runs here; the next
+    * query over the frame fills the cache, and Spark's cache manager
+    * serves every plan over the frame from it. A frame whose estimate
+    * no longer fits the threshold is released.
+    *
+    * Released with its state: when a newer state of the table is read,
+    * when [[vacuum]] reclaims one of its segments (before the delete),
+    * and when the state's frame leaves the LRU of [[read]]'s frames.
+    * A no-op for any other frame.
+    */
+  def pin(frame: DataFrame): Unit =
+    Option(handedOut.synchronized(handedOut.get(frame))).foreach(_.pin())
 
   /** Column-name set of a segment (footer read; includes discovered
     * partition columns). The write-time guards compare these so a
@@ -187,7 +254,10 @@ object VersionedStore {
     */
   def read(spark: SparkSession, table: String): Option[DataFrame] =
     currentState(spark, table).filter(_.segments.nonEmpty)
-      .map(st => stateFrames.getOrElseUpdate(spark, table, st)(readState(spark, table, st)))
+      .map(st => stateFrames.getOrElseUpdate(spark, table, st) {
+        stateFrames.evict(table) { case old: State => old.version < st.version; case _ => false }
+        new StateFrame(readState(spark, table, st))
+      }.frame)
       .orElse {
         val loose = looseParquet(spark, table)
         if (loose.isEmpty) None else Some(spark.read.parquet(loose: _*))
@@ -1090,7 +1160,10 @@ object VersionedStore {
     // exactly the failure the readImmutable contract must make impossible
     // (the keys use the caller-form `$table/<seg>` path, same as every
     // read site). Only segments are cached; the other dead paths are not.
-    if (deadSegs.nonEmpty) stateFrames.invalidate(table)
+    // The states that list a reclaimed segment go first, pins and all.
+    val deadNames = deadSegs.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
+    if (deadNames.nonEmpty) stateFrames.evict(table) {
+      case st: State => st.segments.exists(deadNames); case _ => false }
     deadSegs.foreach { p =>
       graft.ParquetIO.invalidate(s"$table/${p.substring(p.lastIndexOf('/') + 1)}")
       graft.Fs.delete(spark, p)
