@@ -1319,7 +1319,7 @@ object Dedup {
                                 stats: Array[String]): (Int, Int, Int, String) = {
     // length/format-check BEFORE indexing: truncated, partially-written,
     // or pre-mh2 _stats must surface as IllegalArgumentException (the
-    // SidecarRegistry.maintain fold-refusal contract)
+    // SidecarRegistry fold-refusal contract)
     require(stats.length >= 5 && stats(0) == MinhashSidecarFormat &&
         stats(4).startsWith("v"),
       s"sidecar at $path has a damaged, unstamped, or pre-$MinhashSidecarFormat " +
@@ -1371,28 +1371,17 @@ object Dedup {
                              path: String): Unit = {
     val stats = graft.Fs.readString(spark, s"$path/_stats").trim.split(" ")
     val (n, numHashes, bands, vTok) = parseMinhashStats(path, stats)
-    val v0 = vTok.drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"sidecar stamp v$v0 is ahead of $table's current version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; incremental " +
-        "bands would double-sign rewritten rows — rebuild with buildMinhashSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty) {
-      val docs = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
-      bandRows(docs, idCol, textCol, n, numHashes, bands)
-        .write.mode("append").parquet(s"$path/bands")
+    VersionedStore.appendedSince(spark, table, vTok.drop(1).toLong, "minhash sidecar",
+      "incremental bands would double-sign rewritten rows; rebuild with " +
+        "buildMinhashSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty)
+        bandRows(VersionedStore.readSegments(spark, table, newSegs), idCol, textCol,
+            n, numHashes, bands)
+          .write.mode("append").parquet(s"$path/bands")
+      graft.Fs.writeString(spark, s"$path/_stats",
+        s"$MinhashSidecarFormat $n $numHashes $bands v$version")
     }
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"$MinhashSidecarFormat $n $numHashes $bands v${cur.version}")
   }
 
   def sidecarMarkerPath(table: String): String = s"$table/_minhash_sidecar"
@@ -1402,45 +1391,13 @@ object Dedup {
     * every [[Ingest.appendRespectingLayout]] commit folds its own rows
     * in at O(new docs), so ingestion-time [[nearDupAgainstStore]] checks
     * never trip the staleness guard. The whole register/maintain/restamp
-    * lifecycle is [[SidecarRegistry]]'s — shared with the lexical index.
+    * lifecycle is [[SidecarRegistry]]'s — shared with every other kind.
     */
   def registerMinhashSidecar(spark: org.apache.spark.sql.SparkSession,
                              table: String, idCol: String, textCol: String,
                              path: String): Unit =
-    SidecarRegistry.register(spark, table, sidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, textCol)) {
-      buildMinhashSidecarForStore(spark, table, idCol, textCol, path)
-    }
-
-  /** The append seam's sidecar maintenance: fold the store's new
-    * segments in; on any fold refusal (non-pure-append history — e.g. a
-    * compaction rewrote covered segments — or a damaged stats file)
-    * fall back to a LOUD full rebuild rather than leaving a stale
-    * sidecar in place.
-    */
-  def maintainRegisteredSidecar(spark: org.apache.spark.sql.SparkSession,
-                                table: String): Unit =
-    SidecarRegistry.maintain(spark, table, sidecarMarkerPath(table),
-      "minhash sidecar") { reg =>
-      appendToMinhashSidecar(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildMinhashSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  /** O(1) maintenance of a registered sidecar across a compaction: band
-    * rows depend only on the (id, text) ROWS, which a compaction
-    * preserves, so a provably row-preserving compaction only moves the
-    * stamp ([[SidecarRegistry.maintainAfterCompact]]); anything
-    * unprovable rebuilds loudly.
-    */
-  def maintainRegisteredSidecarAfterCompact(spark: org.apache.spark.sql.SparkSession,
-                                            table: String, preVersion: Long,
-                                            post: VersionedStore.State,
-                                            files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table, sidecarMarkerPath(table),
-      "minhash sidecar", preVersion, post, files) { reg =>
-      buildMinhashSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.MinhashSidecar,
+      SidecarRegistry.Registration(path, idCol, textCol))
 
   /** Near-dup-check an arriving batch against the ENTIRE historical
     * store through its maintained sidecar — the ingestion-time gate
@@ -1577,29 +1534,18 @@ object Dedup {
       s"SRP sidecar at $path has a damaged/unstamped _stats; rebuild with buildSrpSidecarForStore")
     val (dim, nTables, nBits, seed) =
       (stats(0).toInt, stats(1).toInt, stats(2).toInt, stats(3).toLong)
-    val v0 = stats(4).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"SRP sidecar stamp v$v0 is ahead of $table's version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; rebuild " +
-        "with buildSrpSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty) {
-      val docs = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
-      requireSrpDim(docs, embCol, dim, s"appended segments of $table")
-      srpBucketRows(docs, idCol, embCol, dim, nTables, nBits, seed)
-        .write.mode("append").parquet(s"$path/buckets")
+    VersionedStore.appendedSince(spark, table, stats(4).drop(1).toLong, "SRP sidecar",
+      "rebuild with buildSrpSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty) {
+        val docs = VersionedStore.readSegments(spark, table, newSegs)
+        requireSrpDim(docs, embCol, dim, s"appended segments of $table")
+        srpBucketRows(docs, idCol, embCol, dim, nTables, nBits, seed)
+          .write.mode("append").parquet(s"$path/buckets")
+      }
+      graft.Fs.writeString(spark, s"$path/_stats",
+        s"$dim $nTables $nBits $seed v$version")
     }
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"$dim $nTables $nBits $seed v${cur.version}")
   }
 
   /** Embedding near-dup check of an arriving batch against the WHOLE
@@ -1650,34 +1596,15 @@ object Dedup {
     }
   }
 
-  /** Register the SRP sidecar on the maintenance seam — the second
-    * [[SidecarRegistry]] client, inheriting every append/merge/delete/
-    * compaction path the lexical index and MinHash sidecar ride.
+  /** Register the SRP sidecar on the maintenance seam
+    * ([[SidecarRegistry.SrpSidecar]]), inheriting every
+    * append/merge/delete/rewrite path the other kinds ride.
     */
   def registerSrpSidecar(spark: org.apache.spark.sql.SparkSession,
                          table: String, idCol: String, embCol: String,
                          path: String): Unit =
-    SidecarRegistry.register(spark, table, srpSidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, embCol)) {
-      buildSrpSidecarForStore(spark, table, idCol, embCol, path)
-    }
-
-  def maintainRegisteredSrpSidecar(spark: org.apache.spark.sql.SparkSession,
-                                   table: String): Unit =
-    SidecarRegistry.maintain(spark, table, srpSidecarMarkerPath(table),
-      "srp sidecar") { reg =>
-      appendToSrpSidecar(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildSrpSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  def maintainRegisteredSrpSidecarAfterCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      preVersion: Long, post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      srpSidecarMarkerPath(table), "srp sidecar", preVersion, post, files) { reg =>
-      buildSrpSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.SrpSidecar,
+      SidecarRegistry.Registration(path, idCol, embCol))
 
   /** The drop half of the ingestion near-dup gate: the batch minus every
     * row [[nearDupAgainstStore]] matched — what actually flows to the

@@ -714,8 +714,8 @@ object Hnsw {
   private def paramsTag: String =
     s"${SidecarParams.m}:${SidecarParams.efConstruction}:${SidecarParams.metric}"
 
-  /** Build the graph sidecar for a [[VersionedStore]] table — the FIFTH
-    * [[SidecarRegistry]] client. Appends fold in as new segment graphs
+  /** Build the graph sidecar for a [[VersionedStore]] table
+    * ([[SidecarRegistry.HnswSidecar]]). Appends fold in as new segment graphs
     * ([[append]] — the Lucene flush model, O(batch) build cost);
     * merges/deletes REPLACE rows a graph cannot un-link, so
     * non-pure-append histories refuse to the registry's loud rebuild.
@@ -749,50 +749,21 @@ object Hnsw {
       s"hnsw sidecar at $path has a damaged/unstamped _stats; rebuild with buildHnswSidecarForStore")
     require(stats(0) == paramsTag,
       s"hnsw sidecar at $path was built at ${stats(0)}, engine expects $paramsTag; rebuild")
-    val v0 = stats(1).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"hnsw sidecar stamp v$v0 is ahead of $table's version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; a graph " +
-        "cannot un-link replaced rows — rebuild with buildHnswSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty) {
-      val rows = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
-      append(rows, idCol, embCol, path, numPartitions = 1)
-    }
-    graft.Fs.writeString(spark, s"$path/_stats", s"$paramsTag v${cur.version}")
+    VersionedStore.appendedSince(spark, table, stats(1).drop(1).toLong, "hnsw sidecar",
+      "a graph cannot un-link replaced rows; rebuild with buildHnswSidecarForStore")
+      .foreach { case (version, newSegs) =>
+        graft.Fs.delete(spark, s"$path/_stats")
+        if (newSegs.nonEmpty)
+          append(VersionedStore.readSegments(spark, table, newSegs), idCol, embCol, path,
+            numPartitions = 1)
+        graft.Fs.writeString(spark, s"$path/_stats", s"$paramsTag v$version")
+      }
   }
 
   def registerHnswSidecar(spark: SparkSession, table: String, idCol: String,
                           embCol: String, path: String): Unit =
-    SidecarRegistry.register(spark, table, sidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, embCol)) {
-      buildHnswSidecarForStore(spark, table, idCol, embCol, path)
-    }
-
-  def maintainRegisteredHnswSidecar(spark: SparkSession, table: String): Unit =
-    SidecarRegistry.maintain(spark, table, sidecarMarkerPath(table),
-      "hnsw sidecar") { reg =>
-      appendToHnswSidecar(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildHnswSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  def maintainRegisteredHnswSidecarAfterCompact(
-      spark: SparkSession, table: String, preVersion: Long,
-      post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      sidecarMarkerPath(table), "hnsw sidecar", preVersion, post, files) { reg =>
-      buildHnswSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.HnswSidecar,
+      SidecarRegistry.Registration(path, idCol, embCol))
 
   def servingConfigPath(path: String): String = s"$path/_hnsw_serving"
 

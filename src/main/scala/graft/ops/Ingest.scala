@@ -228,32 +228,10 @@ object Ingest {
     val n =
       if (indexed) Ivf.appendAssigned(spark, table, df3, embCol)
       else VersionedStore.appendNonEmpty(spark, table, df3)
-    // a registered lexical index ([[Keyword.registerLexicalIndex]]) is
-    // maintained by the same seam: the committed rows fold in at
-    // O(new docs), so continuous ingestion — batch and streaming — never
-    // trips the query-time staleness guard
-    if (n > 0) Keyword.maintainRegisteredIndex(spark, table)
-    // same seam for a registered MinHash sidecar
-    // ([[Dedup.registerMinhashSidecar]]): near-dup checks against the
-    // growing history stay fresh without polling
-    if (n > 0) Dedup.maintainRegisteredSidecar(spark, table)
-    if (n > 0) Dedup.maintainRegisteredSrpSidecar(spark, table)
-    if (n > 0) Sketch.maintainRegisteredHllSidecar(spark, table)
-    if (n > 0) Sketch.maintainRegisteredBloomSidecar(spark, table)
-    // and a registered HNSW graph sidecar: each batch folds in as new
-    // segment graphs (the Lucene flush model) — O(batch), no rebuild
-    if (n > 0) Hnsw.maintainRegisteredHnswSidecar(spark, table)
-    // and the fingerprint ledger: the corpus checksum folds in the new
-    // segments at O(batch) via the fold identity
-    if (n > 0) Profile.maintainRegisteredFingerprintSidecar(spark, table)
-    // and the weighted-sample candidate ledger: each new segment folds
-    // in its own A-ES top-k at O(batch); the maintained corpus sample
-    // stays one (k x segments)-row fold away
-    if (n > 0) Sampling.maintainRegisteredSampleSidecar(spark, table)
-    // and the length-histogram ledger: per-segment bucket counts add,
-    // so the corpus length distribution (and its quantile reads) stays
-    // exact and fresh at O(batch)
-    if (n > 0) Sketch.maintainRegisteredHistogramSidecar(spark, table)
+    // every registered sidecar ([[SidecarRegistry.kinds]]) folds the
+    // committed rows in at O(new rows), so continuous ingestion — batch
+    // and streaming — never trips a query-time staleness guard
+    if (n > 0) SidecarRegistry.afterAppend(spark, table)
     // drift advisory: the model is frozen at fit time, so drifted
     // appends pile into few clusters and the nProbe/k probe-cost model
     // quietly erodes — surface it at the write, when the erosion
@@ -277,66 +255,37 @@ object Ingest {
     * with the store's own maintenance obligations honored: incoming
     * rows get the maintained columns derived (SQ8/PQ codes), an
     * IVF-indexed table keeps its cluster partitioning and fingerprint
-    * stamp on the rewritten segment (the probe guard would otherwise
-    * refuse the whole table), and a registered lexical index is
-    * maintained afterward — a merge REPLACES rows, so the incremental
-    * fold correctly refuses and the seam's rebuild path takes over.
+    * stamp on the rewritten segment ([[Ivf.layoutOf]]; the probe guard
+    * would otherwise refuse the whole table), and every registered
+    * sidecar is maintained afterward — a merge REPLACES rows, so the
+    * incremental folds refuse and the registry reconciles or rebuilds
+    * (stale-but-marked is the one state this seam must never leave).
     * Returns the number of segments rewritten.
     */
   def mergeRespectingLayout(spark: SparkSession, table: String, updates: DataFrame,
                             keyCol: String,
                             embCol: String = "embedding"): Int = {
     val derived = deriveMaintainedColumns(spark, table, updates)
-    val rewritten =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table))) {
-        val model = Ivf.loadModel(spark, Ivf.modelPath(table))
-        VersionedStore.merge(spark, table,
-          Ivf.assign(derived, embCol, model), keyCol,
-          partitionBy = Seq("cluster_id"),
-          marker = Some(model.fingerprint))._2
-      } else VersionedStore.merge(spark, table, derived, keyCol)._2
-    Keyword.maintainRegisteredIndex(spark, table)
-    // a merge/delete REPLACES rows, so the sidecars' append folds refuse
-    // (non-pure-append) and the maintenance falls through to the rebuild
-    // path — stale-but-marked is the one state this seam must never leave
-    Dedup.maintainRegisteredSidecar(spark, table)
-    Dedup.maintainRegisteredSrpSidecar(spark, table)
-    Sketch.maintainRegisteredHllSidecar(spark, table)
-    Sketch.maintainRegisteredBloomSidecar(spark, table)
-    Hnsw.maintainRegisteredHnswSidecar(spark, table)
-    Profile.maintainRegisteredFingerprintSidecar(spark, table)
-    Sampling.maintainRegisteredSampleSidecar(spark, table)
-    Sketch.maintainRegisteredHistogramSidecar(spark, table)
+    val layout = Ivf.layoutOf(spark, table)
+    val rewritten = VersionedStore.merge(spark, table,
+      layout.model.fold(derived)(Ivf.assign(derived, embCol, _)), keyCol,
+      partitionBy = layout.partitionBy, marker = layout.marker)._2
+    SidecarRegistry.afterAppend(spark, table)
     rewritten
   }
 
   /** Layout-respecting copy-on-write delete — [[VersionedStore.deleteWhere]]
     * plus the same obligations as [[mergeRespectingLayout]] (surviving
     * rows already carry their maintained columns; the rewritten segment
-    * keeps the cluster layout + stamp; the lexical index rebuilds
+    * keeps the cluster layout + stamp; the sidecars reconcile or rebuild
     * through the seam). Returns the number of segments rewritten.
     */
   def deleteRespectingLayout(spark: SparkSession, table: String,
                              predicate: org.apache.spark.sql.Column): Int = {
-    val rewritten =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table))) {
-        val model = Ivf.loadModel(spark, Ivf.modelPath(table))
-        VersionedStore.deleteWhere(spark, table, predicate,
-          partitionBy = Seq("cluster_id"),
-          marker = Some(model.fingerprint))._2
-      } else VersionedStore.deleteWhere(spark, table, predicate)._2
-    Keyword.maintainRegisteredIndex(spark, table)
-    // a merge/delete REPLACES rows, so the sidecars' append folds refuse
-    // (non-pure-append) and the maintenance falls through to the rebuild
-    // path — stale-but-marked is the one state this seam must never leave
-    Dedup.maintainRegisteredSidecar(spark, table)
-    Dedup.maintainRegisteredSrpSidecar(spark, table)
-    Sketch.maintainRegisteredHllSidecar(spark, table)
-    Sketch.maintainRegisteredBloomSidecar(spark, table)
-    Hnsw.maintainRegisteredHnswSidecar(spark, table)
-    Profile.maintainRegisteredFingerprintSidecar(spark, table)
-    Sampling.maintainRegisteredSampleSidecar(spark, table)
-    Sketch.maintainRegisteredHistogramSidecar(spark, table)
+    val layout = Ivf.layoutOf(spark, table)
+    val rewritten = VersionedStore.deleteWhere(spark, table, predicate,
+      partitionBy = layout.partitionBy, marker = layout.marker)._2
+    SidecarRegistry.afterAppend(spark, table)
     rewritten
   }
 
@@ -347,25 +296,10 @@ object Ingest {
     */
   def deleteKeysRespectingLayout(spark: SparkSession, table: String,
                                  keys: DataFrame, keyCol: String): Int = {
-    val rewritten =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table))) {
-        val model = Ivf.loadModel(spark, Ivf.modelPath(table))
-        VersionedStore.deleteByKeys(spark, table, keys, keyCol,
-          partitionBy = Seq("cluster_id"),
-          marker = Some(model.fingerprint))._2
-      } else VersionedStore.deleteByKeys(spark, table, keys, keyCol)._2
-    Keyword.maintainRegisteredIndex(spark, table)
-    // a merge/delete REPLACES rows, so the sidecars' append folds refuse
-    // (non-pure-append) and the maintenance falls through to the rebuild
-    // path — stale-but-marked is the one state this seam must never leave
-    Dedup.maintainRegisteredSidecar(spark, table)
-    Dedup.maintainRegisteredSrpSidecar(spark, table)
-    Sketch.maintainRegisteredHllSidecar(spark, table)
-    Sketch.maintainRegisteredBloomSidecar(spark, table)
-    Hnsw.maintainRegisteredHnswSidecar(spark, table)
-    Profile.maintainRegisteredFingerprintSidecar(spark, table)
-    Sampling.maintainRegisteredSampleSidecar(spark, table)
-    Sketch.maintainRegisteredHistogramSidecar(spark, table)
+    val layout = Ivf.layoutOf(spark, table)
+    val rewritten = VersionedStore.deleteByKeys(spark, table, keys, keyCol,
+      partitionBy = layout.partitionBy, marker = layout.marker)._2
+    SidecarRegistry.afterAppend(spark, table)
     rewritten
   }
 
@@ -397,24 +331,13 @@ object Ingest {
     // the compacted segment re-stamped, or the probe-time stamp check
     // would reject it as foreign
     val preVersion = VersionedStore.currentState(spark, path).map(_.version).getOrElse(0L)
-    val (post, files) =
-      if (graft.Fs.exists(spark, Ivf.modelPath(path))) {
-        val fp = Ivf.loadModel(spark, Ivf.modelPath(path)).fingerprint
-        VersionedStore.compact(spark, path, rowsPerFile,
-          partitionBy = Seq("cluster_id"), marker = Some(fp))
-      } else VersionedStore.compact(spark, path, rowsPerFile)
-    // a compaction preserves rows, so a registered lexical index is
-    // restamped in O(1) when that is provable (sole commit, no survivor
-    // segments) and rebuilt otherwise — either way it keeps serving
-    Keyword.maintainRegisteredIndexAfterCompact(spark, path, preVersion, post, files)
-    Dedup.maintainRegisteredSidecarAfterCompact(spark, path, preVersion, post, files)
-    Dedup.maintainRegisteredSrpSidecarAfterCompact(spark, path, preVersion, post, files)
-    Sketch.maintainRegisteredHllSidecarAfterCompact(spark, path, preVersion, post, files)
-    Sketch.maintainRegisteredBloomSidecarAfterCompact(spark, path, preVersion, post, files)
-    Hnsw.maintainRegisteredHnswSidecarAfterCompact(spark, path, preVersion, post, files)
-    Profile.maintainRegisteredFingerprintSidecarAfterCompact(spark, path, preVersion, post, files)
-    Sampling.maintainRegisteredSampleSidecarAfterCompact(spark, path, preVersion, post, files)
-    Sketch.maintainRegisteredHistogramSidecarAfterCompact(spark, path, preVersion, post, files)
+    val layout = Ivf.layoutOf(spark, path)
+    val (post, files) = VersionedStore.compact(spark, path, rowsPerFile,
+      partitionBy = layout.partitionBy, marker = layout.marker)
+    // a compaction preserves rows, so registered sidecars are restamped
+    // in O(1) when that is provable (sole commit, no survivor segments)
+    // and reconciled or rebuilt otherwise — either way they keep serving
+    SidecarRegistry.afterRewrite(spark, path, preVersion, post, files)
     files
   }
 
@@ -429,7 +352,7 @@ object Ingest {
     * OLD-schema appends abandon the evolution (retry after they drain)
     * rather than publishing a mixed table; after it commits, appends
     * must carry the new columns (the write-time guard enforces it).
-    * Row-preserving, so a registered lexical index restamps in O(1).
+    * Row-preserving, so every registered sidecar restamps in O(1).
     * Returns the rewritten file count (0 = lost a race, retry).
     */
   def evolveSchema(spark: SparkSession, table: String,
@@ -444,19 +367,10 @@ object Ingest {
       }
       newCols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
     }
-    val (post, files) =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table))) {
-        val fp = Ivf.loadModel(spark, Ivf.modelPath(table)).fingerprint
-        VersionedStore.compact(spark, table, rowsPerFile, reshape,
-          partitionBy = Seq("cluster_id"), marker = Some(fp))
-      } else VersionedStore.compact(spark, table, rowsPerFile, reshape)
-    Keyword.maintainRegisteredIndexAfterCompact(spark, table, preVersion, post, files)
-    Dedup.maintainRegisteredSidecarAfterCompact(spark, table, preVersion, post, files)
-    Dedup.maintainRegisteredSrpSidecarAfterCompact(spark, table, preVersion, post, files)
-    Sketch.maintainRegisteredHllSidecarAfterCompact(spark, table, preVersion, post, files)
-    Sketch.maintainRegisteredBloomSidecarAfterCompact(spark, table, preVersion, post, files)
-    Hnsw.maintainRegisteredHnswSidecarAfterCompact(spark, table, preVersion, post, files)
-    Profile.maintainRegisteredFingerprintSidecarAfterCompact(spark, table, preVersion, post, files)
+    val layout = Ivf.layoutOf(spark, table)
+    val (post, files) = VersionedStore.compact(spark, table, rowsPerFile, reshape,
+      partitionBy = layout.partitionBy, marker = layout.marker)
+    SidecarRegistry.afterRewrite(spark, table, preVersion, post, files)
     files
   }
 

@@ -52,6 +52,22 @@ object Ivf {
     */
   def modelPath(table: String): String = s"$table/_ivf_model"
 
+  /** The segment layout every rewrite of a store must keep: an
+    * IVF-indexed store's segments are cluster-partitioned and stamped
+    * with its model's fingerprint (the probe-time stamp check refuses
+    * anything else as foreign); an unindexed store's are flat and
+    * unstamped.
+    */
+  final case class Layout(model: Option[IvfModel]) {
+    def partitionBy: Seq[String] = if (model.isDefined) Seq("cluster_id") else Nil
+    def marker: Option[String] = model.map(_.fingerprint)
+  }
+
+  /** The [[Layout]] `table` carries now, read from its model sidecar. */
+  def layoutOf(spark: SparkSession, table: String): Layout =
+    Layout(if (graft.Fs.exists(spark, modelPath(table)))
+      Some(loadModel(spark, modelPath(table))) else None)
+
   // a (table, manifest version, manifest mtime, model fingerprint) tuple
   // that passed the full guard once cannot regress without a NEW manifest
   // commit (every mutation through the public API — appendAssigned,
@@ -639,13 +655,10 @@ object Ivf {
     require(nFiles > 0,
       s"indexStore lost a concurrent-compaction race at $table; retry")
     saveModel(spark, modelPath(table), model)
-    // a re-clustering rewrites rows but preserves them — a registered
-    // lexical index stays valid and only needs its stamp moved (or a
+    // a re-clustering rewrites rows but preserves them — registered
+    // sidecars stay valid and only need their stamps moved (or a
     // rebuild when that is not provable), same as any other compaction
-    Keyword.maintainRegisteredIndexAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSrpSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Sketch.maintainRegisteredHllSidecarAfterCompact(spark, table, preVersion, post, nFiles)
+    SidecarRegistry.afterRewrite(spark, table, preVersion, post, nFiles)
     // a tuned serving config describes the PREVIOUS model's recall —
     // re-measure it under the new layout at its recorded (k, target)
     // so serving keeps its contract across re-indexing without a

@@ -259,28 +259,16 @@ object Keyword {
       s"positional index at $path carries no store stamp — incremental " +
         "maintenance needs the build-time snapshot version; rebuild with " +
         "buildPositionalIndex(store = ...)")
-    val v0 = stamp.drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return // already fresh
-    require(cur.version > v0,
-      s"index stamp v$v0 is ahead of $table's current version ${cur.version} — " +
-        "the index describes a store state that no longer exists; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append — " +
-        "incremental postings would double-count rewritten rows; rebuild")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    retireStats(spark, path) // stamp-first crash-safety
-    val nNew =
-      if (newSegs.isEmpty) 0L
-      else writePositionalPostings(
-        newSegs.map(sg => graft.ParquetIO.readImmutable(spark, s"$table/$sg")).reduce(_ unionByName _),
-        idCol, textCol, path, buckets, "append")._1
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"${n0 + nNew} $buckets v${cur.version}")
+    VersionedStore.appendedSince(spark, table, stamp.drop(1).toLong, "positional index",
+      "incremental postings would double-count rewritten rows; rebuild").foreach {
+      case (version, newSegs) =>
+        retireStats(spark, path) // stamp-first crash-safety
+        val nNew =
+          if (newSegs.isEmpty) 0L
+          else writePositionalPostings(VersionedStore.readSegments(spark, table, newSegs),
+            idCol, textCol, path, buckets, "append")._1
+        graft.Fs.writeString(spark, s"$path/_stats", s"${n0 + nNew} $buckets v$version")
+    }
   }
 
   /** [[phraseSearch]] served from a [[buildPositionalIndex]] sidecar:
@@ -525,42 +513,29 @@ object Keyword {
     require(stamp.startsWith("v"),
       s"lexical index at $path carries no store stamp — incremental maintenance " +
         "needs the build-time snapshot version; rebuild with buildLexicalIndexForStore")
-    val v0 = stamp.drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return // already fresh
-    require(cur.version > v0,
-      s"index stamp v$v0 is ahead of $table's current version ${cur.version} — " +
-        "the index describes a store state that no longer exists; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild " +
-          "with buildLexicalIndexForStore"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append (a compaction/" +
-        "repair/re-index rewrote segments the index already covers) — incremental " +
-        "postings would double-count rewritten rows; rebuild with " +
-        "buildLexicalIndexForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    // stamp-first: a failure below leaves a loud no-stats index
-    retireStats(spark, path)
-    val (nNew, sumdlNew) =
-      if (newSegs.isEmpty) (0L, 0L)
-      else {
-        val docs = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-          .reduce(_.unionByName(_))
-        val (a, b, _) = writePostings(docs, idCol, textCol, path, buckets, "append")
-        (a, b)
-      }
-    // no moved-during-maintenance recheck needed, unlike the build: the
-    // rows came from EXPLICIT immutable segment directories, so this run
-    // is snapshot-isolated by construction — a commit landing meanwhile
-    // just means the stamped version is already behind, which the
-    // query-time staleness guard reports and the NEXT incremental run
-    // folds in (segments are never mutated; vacuum only reclaims
-    // segments retired from the live set, which pure-append never does)
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"${n0 + nNew} ${sumdl0 + sumdlNew} $buckets v${cur.version}")
+    VersionedStore.appendedSince(spark, table, stamp.drop(1).toLong, "lexical index",
+      "a compaction/repair/re-index rewrote segments the index already covers, " +
+        "and incremental postings would double-count rewritten rows; rebuild " +
+        "with buildLexicalIndexForStore").foreach { case (version, newSegs) =>
+      // stamp-first: a failure below leaves a loud no-stats index
+      retireStats(spark, path)
+      val (nNew, sumdlNew) =
+        if (newSegs.isEmpty) (0L, 0L)
+        else {
+          val (a, b, _) = writePostings(VersionedStore.readSegments(spark, table, newSegs),
+            idCol, textCol, path, buckets, "append")
+          (a, b)
+        }
+      // no moved-during-maintenance recheck needed, unlike the build: the
+      // rows came from EXPLICIT immutable segment directories, so this run
+      // is snapshot-isolated by construction — a commit landing meanwhile
+      // just means the stamped version is already behind, which the
+      // query-time staleness guard reports and the NEXT incremental run
+      // folds in (segments are never mutated; vacuum only reclaims
+      // segments retired from the live set, which pure-append never does)
+      graft.Fs.writeString(spark, s"$path/_stats",
+        s"${n0 + nNew} ${sumdl0 + sumdlNew} $buckets v$version")
+    }
   }
 
   /** The lexical-registration sidecar inside a [[VersionedStore]] table
@@ -583,53 +558,8 @@ object Keyword {
   def registerLexicalIndex(spark: org.apache.spark.sql.SparkSession,
                            table: String, idCol: String, textCol: String,
                            indexPath: String): Unit =
-    SidecarRegistry.register(spark, table, lexicalMarkerPath(table),
-      SidecarRegistry.Registration(indexPath, idCol, textCol)) {
-      buildLexicalIndexForStore(spark, table, idCol, textCol, indexPath)
-    }
-
-  private def registeredIndex(spark: org.apache.spark.sql.SparkSession,
-                              table: String): Option[(String, String, String)] =
-    SidecarRegistry.registered(spark, lexicalMarkerPath(table))
-      .map(r => (r.path, r.idCol, r.textCol))
-
-  /** Bring `table`'s registered lexical index (if any) up to the current
-    * store version: incremental fold when the history since the stamp is
-    * pure append, full rebuild otherwise (first append after a
-    * compaction/repair, or a half-built index left by a crashed
-    * maintenance) — self-healing, never silently stale. Called by the
-    * append seam after every committed append; a no-op for unregistered
-    * tables.
-    */
-  def maintainRegisteredIndex(spark: org.apache.spark.sql.SparkSession,
-                              table: String): Unit =
-    SidecarRegistry.maintain(spark, table, lexicalMarkerPath(table),
-      "lexical index") { reg =>
-      appendToLexicalIndexForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildLexicalIndexForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  /** O(1) maintenance of a registered index across a compaction: a
-    * compaction preserves rows, so an index fresh at the rewritten
-    * version still describes the table — only the stamp moved. Restamps
-    * ONLY when that is provable from the artifacts alone:
-    * the compaction committed (`files > 0`), it was the sole commit
-    * since `preVersion` (`post.version == preVersion + 1` — any
-    * interleaved append, seam or out-of-band, bumps past that), the
-    * index was fresh at `preVersion`, and no survivor segments rode
-    * along. Every other shape falls back to
-    * [[maintainRegisteredIndex]]'s rebuild path, proportionate next to
-    * an operation that already rewrote the whole table.
-    */
-  def maintainRegisteredIndexAfterCompact(spark: org.apache.spark.sql.SparkSession,
-                                          table: String, preVersion: Long,
-                                          post: VersionedStore.State,
-                                          files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table, lexicalMarkerPath(table),
-      "lexical index", preVersion, post, files) { reg =>
-      buildLexicalIndexForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.LexicalIndex,
+      SidecarRegistry.Registration(indexPath, idCol, textCol))
 
   /** [[bm25]] against a [[buildLexicalIndex]] sidecar instead of the
     * corpus: scores and ranking are IDENTICAL (same formula, same

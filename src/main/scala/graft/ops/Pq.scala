@@ -694,30 +694,23 @@ object Pq {
               rowsPerFile: Long = 1L << 20): PqModel = {
     val rows = VersionedStore.read(spark, table).getOrElse(
       throw new IllegalArgumentException(s"no store at $table"))
-    val ivfModel =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table)))
-        Some(Ivf.loadModel(spark, Ivf.modelPath(table)))
-      else None
-    val model = ivfModel match {
+    val layout = Ivf.layoutOf(spark, table)
+    val model = layout.model match {
       case Some(ivf) => fitResiduals(rows, idCol, embCol, ivf, m, ncent, iters)
       case None      => fit(rows, idCol, embCol, m, ncent, iters)
     }
     val preVersion = VersionedStore.currentState(spark, table).map(_.version).getOrElse(0L)
     val (post, nFiles) = VersionedStore.compact(spark, table, rowsPerFile,
-      reshape = df => ivfModel match {
+      reshape = df => layout.model match {
         case Some(ivf) => encodeResiduals(df, embCol, "cluster_id", ivf, model)
         case None      => encode(df, embCol, model)
       },
-      partitionBy = ivfModel.map(_ => Seq("cluster_id")).getOrElse(Nil),
-      marker = ivfModel.map(_.fingerprint))
+      partitionBy = layout.partitionBy, marker = layout.marker)
     require(nFiles > 0, s"pqStore lost a concurrent-compaction race at $table; retry")
     saveModel(spark, modelPath(table), model)
     graft.Fs.writeString(spark, markerPath(table),
-      if (ivfModel.isDefined) s"$embCol residual" else embCol)
-    Keyword.maintainRegisteredIndexAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSrpSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Sketch.maintainRegisteredHllSidecarAfterCompact(spark, table, preVersion, post, nFiles)
+      if (layout.model.isDefined) s"$embCol residual" else embCol)
+    SidecarRegistry.afterRewrite(spark, table, preVersion, post, nFiles)
     model
   }
 }

@@ -443,11 +443,8 @@ object Profile {
   def fingerprintSidecarMarkerPath(table: String): String =
     s"$table/_fingerprint_sidecar"
 
-  private def colsOf(reg: SidecarRegistry.Registration): Seq[String] =
-    reg.textCol.split(",").toSeq
-
-  /** Build the fingerprint sidecar for a [[VersionedStore]] table --
-    * the SIXTH [[SidecarRegistry]] client, and the simplest possible
+  /** Build the fingerprint sidecar for a [[VersionedStore]] table
+    * ([[SidecarRegistry.FingerprintSidecar]]), with the simplest possible
     * merge algebra: one fingerprint row PER SEGMENT
     * (`$path/parts`: segment, n_rows, xor_fingerprint,
     * sum_fingerprint), total = [[foldFingerprints]] over the parts
@@ -458,7 +455,8 @@ object Profile {
     * never a corpus rescan. `_stats`: `"v1 <cols,joined> v<version>"`
     * under the registry's stamp discipline; merges/deletes rewrite
     * segments a per-segment ledger cannot un-count, so non-pure-append
-    * histories refuse to the registry's loud rebuild.
+    * histories refuse the fold and the registry reconciles
+    * ([[reconcileFingerprintSidecar]]).
     */
   def buildFingerprintSidecarForStore(spark: SparkSession, table: String,
                                       cols: Seq[String],
@@ -535,26 +533,17 @@ object Profile {
     require(stats(1) == cols.mkString(","),
       s"fingerprint sidecar at $path ledgers columns ${stats(1)}, this " +
         s"maintenance asks ${cols.mkString(",")}; rebuild")
-    val v0 = stats(2).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"fingerprint sidecar stamp v$v0 is ahead of $table's version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable -- cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; a " +
-        "per-segment ledger cannot un-count rewritten rows -- rebuild " +
-        "with buildFingerprintSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty)
-      segmentParts(spark, table, newSegs, cols)
-        .write.mode("append").parquet(s"$path/parts")
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"v1 ${cols.mkString(",")} v${cur.version}")
+    VersionedStore.appendedSince(spark, table, stats(2).drop(1).toLong,
+      "fingerprint sidecar", "a per-segment ledger cannot un-count rewritten " +
+        "rows; rebuild with buildFingerprintSidecarForStore").foreach {
+      case (version, newSegs) =>
+        graft.Fs.delete(spark, s"$path/_stats")
+        if (newSegs.nonEmpty)
+          segmentParts(spark, table, newSegs, cols)
+            .write.mode("append").parquet(s"$path/parts")
+        graft.Fs.writeString(spark, s"$path/_stats",
+          s"v1 ${cols.mkString(",")} v$version")
+    }
   }
 
   /** Reconcile the ledger against the CURRENT segment set at
@@ -680,40 +669,6 @@ object Profile {
 
   def registerFingerprintSidecar(spark: SparkSession, table: String,
                                  cols: Seq[String], path: String): Unit =
-    SidecarRegistry.register(spark, table, fingerprintSidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, cols.head, cols.mkString(","))) {
-      buildFingerprintSidecarForStore(spark, table, cols, path)
-    }
-
-  def maintainRegisteredFingerprintSidecar(spark: SparkSession,
-                                           table: String): Unit =
-    SidecarRegistry.maintain(spark, table, fingerprintSidecarMarkerPath(table),
-      "fingerprint sidecar") { reg =>
-      // appends take the manifest-prefix fast path; a rewritten
-      // history (merge/delete) reconciles at O(changed segments)
-      // instead of refusing through to the full-corpus rebuild
-      try appendToFingerprintSidecar(spark, table, colsOf(reg), reg.path)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("not pure-append") =>
-          reconcileFingerprintSidecar(spark, table, colsOf(reg), reg.path)
-      }
-    } { reg =>
-      buildFingerprintSidecarForStore(spark, table, colsOf(reg), reg.path)
-    }
-
-  def maintainRegisteredFingerprintSidecarAfterCompact(
-      spark: SparkSession, table: String, preVersion: Long,
-      post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      fingerprintSidecarMarkerPath(table), "fingerprint sidecar",
-      preVersion, post, files) { reg =>
-      // a non-provably-exact compaction reconciles at O(rewritten
-      // segments); only damaged stats fall through to the full build
-      try reconcileFingerprintSidecar(spark, table, colsOf(reg), reg.path)
-      catch {
-        case _: IllegalArgumentException =>
-          buildFingerprintSidecarForStore(spark, table, colsOf(reg), reg.path)
-      }
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.FingerprintSidecar,
+      SidecarRegistry.Registration(path, cols.head, cols.mkString(",")))
 }

@@ -131,24 +131,17 @@ object Quantize {
     */
   def quantizeStore(spark: org.apache.spark.sql.SparkSession, table: String,
                     embCol: String, rowsPerFile: Long = 1L << 20): Unit = {
-    val fp =
-      if (graft.Fs.exists(spark, Ivf.modelPath(table)))
-        Some(Ivf.loadModel(spark, Ivf.modelPath(table)).fingerprint)
-      else None
+    val layout = Ivf.layoutOf(spark, table)
     val preVersion = VersionedStore.currentState(spark, table).map(_.version).getOrElse(0L)
     val (post, nFiles) = VersionedStore.compact(spark, table, rowsPerFile,
       reshape = withQuantized(_, embCol),
-      partitionBy = fp.map(_ => Seq("cluster_id")).getOrElse(Nil),
-      marker = fp)
+      partitionBy = layout.partitionBy, marker = layout.marker)
     require(nFiles > 0,
       s"quantizeStore lost a concurrent-compaction race at $table; retry")
     graft.Fs.writeString(spark, markerPath(table), embCol)
     // the rewrite adds code columns but preserves rows — restamp (or
-    // rebuild) a registered lexical index so BM25 serving survives
-    Keyword.maintainRegisteredIndexAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Dedup.maintainRegisteredSrpSidecarAfterCompact(spark, table, preVersion, post, nFiles)
-    Sketch.maintainRegisteredHllSidecarAfterCompact(spark, table, preVersion, post, nFiles)
+    // rebuild) registered sidecars so their serving survives
+    SidecarRegistry.afterRewrite(spark, table, preVersion, post, nFiles)
   }
 
   /** Batch SQ8 serving: every query's top-k in ONE codes-only corpus

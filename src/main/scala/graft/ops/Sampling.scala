@@ -744,15 +744,16 @@ object Sampling {
         col("__wmax_seg").as("wmax_seg"))
   }
 
-  /** Build the weighted-sample sidecar for a [[VersionedStore]] table —
-    * the SEVENTH [[SidecarRegistry]] client: one candidate ledger row
+  /** Build the weighted-sample sidecar for a [[VersionedStore]] table
+    * ([[SidecarRegistry.SampleSidecar]]): one candidate ledger row
     * set per segment (per segment AND stratum when `strataCol` is
     * given — the "fresh per-language sample of a growing corpus"
     * form), `_stats` =
     * `"v1 <keyCol>,<weightCol>,<k>,<seed>,<strataCol|-> v<version>"`
     * under the registry's stamp discipline. Merges/deletes rewrite
     * segments a per-segment candidate ledger cannot un-sample, so
-    * non-pure-append histories refuse to the registry's loud rebuild.
+    * non-pure-append histories refuse the fold and the registry
+    * reconciles ([[reconcileSampleSidecar]]).
     */
   def buildSampleSidecarForStore(spark: SparkSession, table: String,
                                  keyCol: String, weightCol: String,
@@ -801,28 +802,18 @@ object Sampling {
   def appendToSampleSidecar(spark: SparkSession, table: String,
                             path: String): Unit = {
     val c = parseSampleStats(spark, path)
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == c.version) return
-    require(cur.version > c.version,
-      s"sample sidecar stamp v${c.version} is ahead of $table's version " +
-        s"${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, c.version).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v${c.version} of $table is unreadable -- cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v${c.version} -> v${cur.version} is not pure-append; a " +
-        "per-segment candidate ledger cannot un-sample rewritten rows -- " +
-        "rebuild with buildSampleSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty)
-      segmentCandidates(spark, table, newSegs, c.keyCol, c.weightCol, c.k,
-          c.seed, c.strataCol)
-        .write.mode("append").parquet(s"$path/parts")
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"v1 ${c.keyCol},${c.weightCol},${c.k},${c.seed}," +
-        s"${c.strataCol.getOrElse("-")} v${cur.version}")
+    VersionedStore.appendedSince(spark, table, c.version, "sample sidecar",
+      "a per-segment candidate ledger cannot un-sample rewritten rows; rebuild " +
+        "with buildSampleSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty)
+        segmentCandidates(spark, table, newSegs, c.keyCol, c.weightCol, c.k,
+            c.seed, c.strataCol)
+          .write.mode("append").parquet(s"$path/parts")
+      graft.Fs.writeString(spark, s"$path/_stats",
+        s"v1 ${c.keyCol},${c.weightCol},${c.k},${c.seed}," +
+          s"${c.strataCol.getOrElse("-")} v$version")
+    }
   }
 
   /** The maintained sample: one (k × segments)-row parts read, the
@@ -952,51 +943,19 @@ object Sampling {
                             keyCol: String, weightCol: String, k: Int,
                             seed: String, path: String,
                             strataCol: Option[String] = None): Unit =
-    SidecarRegistry.register(spark, table, sampleSidecarMarkerPath(table),
+    SidecarRegistry.register(spark, table, SidecarRegistry.SampleSidecar,
       SidecarRegistry.Registration(path, keyCol,
-        s"$weightCol,$k,$seed,${strataCol.getOrElse("-")}")) {
-      buildSampleSidecarForStore(spark, table, keyCol, weightCol, k, seed,
-        path, strataCol)
-    }
+        s"$weightCol,$k,$seed,${strataCol.getOrElse("-")}"))
 
-  private def sampleCfg(reg: SidecarRegistry.Registration): (String, String, Int, String, Option[String]) = {
+  /** Rebuild a registered sample sidecar from the configuration its
+    * marker carries (`<weightCol>,<k>,<seed>,<strataCol|->`).
+    */
+  private[ops] def rebuildSampleSidecar(spark: SparkSession, table: String,
+                                        reg: SidecarRegistry.Registration): Unit = {
     val cfg = reg.textCol.split(",")
-    (reg.idCol, cfg(0), cfg(1).toInt, cfg(2),
-      Some(cfg(3)).filter(_ != "-"))
+    buildSampleSidecarForStore(spark, table, reg.idCol, cfg(0), cfg(1).toInt,
+      cfg(2), reg.path, Some(cfg(3)).filter(_ != "-"))
   }
-
-  def maintainRegisteredSampleSidecar(spark: SparkSession,
-                                      table: String): Unit =
-    SidecarRegistry.maintain(spark, table, sampleSidecarMarkerPath(table),
-      "sample sidecar") { reg =>
-      // appends take the manifest-prefix fast path; rewritten
-      // histories reconcile at O(changed segments), not O(corpus)
-      try appendToSampleSidecar(spark, table, reg.path)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("not pure-append") =>
-          reconcileSampleSidecar(spark, table, reg.path)
-      }
-    } { reg =>
-      val (keyCol, weightCol, k, seed, strataCol) = sampleCfg(reg)
-      buildSampleSidecarForStore(spark, table, keyCol, weightCol, k, seed,
-        reg.path, strataCol)
-    }
-
-  def maintainRegisteredSampleSidecarAfterCompact(
-      spark: SparkSession, table: String, preVersion: Long,
-      post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      sampleSidecarMarkerPath(table), "sample sidecar",
-      preVersion, post, files) { reg =>
-      try reconcileSampleSidecar(spark, table, reg.path)
-      catch {
-        case _: IllegalArgumentException =>
-          val (keyCol, weightCol, k, seed, strataCol) = sampleCfg(reg)
-          buildSampleSidecarForStore(spark, table, keyCol, weightCol, k, seed,
-            reg.path, strataCol)
-      }
-    }
 
   /** [[weightedSamplePerStratum]]'s exact-selection twin (raw-score
     * order, per-stratum max published scores) — the order the

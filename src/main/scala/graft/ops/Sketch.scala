@@ -88,9 +88,8 @@ object Sketch {
 
   def hllSidecarMarkerPath(table: String): String = s"$table/_hll_sidecar"
 
-  /** Build the HLL register sidecar for a [[VersionedStore]] table — the
-    * THIRD [[SidecarRegistry]] client (after the lexical index and the
-    * MinHash/SRP near-dup sidecars), and the one that shows why the
+  /** Build the HLL register sidecar for a [[VersionedStore]] table
+    * ([[SidecarRegistry.HllSidecar]]), the kind that shows why the
     * registry's merge algebra matters: registers max-merge, so the
     * append seam folds a batch's registers in at O(batch) and the
     * corpus-wide vocabulary cardinality is always one 256-row read away
@@ -131,62 +130,32 @@ object Sketch {
       s"HLL sidecar at $path has a damaged/unstamped _stats; rebuild with buildHllSidecarForStore")
     require(stats(0).toInt == HllP,
       s"HLL sidecar at $path was built at p=${stats(0)}, engine expects p=$HllP; rebuild")
-    val v0 = stats(1).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"HLL sidecar stamp v$v0 is ahead of $table's version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; max-merged " +
-        "registers cannot subtract rewritten rows — rebuild with buildHllSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty) {
-      // the existing frame is ≤ m rows — collect it so the overwrite
-      // never reads the path it writes
-      val spark2 = spark
-      import spark2.implicits._
-      val existing = spark.read.parquet(s"$path/registers")
-        .select(col("register").cast("int"), col("rho").cast("int"))
-        .as[(Int, Int)].collect().toSeq.toDF("register", "rho")
-      val docs = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
-      hllRegisters(tokenRows(docs, textCol), "t")
-        .unionByName(existing)
-        .groupBy(col("register")).agg(max(col("rho")).as("rho"))
-        .write.mode("overwrite").parquet(s"$path/registers")
+    VersionedStore.appendedSince(spark, table, stats(1).drop(1).toLong, "HLL sidecar",
+      "max-merged registers cannot subtract rewritten rows; rebuild with " +
+        "buildHllSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty) {
+        // the existing frame is ≤ m rows — collect it so the overwrite
+        // never reads the path it writes
+        val spark2 = spark
+        import spark2.implicits._
+        val existing = spark.read.parquet(s"$path/registers")
+          .select(col("register").cast("int"), col("rho").cast("int"))
+          .as[(Int, Int)].collect().toSeq.toDF("register", "rho")
+        hllRegisters(tokenRows(VersionedStore.readSegments(spark, table, newSegs), textCol), "t")
+          .unionByName(existing)
+          .groupBy(col("register")).agg(max(col("rho")).as("rho"))
+          .write.mode("overwrite").parquet(s"$path/registers")
+      }
+      graft.Fs.writeString(spark, s"$path/_stats", s"$HllP v$version")
     }
-    graft.Fs.writeString(spark, s"$path/_stats", s"$HllP v${cur.version}")
   }
 
   def registerHllSidecar(spark: org.apache.spark.sql.SparkSession,
                          table: String, idCol: String, textCol: String,
                          path: String): Unit =
-    SidecarRegistry.register(spark, table, hllSidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, textCol)) {
-      buildHllSidecarForStore(spark, table, idCol, textCol, path)
-    }
-
-  def maintainRegisteredHllSidecar(spark: org.apache.spark.sql.SparkSession,
-                                   table: String): Unit =
-    SidecarRegistry.maintain(spark, table, hllSidecarMarkerPath(table),
-      "hll sidecar") { reg =>
-      appendToHllSidecar(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildHllSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  def maintainRegisteredHllSidecarAfterCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      preVersion: Long, post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      hllSidecarMarkerPath(table), "hll sidecar", preVersion, post, files) { reg =>
-      buildHllSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.HllSidecar,
+      SidecarRegistry.Registration(path, idCol, textCol))
 
   /** The corpus vocabulary-cardinality estimate from the maintained
     * sidecar — refuses a stale sidecar loudly (stamp ≠ store version),
@@ -233,13 +202,14 @@ object Sketch {
       .agg(count(lit(1)).as("n"))
 
   /** Build the length-histogram sidecar for a [[VersionedStore]]
-    * table — the EIGHTH [[SidecarRegistry]] client, with the simplest
+    * table ([[SidecarRegistry.HistogramSidecar]]), with the simplest
     * exact merge algebra of them all: per-segment bucket counts ADD,
     * so the folded corpus histogram (and every quantile read off it)
     * is exact, the append seam folds a batch in at O(batch), and the
     * ledger grows ≤ 64 rows per immutable segment. `_stats`:
     * `"v1 <valueCol> v<version>"`; merges/deletes rewrite segments a
-    * count ledger cannot un-count — refuse to the registry's rebuild.
+    * count ledger cannot un-count — the fold refuses and the registry
+    * reconciles ([[reconcileHistogramSidecar]]).
     */
   def buildHistogramSidecarForStore(spark: org.apache.spark.sql.SparkSession,
                                     table: String, valueCol: String,
@@ -274,26 +244,15 @@ object Sketch {
       s"histogram sidecar at $path has a damaged/unstamped _stats; rebuild " +
         "with buildHistogramSidecarForStore")
     val valueCol = stats(1)
-    val v0 = stats(2).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"histogram sidecar stamp v$v0 is ahead of $table's version " +
-        s"${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; a " +
-        "count ledger cannot un-count rewritten rows — rebuild with " +
-        "buildHistogramSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty)
-      segmentHistograms(spark, table, newSegs, valueCol)
-        .write.mode("append").parquet(s"$path/parts")
-    graft.Fs.writeString(spark, s"$path/_stats", s"v1 $valueCol v${cur.version}")
+    VersionedStore.appendedSince(spark, table, stats(2).drop(1).toLong,
+      "histogram sidecar", "a count ledger cannot un-count rewritten rows; " +
+        "rebuild with buildHistogramSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty)
+        segmentHistograms(spark, table, newSegs, valueCol)
+          .write.mode("append").parquet(s"$path/parts")
+      graft.Fs.writeString(spark, s"$path/_stats", s"v1 $valueCol v$version")
+    }
   }
 
   /** The maintained corpus histogram: fold the ≤ 64-rows-per-segment
@@ -408,39 +367,8 @@ object Sketch {
   def registerHistogramSidecar(spark: org.apache.spark.sql.SparkSession,
                                table: String, idCol: String, valueCol: String,
                                path: String): Unit =
-    SidecarRegistry.register(spark, table, histogramSidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, valueCol)) {
-      buildHistogramSidecarForStore(spark, table, valueCol, path)
-    }
-
-  def maintainRegisteredHistogramSidecar(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    SidecarRegistry.maintain(spark, table, histogramSidecarMarkerPath(table),
-      "histogram sidecar") { reg =>
-      // appends take the manifest-prefix fast path; rewritten
-      // histories reconcile at O(changed segments), not O(corpus)
-      try appendToHistogramSidecar(spark, table, reg.path)
-      catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null && e.getMessage.contains("not pure-append") =>
-          reconcileHistogramSidecar(spark, table, reg.path)
-      }
-    } { reg =>
-      buildHistogramSidecarForStore(spark, table, reg.textCol, reg.path)
-    }
-
-  def maintainRegisteredHistogramSidecarAfterCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      preVersion: Long, post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      histogramSidecarMarkerPath(table), "histogram sidecar",
-      preVersion, post, files) { reg =>
-      try reconcileHistogramSidecar(spark, table, reg.path)
-      catch {
-        case _: IllegalArgumentException =>
-          buildHistogramSidecarForStore(spark, table, reg.textCol, reg.path)
-      }
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.HistogramSidecar,
+      SidecarRegistry.Registration(path, idCol, valueCol))
 
   /** Johnson-Lindenstrauss random projection of an `ARRAY<FLOAT>`
     * embedding column to `outDim` dimensions via the md5-derived
@@ -637,8 +565,8 @@ object Sketch {
 
   def bloomSidecarMarkerPath(table: String): String = s"$table/_bloom_sidecar"
 
-  /** Build the Bloom seen-set sidecar for a [[VersionedStore]] table —
-    * the FOURTH [[SidecarRegistry]] client, with the same merge
+  /** Build the Bloom seen-set sidecar for a [[VersionedStore]] table
+    * ([[SidecarRegistry.BloomSidecar]]), with the same merge
     * algebra as the HLL registers: words `bit_or`-merge, so the append
     * seam folds a batch in at O(batch) and "was this URL ever
     * ingested" is always one ≤ m/64-row read away. Deletes can't
@@ -678,63 +606,34 @@ object Sketch {
     require(stats(0) == s"$BloomSidecarM:$BloomSidecarK",
       s"bloom sidecar at $path was built at geometry ${stats(0)}, engine expects " +
         s"$BloomSidecarM:$BloomSidecarK; rebuild")
-    val v0 = stats(1).drop(1).toLong
-    val cur = VersionedStore.currentState(spark, table).getOrElse(
-      throw new IllegalStateException(s"$table has no committed state"))
-    if (cur.version == v0) return
-    require(cur.version > v0,
-      s"bloom sidecar stamp v$v0 is ahead of $table's version ${cur.version}; rebuild")
-    val old = VersionedStore.stateAt(spark, table, v0).getOrElse(
-      throw new IllegalStateException(
-        s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
-    require(old.segments.forall(cur.segments.contains),
-      s"$table's history v$v0 -> v${cur.version} is not pure-append; bit_or-merged " +
-        "words cannot subtract rewritten rows — rebuild with buildBloomSidecarForStore")
-    val newSegs = cur.segments.filterNot(old.segments.toSet)
-    graft.Fs.delete(spark, s"$path/_stats")
-    if (newSegs.nonEmpty) {
-      // the existing frame is ≤ m/64 rows — collect it so the
-      // overwrite never reads the path it writes
-      val spark2 = spark
-      import spark2.implicits._
-      val existing = spark.read.parquet(s"$path/words")
-        .select(col("word_idx").cast("long"), col("word").cast("long"))
-        .as[(Long, Long)].collect().toSeq.toDF("word_idx", "word")
-      val rows = newSegs.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
-      bloomBuild(rows, valueCol, BloomSidecarM, BloomSidecarK)
-        .unionByName(existing)
-        .groupBy(col("word_idx")).agg(expr("bit_or(word)").as("word"))
-        .write.mode("overwrite").parquet(s"$path/words")
+    VersionedStore.appendedSince(spark, table, stats(1).drop(1).toLong, "bloom sidecar",
+      "bit_or-merged words cannot subtract rewritten rows; rebuild with " +
+        "buildBloomSidecarForStore").foreach { case (version, newSegs) =>
+      graft.Fs.delete(spark, s"$path/_stats")
+      if (newSegs.nonEmpty) {
+        // the existing frame is ≤ m/64 rows — collect it so the
+        // overwrite never reads the path it writes
+        val spark2 = spark
+        import spark2.implicits._
+        val existing = spark.read.parquet(s"$path/words")
+          .select(col("word_idx").cast("long"), col("word").cast("long"))
+          .as[(Long, Long)].collect().toSeq.toDF("word_idx", "word")
+        bloomBuild(VersionedStore.readSegments(spark, table, newSegs), valueCol,
+            BloomSidecarM, BloomSidecarK)
+          .unionByName(existing)
+          .groupBy(col("word_idx")).agg(expr("bit_or(word)").as("word"))
+          .write.mode("overwrite").parquet(s"$path/words")
+      }
+      graft.Fs.writeString(spark, s"$path/_stats",
+        s"$BloomSidecarM:$BloomSidecarK v$version")
     }
-    graft.Fs.writeString(spark, s"$path/_stats",
-      s"$BloomSidecarM:$BloomSidecarK v${cur.version}")
   }
 
   def registerBloomSidecar(spark: org.apache.spark.sql.SparkSession,
                            table: String, idCol: String, valueCol: String,
                            path: String): Unit =
-    SidecarRegistry.register(spark, table, bloomSidecarMarkerPath(table),
-      SidecarRegistry.Registration(path, idCol, valueCol)) {
-      buildBloomSidecarForStore(spark, table, idCol, valueCol, path)
-    }
-
-  def maintainRegisteredBloomSidecar(spark: org.apache.spark.sql.SparkSession,
-                                     table: String): Unit =
-    SidecarRegistry.maintain(spark, table, bloomSidecarMarkerPath(table),
-      "bloom sidecar") { reg =>
-      appendToBloomSidecar(spark, table, reg.idCol, reg.textCol, reg.path)
-    } { reg =>
-      buildBloomSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
-
-  def maintainRegisteredBloomSidecarAfterCompact(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      preVersion: Long, post: VersionedStore.State, files: Int): Unit =
-    SidecarRegistry.maintainAfterCompact(spark, table,
-      bloomSidecarMarkerPath(table), "bloom sidecar", preVersion, post, files) { reg =>
-      buildBloomSidecarForStore(spark, table, reg.idCol, reg.textCol, reg.path)
-    }
+    SidecarRegistry.register(spark, table, SidecarRegistry.BloomSidecar,
+      SidecarRegistry.Registration(path, idCol, valueCol))
 
   /** Probe candidates against the maintained sidecar — refuses a stale
     * sidecar loudly (stamp ≠ store version): a stale seen-set silently

@@ -62,7 +62,7 @@ object VectorServe {
     * be a surprise. The ingest seams maintain the sidecar
     * automatically, so a registered-but-stale graph means out-of-band
     * mutation — the freshness check refuses loudly (run
-    * maintainRegisteredHnswSidecar) rather than falling back.
+    * SidecarRegistry.afterAppend) rather than falling back.
     */
   def route(spark: SparkSession, table: String): Route = {
     val ivf = graft.Fs.exists(spark, Ivf.modelPath(table))
@@ -95,7 +95,7 @@ object VectorServe {
 
   private def hnswRegistration(spark: SparkSession,
                                table: String): Option[SidecarRegistry.Registration] =
-    SidecarRegistry.registered(spark, Hnsw.sidecarMarkerPath(table))
+    SidecarRegistry.registered(spark, table, SidecarRegistry.HnswSidecar)
 
   /** A resolved serving context: route, sidecar models, tuned probe
     * width and the store frame, loaded once by [[open]]. Every serve

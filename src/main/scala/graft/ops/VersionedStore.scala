@@ -91,7 +91,7 @@ object VersionedStore {
     * cluster predicate prune away every row of the flat segments.
     */
   private def readState(spark: SparkSession, table: String, st: State): DataFrame =
-    try st.segments.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s")).reduce(_.unionByName(_))
+    try readSegments(spark, table, st.segments)
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
         // diagnose before blaming: only claim a mixed state (and point at
@@ -336,9 +336,9 @@ object VersionedStore {
   /** The committed manifest of `version` alone — segment names, no data
     * read, no liveness check (segments may have been vacuumed since).
     * The segment-set diff surface for incremental maintainers
-    * ([[graft.ops.Keyword.appendToLexicalIndexForStore]] diffs this
-    * against [[currentState]] to find exactly the rows appended since an
-    * index was stamped). None when `version` was never committed or its
+    * ([[appendedSince]] diffs this against [[currentState]] to find
+    * exactly the rows appended since a sidecar was stamped). None when
+    * `version` was never committed or its
     * manifest is unreadable.
     */
   def stateAt(spark: SparkSession, table: String, version: Long): Option[State] =
@@ -346,6 +346,51 @@ object VersionedStore {
     // per this method's contract, not a crash
     scala.util.Try(
       parse(graft.Fs.readString(spark, manifestPath(table, version)))).toOption
+
+  /** A sidecar fold's refusal of a history that retired segments the
+    * sidecar's stamp covers (a compaction, merge, delete or re-index
+    * rewrote them): folding the live segments in again would count
+    * rewritten rows twice. [[SidecarRegistry]] answers it with the
+    * kind's reconcile, or a rebuild.
+    */
+  final class NotPureAppend(message: String) extends IllegalArgumentException(message)
+
+  /** The segments `table` committed since a sidecar was stamped at
+    * version `v0` — the diff every incremental sidecar fold starts
+    * from. None when the stamp is current; otherwise the current
+    * version and the segments added since `v0`, in manifest order
+    * (possibly none). Refuses when the table has no committed state or
+    * the `v0` manifest is unreadable (IllegalStateException), when the
+    * stamp is ahead of the table (IllegalArgumentException), and when
+    * the history since `v0` is not pure append ([[NotPureAppend]], its
+    * message ending in `remedy`). `sidecar` names the stamped structure
+    * in the messages.
+    */
+  def appendedSince(spark: SparkSession, table: String, v0: Long,
+                    sidecar: String, remedy: String): Option[(Long, Seq[String])] = {
+    val cur = currentState(spark, table).getOrElse(
+      throw new IllegalStateException(s"$table has no committed state"))
+    if (cur.version == v0) None
+    else {
+      require(cur.version > v0,
+        s"$sidecar stamp v$v0 is ahead of $table's current version ${cur.version} — " +
+          "it describes a store state that no longer exists; rebuild")
+      val old = stateAt(spark, table, v0).getOrElse(
+        throw new IllegalStateException(
+          s"manifest v$v0 of $table is unreadable — cannot diff segments; rebuild"))
+      if (!old.segments.forall(cur.segments.contains))
+        throw new NotPureAppend(
+          s"$table's history v$v0 -> v${cur.version} is not pure-append — $remedy")
+      Some((cur.version, cur.segments.filterNot(old.segments.toSet)))
+    }
+  }
+
+  /** The given immutable segments of `table` as one frame: a strict
+    * union of per-segment scans.
+    */
+  def readSegments(spark: SparkSession, table: String, segments: Seq[String]): DataFrame =
+    segments.map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
+      .reduce(_.unionByName(_))
 
   /** Data files sitting loose in the table root — the pre-manifest flat
     * layout (segment data lives under seg-* directories, never here).
@@ -797,9 +842,7 @@ object VersionedStore {
       }
       // re-read ONLY the affected segments (the detection scan read
       // everything once; the rewrite must not)
-      val keep = affected
-        .map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
+      val keep = readSegments(spark, table, affected)
         .join(updKeys, Seq(keyCol), "left_anti")
       val newData = keep.unionByName(checkedUpdates, allowMissingColumns = false)
       try {
@@ -903,9 +946,7 @@ object VersionedStore {
       val affected = segmentsContaining(spark, table, st, keySet, keyCol)
         .collect().map(_.getString(0)).toSeq.sorted
       if (affected.isEmpty) return (st, 0)
-      val keep = affected
-        .map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
+      val keep = readSegments(spark, table, affected)
         .join(keySet, Seq(keyCol), "left_anti")
       try {
         return (commitRewrite(spark, table, affected, keep,
@@ -945,9 +986,7 @@ object VersionedStore {
         .select(col("__seg")).distinct()
         .collect().map(_.getString(0)).toSeq.sorted
       if (affected.isEmpty) return (st, 0)
-      val keep = affected
-        .map(s => graft.ParquetIO.readImmutable(spark, s"$table/$s"))
-        .reduce(_.unionByName(_))
+      val keep = readSegments(spark, table, affected)
         .filter(not(coalesce(predicate, lit(false))))
       try {
         return (commitRewrite(spark, table, affected, keep,

@@ -259,7 +259,7 @@ class CurationSpec extends AnyFunSuite {
       Profile.storeFingerprint(spark, table, fpath)
     }
     assert(err.getMessage.contains("stale"))
-    Profile.maintainRegisteredFingerprintSidecar(spark, table)
+    graft.ops.SidecarRegistry.afterAppend(spark, table)
     assert(row(Profile.storeFingerprint(spark, table, fpath)) ==
       row(Profile.datasetFingerprint(
         all.unionAll(Seq((999L, "x")).toDF("k", "s")), cols)))
@@ -335,7 +335,7 @@ class CurationSpec extends AnyFunSuite {
       Sampling.maintainedWeightedSample(spark, table, spath)
     }
     assert(err.getMessage.contains("stale"))
-    Sampling.maintainRegisteredSampleSidecar(spark, table)
+    graft.ops.SidecarRegistry.afterAppend(spark, table)
     val healed = sample(Sampling.maintainedWeightedSample(spark, table, spath)
       .select($"key".cast("long"), $"w".cast("long"), $"sample_score"))
     assert(healed == sample(Sampling.weightedSampleExact(

@@ -1125,7 +1125,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val post = VersionedStore.currentState(spark, store).get
     // a compaction that lost its race commits nothing (files=0, version
     // unchanged): the fresh index needs neither restamp nor rebuild
-    Keyword.maintainRegisteredIndexAfterCompact(spark, store,
+    graft.ops.SidecarRegistry.afterRewrite(spark, store,
       preVersion = post.version, post = post, files = 0)
     assert(graft.Fs.readString(spark, s"$idx/_stats") == statsBefore,
       "no-op compaction must leave the index untouched")

@@ -310,7 +310,7 @@ class SketchSpec extends AnyFunSuite {
       Sketch.maintainedHistogram(spark, table, hpath)
     }
     assert(err.getMessage.contains("stale"))
-    Sketch.maintainRegisteredHistogramSidecar(spark, table)
+    graft.ops.SidecarRegistry.afterAppend(spark, table)
     assert(hist(Sketch.maintainedHistogram(spark, table, hpath)) ==
       hist(Sketch.log2Histogram(
         all.unionAll(Seq((999L, 7L)).toDF("k", "len")), "len")))

@@ -251,7 +251,7 @@ class VectorServeSpec extends AnyFunSuite {
     assert(sErr.getMessage.contains("stale"))
     // the registry's maintenance heals it (the v1→now history replaced
     // segments, so it rebuilds) and the route returns
-    graft.ops.Hnsw.maintainRegisteredHnswSidecar(spark, table)
+    graft.ops.SidecarRegistry.afterAppend(spark, table)
     assert(VectorServe.route(spark, table) == Route.Hnsw)
     assert(VectorServe.open(spark, table)
       .search("id", "embedding", qv, 5, nProbe = 1 << 20) // fresh handle, full beam
